@@ -1,3 +1,4 @@
+import hashlib
 import shutil
 import sys
 from pathlib import Path
@@ -8,6 +9,24 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 FIXTURE_PARQUET = REPO / "data" / "fixture_events.parquet"
+
+
+def _data_hashes() -> dict[str, str]:
+    return {p.name: hashlib.sha256(p.read_bytes()).hexdigest()
+            for p in sorted((REPO / "data").glob("*.parquet"))}
+
+
+@pytest.fixture(scope="session", autouse=True)
+def data_dir_is_read_only():
+    """The committed tables under data/ are inputs, never outputs: fail
+    the session if any test created, removed or rewrote one."""
+    before = _data_hashes()
+    yield
+    after = _data_hashes()
+    changed = sorted(k for k in before.keys() | after.keys()
+                     if before.get(k) != after.get(k))
+    if changed:
+        pytest.fail(f"tests modified data/: {changed}", pytrace=False)
 
 
 @pytest.fixture(scope="session")
@@ -30,22 +49,20 @@ def spark():
 
 @pytest.fixture(scope="session")
 def fixture_parquet():
-    """Regenerate the input table from the reference .bin files so tests
-    never depend on a stale committed artifact."""
+    """The committed 166-event input table (read-only; its provenance
+    against the reference .bin files is test_fixture_sync's job)."""
+    return str(FIXTURE_PARQUET)
+
+
+@pytest.fixture(scope="session")
+def fixture_bins(tmp_path_factory):
+    """Directory of per-case `<case>/log.bin` raw binlog files rebuilt
+    from the committed table (magic + the case's events in order)."""
     from tools import fixture_gen
 
-    import pyarrow.parquet as pq
-
-    rows = fixture_gen.load_fixture_events()
-    assert len(rows) == 166
-    tbl = fixture_gen.rows_to_table(rows)
-    # content-compare, don't just check existence: a committed artifact
-    # that drifted from the reference .bin derivation must be rewritten,
-    # or partial test runs silently go green against stale inputs
-    if (not FIXTURE_PARQUET.exists()
-            or not pq.read_table(FIXTURE_PARQUET).equals(tbl)):
-        pq.write_table(tbl, FIXTURE_PARQUET)
-    return str(FIXTURE_PARQUET)
+    d = tmp_path_factory.mktemp("events")
+    fixture_gen.write_fixture_bins(d)
+    return d
 
 
 @pytest.fixture(scope="session")

@@ -1,19 +1,17 @@
-"""Distributed raw-binlog file source: reading the reference's own
-`tests/events/*/log.bin` files through the binaryFile + mapInPandas
-splitter must reproduce the committed fixture table exactly (same events,
-same per-sink counts), and malformed files must quarantine, not fail."""
-
-from pathlib import Path
+"""Distributed raw-binlog file source: reading per-case
+`<case>/log.bin` files (rebuilt from the committed fixture table in the
+reference's `tests/events` layout) through the binaryFile + mapInPandas
+splitter must reproduce the fixture table exactly (same events, same
+per-sink counts), and malformed files must quarantine, not fail."""
 
 from pyspark.sql import functions as F
 
 from binlogpipe import binsource, parse
 
-REF_EVENTS = Path("/root/reference/tests/events")
 
-
-def test_binlog_dir_matches_fixture_table(spark, fixture_parquet):
-    src = binsource.read_binlog_dir(spark, f"{REF_EVENTS}/*")
+def test_binlog_dir_matches_fixture_table(spark, fixture_parquet,
+                                          fixture_bins):
+    src = binsource.read_binlog_dir(spark, f"{fixture_bins}/*")
     fixture = spark.read.parquet(fixture_parquet)
     got = {(r.doc_id, r.n_tok): list(r.tokens)
            for r in src.collect()}
@@ -57,7 +55,7 @@ def test_binlog_malformed_files_quarantine(spark, tmp_path):
     assert sinks["trunc/_corrupt"] == "QUARANTINE"
 
 
-def test_binlog_streaming_source(spark, tmp_path):
+def test_binlog_streaming_source(spark, tmp_path, fixture_bins):
     """Raw .bin files through the STREAMING source (binaryFile readStream +
     the shared splitter): two catch-up drains — the second processes only
     the file added in between, and rows events decode against the TableMap
@@ -68,12 +66,12 @@ def test_binlog_streaming_source(spark, tmp_path):
 
     ind = tmp_path / "in"
     ind.mkdir()
-    shutil.copy(REF_EVENTS / "02_query" / "log.bin", ind / "a.bin")
+    shutil.copy(fixture_bins / "02_query" / "log.bin", ind / "a.bin")
     out, ck = tmp_path / "out", tmp_path / "ck"
     streaming.run_full_available_now(
         spark, str(ind), str(out), str(ck), input_format="binlog")
     n0 = spark.read.parquet(str(out / "routed")).count()
-    shutil.copy(REF_EVENTS / "30_write_rows_v2" / "log.bin", ind / "b.bin")
+    shutil.copy(fixture_bins / "30_write_rows_v2" / "log.bin", ind / "b.bin")
     streaming.run_full_available_now(
         spark, str(ind), str(out), str(ck), input_format="binlog")
     routed = spark.read.option("basePath", str(out / "routed")) \
@@ -113,7 +111,8 @@ def test_compact_refuses_streaming_sink_layout(spark, tmp_path):
         job.compact_sink(spark, str(tmp_path), "QUERY")
 
 
-def test_same_named_files_in_different_dirs_stay_distinct(spark, tmp_path):
+def test_same_named_files_in_different_dirs_stay_distinct(spark, tmp_path,
+                                                         fixture_bins):
     """Multi-host layout: host1/binlog.000042.bin and host2/binlog.000042.bin
     must keep distinct (source, doc_id) — the per-source transaction state
     machine and doc_id-keyed consumers depend on it."""
@@ -122,7 +121,7 @@ def test_same_named_files_in_different_dirs_stay_distinct(spark, tmp_path):
     for host in ("host1", "host2"):
         d = tmp_path / host
         d.mkdir()
-        shutil.copy(REF_EVENTS / "16_xid" / "log.bin",
+        shutil.copy(fixture_bins / "16_xid" / "log.bin",
                     d / "binlog.000042.bin")
     rows = binsource.read_binlog_dir(spark, str(tmp_path) + "/*").collect()
     sources = {r.source for r in rows}

@@ -400,7 +400,7 @@ def test_live_follow_processing_time(spark, fixture_parquet, tmp_path):
     assert got2 == {k: 2 * v for k, v in GOLDEN_COUNTS.items()}
 
 
-def test_live_follow_raw_binlog(spark, tmp_path):
+def test_live_follow_raw_binlog(spark, tmp_path, fixture_bins):
     """conn-analog composition pin (round-5 verdict "missing" #2): the
     live processingTime follow over RAW `.bin` binlog files — the
     binsource splitter feeding the full streaming DAG, i.e. the literal
@@ -413,7 +413,7 @@ def test_live_follow_raw_binlog(spark, tmp_path):
 
     from binlogpipe import binsource
 
-    ref = Path("/root/reference/tests/events")
+    ref = fixture_bins
     d = tmp_path / "bin_in"
     d.mkdir()
     out = tmp_path / "bin_out"

@@ -1,9 +1,15 @@
 """Fixture generator: reference binlog files -> pipeline input table.
 
-Test-side only (stdlib + pyarrow, no Spark). Walks each
-`/root/reference/tests/events/<fixture>/log.bin`: skips the 4-byte magic
-(`crates/old/src/events/mod.rs:83-85`), then repeatedly reads the 19-byte
-fixed header (`mod.rs:52-81`) and steps by its `event_size` field —
+Test-side only (stdlib + pyarrow, no Spark). The committed
+`data/fixture_events.parquet` is the source of truth every test and
+benchmark reads (`load_fixture_events`); `write_fixture_bins` rebuilds the
+per-case `<case>/log.bin` files from it for the raw-binlog source tests.
+
+Provenance: the table was generated from the boxercrab checkout's
+`tests/events/<fixture>/log.bin` files (`load_reference_events`, only
+when that checkout is present). Each file: skip the 4-byte magic
+(`crates/old/src/events/mod.rs:83-85`), then repeatedly read the 19-byte
+fixed header (`mod.rs:52-81`) and step by its `event_size` field —
 exactly the reference's `many1(Event::parse)` framing (`mod.rs:419-422`)
 without decoding payloads.
 
@@ -30,6 +36,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+REPO = Path(__file__).resolve().parent.parent
+FIXTURE_PARQUET = REPO / "data" / "fixture_events.parquet"
 REF_EVENTS = Path("/root/reference/tests/events")
 MAGIC = b"\xfebin"
 HEADER_LEN = 19
@@ -49,7 +57,41 @@ def split_binlog(path: Path) -> list[bytes]:
 
 
 def load_fixture_events() -> list[tuple[str, str, bytes]]:
-    """[(doc_id, source, event_bytes)] over all 16 fixtures, file order."""
+    """[(doc_id, source, event_bytes)] over all 16 fixtures, file order,
+    read from the committed table (166 rows in `<case>/<i>` order)."""
+    t = pq.read_table(FIXTURE_PARQUET)
+    return [(d, s, bytes(np.asarray(tok, dtype=np.int64).astype(np.uint8)))
+            for d, s, tok in zip(t.column("doc_id").to_pylist(),
+                                 t.column("source").to_pylist(),
+                                 t.column("tokens").to_pylist())]
+
+
+def write_fixture_bins(dest: Path,
+                       rows: list[tuple[str, str, bytes]] | None = None
+                       ) -> list[Path]:
+    """Rebuild each case's `<dest>/<case>/log.bin`: the 4-byte magic
+    followed by that case's event bytes in event-index order — the exact
+    framing `split_binlog` walks, so splitting a rebuilt file gives back
+    the table's events byte for byte. Returns the written paths."""
+    rows = load_fixture_events() if rows is None else rows
+    by_case: dict[str, list[bytes]] = {}
+    for doc_id, source, ev in rows:
+        case, idx = doc_id.rsplit("/", 1)
+        assert case == source and int(idx) == len(by_case.get(case, [])), \
+            f"{doc_id}: fixture rows must be in <case>/<i> order"
+        by_case.setdefault(case, []).append(ev)
+    paths = []
+    for case, events in by_case.items():
+        path = Path(dest) / case / "log.bin"
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(MAGIC + b"".join(events))
+        paths.append(path)
+    return paths
+
+
+def load_reference_events() -> list[tuple[str, str, bytes]]:
+    """[(doc_id, source, event_bytes)] split from the boxercrab checkout's
+    `tests/events/*/log.bin` (the committed table's provenance)."""
     rows = []
     for d in sorted(REF_EVENTS.iterdir()):
         bin_path = d / "log.bin"
@@ -277,13 +319,13 @@ def golden_sink_counts(rows) -> Counter:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/data/fixture_events.parquet")
+    ap.add_argument("--out", default=str(FIXTURE_PARQUET))
     ap.add_argument("--synth-out", default=None,
                     help="also write a scaled-up parquet here")
     ap.add_argument("--factor", type=int, default=1000)
     args = ap.parse_args()
 
-    rows = load_fixture_events()
+    rows = load_reference_events()
     table = rows_to_table(rows)
     pq.write_table(table, args.out)
     counts = golden_sink_counts(rows)
