@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from binlogpipe import aggregate as agg
-from binlogpipe import enrich, jvm_decode, layout, parse, textops, vecops
+from binlogpipe import enrich, layout, parse, textops, vecops
 
 REPO = Path(__file__).resolve().parent
 FIXTURE = str(REPO / "data" / "fixture_events.parquet")
@@ -166,25 +166,8 @@ def _fixture_df(spark: SparkSession) -> DataFrame:
     return parse.with_header(spark.read.parquet(FIXTURE))
 
 
-def _jvm_struct(df: DataFrame, sink: str) -> DataFrame:
-    """Decode via the Catalyst-expression decoders (binlogpipe/jvm_decode.py
-    — OPT-IN via SPARK_GRAFT_JVM_DECODE=1; measured slower than the pandas
-    path, see that module's docstring), shaped like the UDF result so the
-    query bodies don't care which path ran. ARRAY_SAFE sinks decode the
-    array<int> form directly (zero Python); text-bearing sinks pack to
-    binary first (correctness coverage, not a perf path)."""
-    if sink in jvm_decode.ARRAY_SAFE:
-        cols = jvm_decode.JVM_DECODERS[sink](F.col("tokens"), form="arr")
-        return df.withColumn("d", F.struct(*cols))
-    df = df.withColumn("tokens_bin", parse.pack_tokens_udf()(F.col("tokens")))
-    return df.withColumn(
-        "d", F.struct(*jvm_decode.JVM_DECODERS[sink](F.col("tokens_bin"))))
-
-
 def _decoded(spark: SparkSession, sink: str) -> DataFrame:
     df = _fixture_df(spark).filter(F.col("sink") == sink)
-    if jvm_decode.enabled() and sink in jvm_decode.JVM_DECODERS:
-        return _jvm_struct(df, sink)
     schema, factory = parse.DECODERS[sink]
     return df.withColumn("d", factory()(F.col("tokens")))
 
@@ -199,8 +182,6 @@ def _rare_df(spark: SparkSession) -> DataFrame:
 
 def _rare_decoded(spark: SparkSession, sink: str) -> DataFrame:
     df = _rare_df(spark).filter(F.col("sink") == sink)
-    if jvm_decode.enabled() and sink in jvm_decode.JVM_DECODERS:
-        return _jvm_struct(df, sink)
     schema, factory = parse.DECODERS[sink]
     return df.withColumn("d", factory()(F.col("tokens")))
 

@@ -26,15 +26,15 @@ stopped (BASELINE.json "resumable from snapshot + checkpoint").
 from __future__ import annotations
 
 import json
-import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import aggregate as agg
-from . import enrich, jvm_decode, layout, lineage, parse, route
+from . import enrich, layout, lineage, parse, route
 
 # routed table stores tokens packed as binary (lossless; parquet
 # list<int32> encode was the dominant, non-scaling write cost) plus the
@@ -79,27 +79,22 @@ DECODE_BASE_COLS = ["doc_id", "n_tok", "source", "timestamp", "event_type",
                     "checksum"]
 
 
-def _REPART1() -> bool:
-    """A/B knob: force the decode-stage repartition even at par==1
-    (the pre-round-7 shape). See decode_single's comment."""
-    return os.environ.get("SPARK_GRAFT_DECODE_REPART1") == "1"
+# Sink folding (SAME_SCHEMA_GROUPS) is used only when the session has at
+# most this many task slots; tests lower it to force the one-job-per-sink
+# layout. See the unit-building comment in run_pipeline.
+FOLD_MAX_PARALLELISM = 16
 
-
-def _REPART_OFF() -> bool:
-    """A/B knob: skip the decode-stage width control entirely at ANY par
-    (the pruned scan's natural splits run as-is). See _decode_narrow."""
-    return os.environ.get("SPARK_GRAFT_DECODE_REPART") == "0"
+# decode units run from a job thread pool of at most this many threads
+DECODE_POOL_SIZE = 6
 
 
 def _decode_narrow(sink_df: DataFrame, par: int) -> DataFrame:
-    """Width control for a decode unit's pruned scan — round-7 default is
-    ``coalesce(par)``: the fewer-bigger-tasks benefit the round-4
-    repartition bought (tiny scan splits pay per-task Python-worker
-    overhead) WITHOUT serializing the sink payload through an exchange
-    (guide §2.4: remove shuffles outright). The shuffle was pure overhead
-    wherever the pruned scan already yields >= par splits — exactly the
-    1->4 scaling pair's 4-core side, where it was the largest non-scaling
-    term. Same-window interleaved pinned A/Bs (tools/opt_ab.py, round 7):
+    """Width control for a decode unit's pruned scan: ``coalesce(par)``
+    buys the fewer-bigger-tasks benefit (tiny scan splits pay per-task
+    Python-worker overhead) WITHOUT serializing the sink payload through
+    an exchange. A round-robin ``repartition(par)`` was the largest
+    non-scaling term on the 1->4 scaling pair's 4-core side. Same-window
+    interleaved pinned A/Bs (round 7):
 
       4c pinned, 12M events: repartition decode 58.8/57.9 s ->
         no-repart 46.4/48.0 s (-19%) -> coalesce 45.0/41.9 s
@@ -113,25 +108,12 @@ def _decode_narrow(sink_df: DataFrame, par: int) -> DataFrame:
 
     coalesce(par) is a no-op when the scan yields <= par splits, so the
     underparallelized-read case the round-4 repartition targeted cannot
-    regress below the scan's own width — and at par==1 there is nothing
-    to merge, so the stage stays width-control-free (the round-7
-    repartition(1) removal, unchanged).
-
-    Knobs: SPARK_GRAFT_DECODE_COALESCE=0 restores the repartition;
-    SPARK_GRAFT_DECODE_REPART=0 skips width control entirely;
-    SPARK_GRAFT_DECODE_REPART1=1 forces the pre-round-7 repartition
-    shape even at par==1 (A/B baselines)."""
-    if _REPART1():
-        return sink_df.repartition(par)
-    if par <= 1 or _REPART_OFF():
-        return sink_df
-    if os.environ.get("SPARK_GRAFT_DECODE_COALESCE", "1") == "1":
-        return sink_df.coalesce(par)
-    return sink_df.repartition(par)
+    regress below the scan's own width; at par==1 the stage stays
+    width-control-free (the round-7 repartition(1) removal)."""
+    return sink_df.coalesce(par) if par > 1 else sink_df
 
 
 def sink_decode_projection(sink: str, sink_df: DataFrame, dim: DataFrame,
-                           fused: bool = False,
                            keep_sink: bool = False) -> DataFrame:
     """The typed-sink decode projection for one sink — THE single
     definition shared by the batch decode stage and the streaming
@@ -151,22 +133,7 @@ def sink_decode_projection(sink: str, sink_df: DataFrame, dim: DataFrame,
         dec = joined.withColumn(
             "d", udf(F.col("tokens_bin"), F.col("columns_type")))
         return dec.select(*base, "tm_schema_name", "tm_table_name", "d.*")
-    if fused and sink in parse.FUSED_PREFIX:
-        # already decoded at route time — JVM-only column selection, no
-        # second bridge crossing
-        pref = parse.FUSED_PREFIX[sink]
-        dec = sink_df.select(
-            *base, *[F.col(pref + f.name).alias(f.name)
-                     for f in parse.FUSED_SCHEMAS[pref].fields])
-    elif jvm_decode.enabled() and sink in jvm_decode.JVM_DECODERS:
-        # OPT-IN (SPARK_GRAFT_JVM_DECODE=1): fixed-layout sinks as pure
-        # Catalyst expressions, zero bridge crossings — measured x1.24-1.3
-        # SLOWER than the pandas decoders at pinned 1/4 cores (jvm_decode
-        # docstring), kept for bridge-contended hosts; parity incl.
-        # corrupt-buffer parse_error text pinned by tests/test_jvm_decode
-        dec = sink_df.select(
-            *base, *jvm_decode.JVM_DECODERS[sink](F.col("tokens_bin")))
-    elif sink in parse.DECODERS:
+    if sink in parse.DECODERS:
         schema, udf_factory = parse.DECODERS[sink]
         dec = sink_df.withColumn("d", udf_factory()(F.col("tokens_bin")))
         dec = dec.select(*base, "d.*")
@@ -313,8 +280,6 @@ def run_pipeline(
     sink_format: str = "parquet",
     iceberg_prefix: str = "local.binlog",
     input_format: str = "parquet",
-    fuse_hot_decode: bool = False,
-    decode_width: int | None = None,
 ) -> dict:
     """Execute the full DAG. Returns a metrics dict (also persisted).
 
@@ -330,12 +295,9 @@ def run_pipeline(
     (streaming.run_full_available_now), compact_sink, and the CLI
     listings ARE scheme-aware.
 
-    ``fuse_hot_decode=True`` decodes the hot sinks (parse.FUSED_PREFIX:
-    QUERY + GTID/ANON_GTID, ~42% of rows) inside the route-stage UDF and
-    carries the typed columns through the shuffle, so those rows cross the
-    JVM<->Python bridge ONCE; their decode stage becomes a JVM-only column
-    selection. A/B-measured against the two-crossing default — see
-    BENCH/BASELINE.md appendix for the verdict at both core counts."""
+    If enrich or decode raises, the lineage and aggregate side stages
+    still run to completion (and are checkpointed) before the error
+    propagates, so a rerun with the same ``run_id`` skips them."""
     import re as _re
 
     if _re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", str(out_dir)):
@@ -364,22 +326,9 @@ def run_pipeline(
         # spark_partition_id (nondeterministic) + CollectMetrics BELOW the
         # Python eval node measured 77s vs 9-13s for this same write at 6M
         # events/local[8] (the Python node then buffers the full wide rows,
-        # tokens array included, while zipping UDF results back). The
-        # mapInArrow pack variant (parse.pack_tokens_arrow) is 74s in ANY
-        # position — full-row Arrow round-trip — so the pandas pack on just
-        # the tokens column stays.
-        if fuse_hot_decode:
-            # ONE bridge crossing for hot rows: the same UDF position as
-            # the plain pack (directly on the with_header projection — the
-            # plan-shape constraint above applies identically), but the
-            # struct also carries the hot-sink decoded fields
-            hdr = hdr.withColumn(
-                "_pd", parse.pack_and_hot_decode_udf()(
-                    F.col("tokens"), F.col("sink")))
-            hdr = hdr.withColumn("tokens_bin", F.col("_pd.tokens_bin"))
-        else:
-            hdr = hdr.withColumn(
-                "tokens_bin", parse.pack_tokens_udf()(F.col("tokens")))
+        # tokens array included, while zipping UDF results back).
+        hdr = hdr.withColumn(
+            "tokens_bin", parse.pack_tokens_udf()(F.col("tokens")))
         # rows events need their u48 table_id as the enrich join key; the
         # array form is gone downstream of the routed write, so compute it
         # here (JVM expr, mod.rs:1182-1186)
@@ -398,13 +347,7 @@ def run_pipeline(
         obs = lineage.stage_observation("route")
         hdr = lineage.observe_counts(hdr, obs)
         routed_df = route.routed(hdr)
-        routed_cols = list(ROUTED_COLS)
-        if fuse_hot_decode:
-            routed_cols += [
-                F.col(f"_pd.{pref}{f.name}").alias(f"{pref}{f.name}")
-                for pref, schema in parse.FUSED_SCHEMAS.items()
-                for f in schema.fields]
-        write_output(routed_df.select(*routed_cols), sink_format,
+        write_output(routed_df.select(*ROUTED_COLS), sink_format,
                      routed_path, f"{iceberg_prefix}.routed", ("sink",))
         try:
             stage_metrics = {k: (int(v) if v is not None else None)
@@ -451,7 +394,6 @@ def run_pipeline(
     # commit — pure core-count-independent fixed cost — overlaps the
     # enrich/decode window instead of adding serially to the run wall
     # (tools/fixed_cost_probe.py: F is what caps the 1->4 scaling pair).
-    # Results are joined before returning; exceptions propagate.
 
     def _lineage_stage() -> None:
         if resume and ck.done("lineage"):
@@ -477,26 +419,12 @@ def run_pipeline(
             "wall_sec": round(time.time() - t0, 3)}
         ck.mark("aggregate")
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    # If enrich/decode below raises, the side stages run to completion in
-    # the background (non-daemon threads; each is an independent
-    # idempotent overwrite whose checkpoint mark is only valid because
-    # its own write succeeded) — the resumed run then skips them.
-    # SPARK_GRAFT_SIDE_OVERLAP=0 runs them serially instead (pre-fold
-    # shape) — the A/B knob for attributing saturated-core contention.
-    side_pool = side_futures = None
-    if os.environ.get("SPARK_GRAFT_SIDE_OVERLAP", "1") == "1":
-        side_pool = ThreadPoolExecutor(max_workers=2,
-                                       thread_name_prefix="side")
-        side_futures = [side_pool.submit(_lineage_stage),
-                        side_pool.submit(_aggregate_stage)]
-    else:
-        _lineage_stage()
-
     # ---- stage: enrich (table-map dictionary from the TABLE_MAP slice) ----
     dim_path = str(out / "table_map_dim")
-    if not (resume and ck.done("enrich")):
+
+    def _enrich_stage() -> None:
+        if resume and ck.done("enrich"):
+            return
         t0 = time.time()
         # dedup BEFORE decoding: keep only the latest TableMap per
         # (source, table_id) — a JVM window over skinny columns — then run
@@ -517,11 +445,13 @@ def run_pipeline(
         dim.write.mode("overwrite").parquet(dim_path)
         metrics["stages"]["enrich"] = {"wall_sec": round(time.time() - t0, 3)}
         ck.mark("enrich")
-    dim = spark.read.parquet(dim_path)
 
     # ---- stage: per-sink typed decode ----
-    if typed_sinks and not (resume and ck.done("decode")):
+    def _decode_stage() -> None:
+        if not typed_sinks or (resume and ck.done("decode")):
+            return
         t0 = time.time()
+        dim = spark.read.parquet(dim_path)
         # NO persist of the routed table here: an A/B that pre-built the
         # cache outside the timed region showed a 15-20% win, but paying
         # the cache materialization INSIDE the stage (as a real run must)
@@ -557,13 +487,10 @@ def run_pipeline(
         # CPU-heavy, parallelism wins and startup amortizes). So the width
         # targets ~750k rows per decode task (both measured optima fall
         # out: 6M→8, 60M→32), clamped to defaultParallelism; 8-core runs
-        # are unaffected at either scale. `decode_width` overrides.
-        if decode_width:
-            par = decode_width
-        else:
-            par = spark.sparkContext.defaultParallelism
-            if route_rows:  # None after a metrics failure -> full width
-                par = min(par, max(4, int(route_rows) // 750_000))
+        # are unaffected at either scale.
+        par = spark.sparkContext.defaultParallelism
+        if route_rows:  # None after a metrics failure -> full width
+            par = min(par, max(4, int(route_rows) // 750_000))
 
         def decode_single(sink: str) -> None:
             sink_df = routed_df.filter(F.col("sink") == sink)
@@ -572,8 +499,7 @@ def run_pipeline(
             if sink in layout.SALT_FACTORS:
                 sink_df = _decode_narrow(sink_df, par)
             tgt = str(out / "sinks" / sink)
-            dec = sink_decode_projection(sink, sink_df, dim,
-                                         fused=fuse_hot_decode)
+            dec = sink_decode_projection(sink, sink_df, dim)
             write_output(dec, sink_format, tgt,
                          f"{iceberg_prefix}.sink_{sink.lower()}")
             ck.mark(f"decode:{sink}")
@@ -590,7 +516,6 @@ def run_pipeline(
             if any(s in layout.SALT_FACTORS for s in todo):
                 sink_df = _decode_narrow(sink_df, par)
             dec = sink_decode_projection(todo[0], sink_df, dim,
-                                         fused=fuse_hot_decode,
                                          keep_sink=True)
             tmp = str(out / "sinks" / f"_grp_{todo[0]}")
             delete_path(spark, tmp)
@@ -626,15 +551,10 @@ def run_pipeline(
             todo = [s for s in unit if not (resume and ck.done(f"decode:{s}"))]
             if not todo:
                 return
-            tu = time.time()
             if len(todo) == 1:
                 decode_single(todo[0])
             else:
                 decode_group(todo)
-            if os.environ.get("SPARK_GRAFT_DECODE_TIMINGS") == "1":
-                import sys as _sys
-                print(f"DECODE_UNIT {'+'.join(todo)} "
-                      f"{time.time() - tu:.2f}", file=_sys.stderr)
 
         # Unit building: same-schema groups fold into one job each (see
         # SAME_SCHEMA_GROUPS); everything else is a single-sink unit. The
@@ -647,15 +567,13 @@ def run_pipeline(
         # 1->4 scaling pair, worth ~0.05 efficiency there) for a
         # partitionBy write that is measurably WORSE once the executor
         # pool is wide enough to pipeline the single-sink jobs instead
-        # (tools/fold_ab.py same-window 2x2 matrix at 32c, sf0.1,
+        # (round-7 same-window 2x2 matrix at 32c, sf0.1,
         # median-of-3: fold-only 23.5s vs singles 21.3s; with side-stage
         # overlap on, 18.4s vs 17.7s — fold loses at saturation in every
         # pairwise round). <=16 slots keeps the fold for the 1/4/8-core
-        # regimes the fixed-cost math targets; SPARK_GRAFT_FOLD_SINKS=1/0
-        # forces either side (the A/B knob).
-        fold_env = os.environ.get("SPARK_GRAFT_FOLD_SINKS", "")
-        fold = (fold_env == "1" if fold_env
-                else spark.sparkContext.defaultParallelism <= 16)
+        # regimes the fixed-cost math targets.
+        fold = (spark.sparkContext.defaultParallelism
+                <= FOLD_MAX_PARALLELISM)
         if sink_format == "parquet" and fold:
             header_only = [s for s in sorted(present)
                            if s not in parse.DECODERS
@@ -674,26 +592,26 @@ def run_pipeline(
         units.sort(key=lambda u: (
             0 if any(s in layout.SALT_FACTORS for s in u) else 1,
             -len(u), u[0]))
-        pool_size = max(1, min(6, len(units)))
-        if os.environ.get("SPARK_GRAFT_DECODE_POOL"):
-            # profiling/tuning override (pool=1 serializes units so their
-            # walls attribute cleanly; see tools/opt_ab.py round-7 use)
-            pool_size = max(1, min(int(os.environ["SPARK_GRAFT_DECODE_POOL"]),
-                                   len(units)))
+        pool_size = max(1, min(DECODE_POOL_SIZE, len(units)))
         with ThreadPoolExecutor(max_workers=pool_size) as pool:
             list(pool.map(decode_unit, units))
         metrics["stages"]["decode"] = {
             "wall_sec": round(time.time() - t0, 3), "sinks": len(present)}
         ck.mark("decode", sinks=len(present))
 
-    # join the side stages (lineage + aggregate) before reporting
-    if side_futures is not None:
-        for f in side_futures:
-            f.result()
-        side_pool.shutdown()
-    else:
-        _aggregate_stage()
-
+    # Leaving the `with` joins the side pool even when enrich/decode
+    # raises: the side stages are independent idempotent overwrites whose
+    # checkpoint mark is only valid because their own write succeeded, so
+    # they finish (and are marked) before the error propagates, and the
+    # resumed run skips them. Their own errors surface via result().
+    with ThreadPoolExecutor(max_workers=2,
+                            thread_name_prefix="side") as side_pool:
+        side_futures = [side_pool.submit(_lineage_stage),
+                        side_pool.submit(_aggregate_stage)]
+        _enrich_stage()
+        _decode_stage()
+    for f in side_futures:
+        f.result()
 
     metrics["wall_sec"] = round(time.time() - t_start, 3)
     n_in = metrics.get("stages", {}).get("route", {}).get("rows")

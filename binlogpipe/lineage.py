@@ -2,10 +2,12 @@
 "per-partition lineage rows (partition_id, first/last doc_id,
 rows_in/rows_routed) and metrics emitted per stage").
 
-Lineage is produced by a single mapInPandas pass over the input partitions
-(SURVEY §2.5 "lineage") — iterator-of-batches form, so each task emits one
-row regardless of batch count. Metrics use ``df.observe`` accumulators
-collected driver-side after each action.
+The DAG's lineage is ``lineage_from_routed``: one JVM aggregation over the
+routed table, keyed on the input partition and position the route stage
+stamps before its shuffle, so the input is never scanned twice.
+``partition_lineage`` (a mapInPandas walk of the input partitions, one row
+per task) is the test reference it is checked against. Metrics use
+``df.observe`` accumulators collected driver-side after each action.
 """
 
 from __future__ import annotations

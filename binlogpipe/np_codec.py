@@ -134,11 +134,6 @@ def tokens_to_bytes(arr) -> bytes:
         return b""
     if isinstance(arr, (bytes, bytearray)):
         return bytes(arr)
-    if isinstance(arr, np.ndarray) and arr.dtype == np.int8:
-        # JVM-narrowed form (parse.tokens_i8_col): the tinyint cast
-        # already applied the mod-256 wrap, so the two's-complement bits
-        # ARE the bytes — a free view instead of an 8x-widening astype
-        return arr.view(np.uint8).tobytes()
     return np.asarray(arr, dtype=np.int64).astype(np.uint8).tobytes()
 
 

@@ -1,5 +1,5 @@
 """Parse stage: header decode (pure JVM expressions) + per-event-type
-payload decoders (Arrow-batched pandas UDFs).
+payload decoders (Arrow-batched UDFs).
 
 Each decoder re-implements the semantics of the matching reference parser in
 `/root/reference/crates/old/src/events/mod.rs` (file:line cited per
@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import functools as _functools
 import json
-import os as _os
 import struct as _struct
 from typing import Callable
 
@@ -91,7 +90,7 @@ def with_header(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# pandas-UDF plumbing
+# Arrow-UDF plumbing
 # ---------------------------------------------------------------------------
 
 def _struct_with_error(fields: list[T.StructField]) -> T.StructType:
@@ -103,9 +102,7 @@ def _decode_frame(tokens: pd.Series, names: list[str],
                   vectorized: Callable | None) -> pd.DataFrame:
     """One Arrow batch -> decoded DataFrame: the whole-batch numpy fast
     path when available (returns None to refuse a batch), else the scalar
-    per-row loop whose try/except turns a bad row into a parse_error row.
-    Shared by the per-sink decode UDFs (_rowwise) and the fused
-    route-stage UDF (pack_and_hot_decode_udf)."""
+    per-row loop whose try/except turns a bad row into a parse_error row."""
     if vectorized is not None:
         try:
             out = vectorized(tokens)
@@ -128,7 +125,7 @@ def _decode_frame(tokens: pd.Series, names: list[str],
     # object dtype per column: pandas otherwise coerces an int column
     # containing any None (an errored row in the batch) to float64, which
     # silently rounds i64 values beyond 2**53 before Arrow casts them
-    # back — found by the jvm_decode random-buffer parity fuzz
+    # back
     return pd.DataFrame(
         {n: pd.Series(cols[n], dtype=object) for n in names},
         columns=names)
@@ -137,10 +134,8 @@ def _decode_frame(tokens: pd.Series, names: list[str],
 def _arrow_tokens(arr):
     """One arrow_udf input batch of the tokens column -> the form
     _decode_frame consumes: a _FlatBatch over the batch's own buffers for
-    the packed-binary fast path (ZERO per-row materialization — the
-    pandas_udf form built one bytes object per row just to re-join them
-    in _flat_batch), else a pd.Series identical to what pandas_udf would
-    have delivered (array<int32> inputs, nulls, slices)."""
+    the packed-binary fast path (zero per-row materialization), else a
+    pd.Series of the rows (array<int32> inputs, nulls)."""
     import numpy as np
 
     if isinstance(arr, pa.ChunkedArray):
@@ -159,8 +154,7 @@ def _arrow_tokens(arr):
 
 def _frame_to_struct(frame: pd.DataFrame, schema: T.StructType):
     """Decoded DataFrame -> pa.StructArray with the schema's exact arrow
-    field types (the declared Spark types drive every conversion, so the
-    values match the pandas_udf path's coercions)."""
+    field types (the declared Spark types drive every conversion)."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     arrays = []
@@ -172,43 +166,28 @@ def _frame_to_struct(frame: pd.DataFrame, schema: T.StructType):
                                       names=[f.name for f in schema.fields])
 
 
-def _arrow_decode() -> bool:
-    """Round-7 default: per-sink decode UDFs run as Spark 4.1 arrow_udfs
-    — the binary tokens batch feeds _FlatBatch straight from the Arrow
-    buffers (no per-row bytes materialization on input, no pandas
-    round-trip on output). SPARK_GRAFT_ARROW_DECODE=0 restores the
-    pandas_udf form (the A/B knob); outputs are identical by construction
-    (same _decode_frame, types driven by the same declared schema)."""
-    return _os.environ.get("SPARK_GRAFT_ARROW_DECODE", "1") == "1"
-
-
 def _rowwise(schema: T.StructType, fn: Callable[[bytes], dict],
              vectorized: Callable | None = None):
-    """Wrap a per-event ``bytes -> dict`` decoder as an Arrow-batched UDF
-    returning ``schema`` (+ parse_error). The Python loop is per Arrow
+    """Wrap a per-event ``bytes -> dict`` decoder as a Spark 4.1 arrow_udf
+    returning ``schema`` (+ parse_error). The binary tokens batch feeds
+    _FlatBatch straight from the Arrow buffers (no per-row bytes on
+    input, no pandas round-trip on output). The Python loop is per Arrow
     batch, never per Spark row; records accumulate columnar (dict-of-lists —
     pd.DataFrame from columns is several times faster than from row dicts).
 
     `vectorized`, when given, is a whole-batch numpy fast path; it returns a
     DataFrame or None to fall back to the loop (e.g. mixed event sizes)."""
+    from pyspark.sql.functions import arrow_udf
+
     names = [f.name for f in schema.fields]
 
-    if _arrow_decode():
-        from pyspark.sql.functions import arrow_udf
+    @arrow_udf(schema)
+    def audf(tokens: pa.Array) -> pa.Array:
+        return _frame_to_struct(
+            _decode_frame(_arrow_tokens(tokens), names, fn, vectorized),
+            schema)
 
-        @arrow_udf(schema)
-        def audf(tokens: pa.Array) -> pa.Array:
-            return _frame_to_struct(
-                _decode_frame(_arrow_tokens(tokens), names, fn, vectorized),
-                schema)
-
-        return audf
-
-    @pandas_udf(schema)
-    def udf(tokens: pd.Series) -> pd.DataFrame:
-        return _decode_frame(tokens, names, fn, vectorized)
-
-    return udf
+    return audf
 
 
 def _pack_arrow_array(tokens):
@@ -241,89 +220,17 @@ def _pack_arrow_array(tokens):
 
 def pack_tokens_udf():
     """array<int32> -> packed binary (internal routed-table form). One
-    vectorized Arrow pass at route time; every downstream stage reads
-    binary, which writes/reads ~3x faster than parquet list<int32>.
+    vectorized Arrow pass at route time (a Spark 4.1 arrow_udf over
+    _pack_arrow_array: one whole-batch cast, no per-row copies — see
+    OPTIMIZATION_r07.md "route: pack UDF"); every downstream stage reads
+    binary, which writes/reads ~3x faster than parquet list<int32>."""
+    from pyspark.sql.functions import arrow_udf
 
-    Default is the Spark 4.1 arrow_udf form (_pack_arrow_array): the
-    pandas form pays, PER ROW, the Arrow->pandas materialization of a
-    numpy array plus asarray(int64)+astype(uint8)+tobytes (three copies)
-    — the arrow form is one whole-batch cast and two reused buffers.
-    Same-window pinned A/B (tools/opt_ab.py, round 7): see
-    OPTIMIZATION_r07.md "route: pack UDF". SPARK_GRAFT_ARROW_PACK=0
-    restores the pandas form (the A/B knob)."""
-    if _os.environ.get("SPARK_GRAFT_ARROW_PACK", "1") == "1":
-        from pyspark.sql.functions import arrow_udf
+    @arrow_udf(T.BinaryType())
+    def pack_arrow(tokens: pa.Array) -> pa.Array:
+        return _pack_arrow_array(tokens)
 
-        @arrow_udf(T.BinaryType())
-        def pack_arrow(tokens: pa.Array) -> pa.Array:
-            return _pack_arrow_array(tokens)
-
-        return pack_arrow
-
-    @pandas_udf(T.BinaryType())
-    def pack(tokens: pd.Series) -> pd.Series:
-        return tokens.map(c.tokens_to_bytes)
-
-    return pack
-
-
-# JVM-side pre-narrowing for the pack crossing — MEASURED NEGATIVE, kept
-# only as a record so no future round re-tries it. Idea: tokens are byte
-# VALUES (n_tok == event_size) carried as array<int32>, so the pack UDF's
-# bridge input moves 4 Arrow bytes per event byte; casting to tinyint
-# JVM-side quarters that. Byte parity with tokens_to_bytes's uint8
-# truncation is exact (pmod into [0,256) then shift the top half to
-# [-128,127] so the ANSI cast cannot throw; two's-complement view on the
-# Python side — fuzz + fixture pinned). But the interleaved routed-write
-# A/B at sf0.1/32c LOSES every pair (i32 6.5/4.6/4.2s vs i8
-# 6.9/5.5/5.3s, x1.27 best): the per-element higher-order transform()
-# builds a new array per row on the JVM side, and that costs more than
-# the bridge-byte saving returns — the Arrow transfer overlaps JVM
-# compute, so route is JVM-CPU-bound at full width, not pipe-bound.
-# Consistent with the round-4 fuse lesson: this stage's bridge cost is
-# already overlapped; only removing WORK (not moving it) helps.
-TOKENS_I8_SQL = ("transform({col}, x -> cast(pmod(x, 256) - "
-                 "(case when pmod(x, 256) > 127 then 256 else 0 end) "
-                 "as tinyint))")
-
-
-def tokens_i8_col(col: str = "tokens"):
-    return F.expr(TOKENS_I8_SQL.format(col=col))
-
-
-def pack_tokens_arrow(df: DataFrame, tokens_col: str = "tokens",
-                      out_col: str = "tokens_bin") -> DataFrame:
-    """Replace the array<int32> tokens column with packed binary via a
-    pyarrow buffer rebuild inside mapInArrow: a ListArray's offsets plus its
-    uint8-cast values buffer ARE a BinaryArray (same physical layout), so
-    the conversion is one vectorized int32->uint8 cast — zero per-row
-    Python, no pandas materialization.
-
-    MEASURED DEAD END on the route hot path (kept as a utility + record):
-    mapInArrow round-trips EVERY column through the Python worker, and the
-    routed write measured ~74s vs 9-13s for the pandas pack at 6M events
-    on local[8] — in any plan position. The pandas pack's per-row numpy
-    cost is far cheaper than the full-row Arrow transfer."""
-    import pyarrow as pa
-
-    fields = [f for f in df.schema.fields if f.name != tokens_col]
-    names = [f.name for f in fields]
-    out_schema = T.StructType(
-        fields + [T.StructField(out_col, T.BinaryType())])
-
-    def conv(batches):
-        for b in batches:
-            arr = b.column(b.schema.get_field_index(tokens_col))
-            u8 = arr.values.cast(pa.uint8())
-            packed = pa.Array.from_buffers(
-                pa.binary(), len(arr),
-                [arr.buffers()[0], arr.offsets.buffers()[1], u8.buffers()[1]],
-                null_count=arr.null_count, offset=arr.offset)
-            cols = [b.column(b.schema.get_field_index(n)) for n in names]
-            yield pa.RecordBatch.from_arrays(cols + [packed],
-                                             names=names + [out_col])
-
-    return df.mapInArrow(conv, out_schema)
+    return pack_arrow
 
 
 def unpack_tokens_udf():
@@ -484,8 +391,7 @@ class _FlatBatch:
         return self._buf
 
     def __iter__(self):
-        # scalar-fallback iteration: per-row bytes, same values the
-        # pandas_udf path would hand tokens_to_bytes
+        # scalar-fallback iteration: per-row bytes
         buf = self.buf
         for o, ln in zip(self.offs.tolist(), self.lens.tolist()):
             yield buf[o:o + ln]
@@ -1651,7 +1557,7 @@ def make_rows_udf(n_images: int):
 
 
 # ---------------------------------------------------------------------------
-# decoder registry: sink name -> (schema, pandas_udf factory)
+# decoder registry: sink name -> (schema, arrow_udf factory)
 # ---------------------------------------------------------------------------
 
 def _simple(schema, fn):
@@ -1715,65 +1621,6 @@ DECODERS: dict[str, tuple[T.StructType, Callable]] = {
 # Header-only sinks (STOP/SLAVE/HEARTBEAT/UNKNOWN) need no payload decoder:
 # their typed sink is header + checksum only (mod.rs:516-519, 658-661,
 # 1043-1046, 462-467).
-
-
-# ---------------------------------------------------------------------------
-# fused route-stage pack + hot-sink decode (single bridge crossing)
-# ---------------------------------------------------------------------------
-
-# sinks decoded INSIDE the route-stage UDF when job.run_pipeline fuses:
-# QUERY + GTID/ANON_GTID are ~42% of all rows (BASELINE.md §2) and their
-# second JVM<->Python crossing at decode time is pure bridge traffic
-FUSED_PREFIX = {"QUERY": "q_", "GTID": "g_", "ANON_GTID": "g_"}
-FUSED_SCHEMAS = {"q_": QUERY_SCHEMA, "g_": GTID_SCHEMA}
-
-
-def _fused_schema() -> T.StructType:
-    return T.StructType(
-        [T.StructField("tokens_bin", T.BinaryType())]
-        + [T.StructField(pref + f.name, f.dataType)
-           for pref, schema in FUSED_SCHEMAS.items()
-           for f in schema.fields])
-
-
-def pack_and_hot_decode_udf():
-    """Single-bridge-crossing route stage (round-3 verdict item 1): ONE
-    pandas UDF both packs tokens to binary and decodes the hot sinks
-    (FUSED_PREFIX) so their per-sink decode stage becomes a JVM-only
-    column selection — those rows cross the JVM<->Python pipe once instead
-    of twice. Cold sinks still decode from tokens_bin downstream with the
-    unchanged per-sink decoders. Reuses the exact same decode path
-    (_decode_frame: vectorized fast path + scalar quarantine fallback) as
-    the standalone decode UDFs, so outputs are identical by construction."""
-    q_names = [f.name for f in QUERY_SCHEMA.fields]
-    g_names = [f.name for f in GTID_SCHEMA.fields]
-
-    @pandas_udf(_fused_schema())
-    def fused(tokens: pd.Series, sink: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        packed = tokens.map(c.tokens_to_bytes)
-        n = len(packed)
-        cols: dict = {"tokens_bin": packed}
-        for pref, names in (("q_", q_names), ("g_", g_names)):
-            for nm in names:
-                cols[pref + nm] = np.full(n, None, dtype=object)
-        sv = sink.to_numpy(dtype=object)
-        for pref, names, fn, vec, mask in (
-                ("q_", q_names, decode_query_py, _query_vectorized,
-                 sv == "QUERY"),
-                ("g_", g_names, _gtid_fields, _gtid_vectorized,
-                 (sv == "GTID") | (sv == "ANON_GTID"))):
-            idx = np.nonzero(mask)[0]
-            if not len(idx):
-                continue
-            sub = packed.iloc[idx].reset_index(drop=True)
-            frame = _decode_frame(sub, names, fn, vec)
-            for nm in names:
-                cols[pref + nm][idx] = frame[nm].to_numpy(dtype=object)
-        return pd.DataFrame(cols)
-
-    return fused
 
 
 def statement_kind(query_col: Column) -> Column:

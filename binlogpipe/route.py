@@ -9,12 +9,13 @@ Unknown / v0-v1 rows types route to QUARANTINE instead of panicking.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import layout
+
+# minimum fan-out width of the routed write (see routed)
+ROUTE_FLOOR = 8
 
 
 def salt_expr(sink_col=None, doc_id_col=None):
@@ -51,7 +52,5 @@ def routed(df_with_header: DataFrame, shuffle_partitions: int | None = None) -> 
         # made the fan-out write emit 32 tasks x ~18 sinks of ~2 MB files,
         # paying task+file overhead with no parallelism to gain and
         # handing the decode stage hundreds of tiny pruned reads.
-        # SPARK_GRAFT_ROUTE_FLOOR restores/overrides (the A/B knob).
-        floor = int(os.environ.get("SPARK_GRAFT_ROUTE_FLOOR", "8"))
-        shuffle_partitions = max(sc.defaultParallelism * 2, floor)
+        shuffle_partitions = max(sc.defaultParallelism * 2, ROUTE_FLOOR)
     return df.repartition(shuffle_partitions, "sink", "salt")

@@ -20,7 +20,6 @@ the default and get a sort-free physical plan (pinned by test_plans).
 
 from __future__ import annotations
 
-import os
 import random
 
 from pyspark.sql import DataFrame
@@ -183,22 +182,19 @@ def _shingle_expr(col: str = "text", n: int = 3) -> str:
     cs_expr = f"transform(split({col}, ''), ch -> ascii(ch))"
     fold = (f"aggregate(slice(cs, i, {n}),"
             f"       0L, (acc, x) -> (acc * 31 + x) % {MH_PRIME})")
-    if os.environ.get("SPARK_GRAFT_UNROLL_SHINGLE", "1") != "0":
-        # Per-shingle fold unrolled to element_at arithmetic: slice() allocs
-        # a fresh n-element array per shingle and aggregate() is an
-        # interpreted higher-order fold with its own per-step lambda eval —
-        # both per-shingle costs for a fixed, tiny n. The unrolled chain
-        # keeps the stepwise mod (acc_k = (acc_{k-1}*31 + x_k) % p), so
-        # values are bit-identical and the oracle SQL is unchanged. The
-        # short-document case (size < n, where slice() returns a partial
-        # window) keeps the aggregate form behind a lazy IF — element_at
-        # past the end would differ (and throws under ANSI).
-        h = "0L"
-        for k in range(n):
-            h = f"(({h} * 31 + element_at(cs, i + {k})) % {MH_PRIME})"
-        body = f"IF(size(cs) >= i + {n - 1}, {h}, {fold})"
-    else:
-        body = fold
+    # Per-shingle fold unrolled to element_at arithmetic: slice() allocs
+    # a fresh n-element array per shingle and aggregate() is an
+    # interpreted higher-order fold with its own per-step lambda eval —
+    # both per-shingle costs for a fixed, tiny n. The unrolled chain
+    # keeps the stepwise mod (acc_k = (acc_{k-1}*31 + x_k) % p), so
+    # values are bit-identical and the oracle SQL is unchanged. The
+    # short-document case (size < n, where slice() returns a partial
+    # window) keeps the aggregate form behind a lazy IF — element_at
+    # past the end would differ (and throws under ANSI).
+    h = "0L"
+    for k in range(n):
+        h = f"(({h} * 31 + element_at(cs, i + {k})) % {MH_PRIME})"
+    body = f"IF(size(cs) >= i + {n - 1}, {h}, {fold})"
     return (
         f"element_at(transform(array({cs_expr}), cs -> "
         f"array_distinct(transform("

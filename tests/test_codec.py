@@ -77,20 +77,11 @@ def test_lenenc_truncated_payload_raises():
     assert c.int_lenenc(b"\xfc\x01\x02", 0) == (0x0201, 3)
 
 
-def test_tokens_to_bytes_int8_view_parity():
-    """The int8 fast path (the JVM tinyint pre-cast's arrival dtype —
-    measured a net loss on the route wall and kept OFF, parse.py
-    TOKENS_I8_SQL note) must stay byte-identical to the int64→uint8
-    truncation path for every value class: plain bytes, the wrap
-    boundary, negatives, and multi-byte ints."""
-    import numpy as np
-
+def test_tokens_to_bytes_wraps_to_low_byte():
+    """tokens_to_bytes keeps each token's low byte for every value class:
+    plain bytes, the wrap boundary, negatives, and multi-byte ints."""
     from binlogpipe import np_codec as c
 
     vals = [0, 1, 127, 128, 255, 256, 257, -1, -128, -256, 300,
             65535, -65536, 2**31 - 1, -(2**31)]
-    wide = c.tokens_to_bytes(vals)
-    i8 = np.array([((v % 256) + 256) % 256 for v in vals],
-                  dtype=np.uint8).view(np.int8)  # what tinyint delivers
-    assert c.tokens_to_bytes(i8) == wide
-    assert wide.hex() == "00017f80ff0001ff80002cff00ff00"
+    assert c.tokens_to_bytes(vals).hex() == "00017f80ff0001ff80002cff00ff00"

@@ -300,32 +300,50 @@ def test_metrics_failure_does_not_fake_empty_input(
     assert m["rows"] == 166
 
 
-def test_fused_hot_decode_outputs_match(spark, fixture_parquet, tmp_path,
-                                        pipeline_out):
-    """fuse_hot_decode=True decodes QUERY/GTID/ANON_GTID at route time
-    (single bridge crossing); their typed sink outputs must be identical
-    to the two-crossing default, and every cold sink must be untouched."""
-    from binlogpipe import job
+def test_side_stages_complete_when_enrich_fails(spark, fixture_parquet,
+                                               tmp_path, monkeypatch,
+                                               pipeline_out):
+    """Failure semantics of the lineage/aggregate side pool: when enrich
+    raises, run_pipeline re-raises only after the side stages finished,
+    so their outputs and checkpoint marks have landed; a rerun with the
+    same run_id skips them and completes with the reference run's
+    per-sink counts."""
+    from binlogpipe import enrich, job
 
+    def boom(_):
+        raise RuntimeError("injected enrich failure")
+
+    monkeypatch.setattr(enrich, "build_table_map_dim", boom)
     out = tmp_path / "out"
-    m = job.run_pipeline(spark, fixture_parquet, str(out), run_id="fused",
-                         fuse_hot_decode=True)
+    with pytest.raises(RuntimeError, match="injected enrich failure"):
+        job.run_pipeline(spark, fixture_parquet, str(out), run_id="side")
+    stages = json.loads(
+        (out / "_checkpoint" / "state.json").read_text())["stages"]
+    assert {"route", "lineage", "aggregate"} <= set(stages)
+    assert "enrich" not in stages and "decode" not in stages
+    assert (out / "lineage" / "_SUCCESS").exists()
+    assert (out / "agg" / "sink_counts" / "_SUCCESS").exists()
+
+    monkeypatch.undo()
+    m = job.run_pipeline(spark, fixture_parquet, str(out), run_id="side")
+    assert set(m["stages"]) == {"enrich", "decode"}  # the rest resumed
     assert m["rows"] == 166
-    base = Path(pipeline_out["out"]) / "sinks"
-    for sink in sorted(p.name for p in base.iterdir() if p.is_dir()):
-        a = spark.read.parquet(str(base / sink))
-        b = spark.read.parquet(str(out / "sinks" / sink))
-        assert sorted(a.columns) == sorted(b.columns), sink
-        ka = {r["doc_id"]: r.asDict() for r in a.collect()}
-        kb = {r["doc_id"]: r.asDict() for r in b.collect()}
-        assert ka == kb, sink
+
+    def counts(root):
+        agg = {r["sink"]: r["n"] for r in spark.read.parquet(
+            f"{root}/agg/sink_counts").collect()}
+        sinks = {p.name: spark.read.parquet(str(p)).count()
+                 for p in (Path(root) / "sinks").iterdir() if p.is_dir()}
+        return agg, sinks
+
+    assert counts(out) == counts(pipeline_out["out"])
 
 
 def test_fold_and_singles_sink_layouts_identical(spark, fixture_parquet,
                                                  tmp_path, monkeypatch,
                                                  pipeline_out):
     """The same-schema sink fold is parallelism-conditional (job.py: fold
-    when defaultParallelism <= 16, A/B'd in tools/fold_ab.py), so BOTH
+    when defaultParallelism <= FOLD_MAX_PARALLELISM), so BOTH
     write shapes are production paths — one job per sink at wide
     parallelism, grouped partitionBy(sink) + renames when slots are
     scarce. Their sinks/ trees must be indistinguishable: same sink dirs,
@@ -334,7 +352,7 @@ def test_fold_and_singles_sink_layouts_identical(spark, fixture_parquet,
     this run forces singles."""
     from binlogpipe import job
 
-    monkeypatch.setenv("SPARK_GRAFT_FOLD_SINKS", "0")
+    monkeypatch.setattr(job, "FOLD_MAX_PARALLELISM", 0)
     out = tmp_path / "out"
     m = job.run_pipeline(spark, fixture_parquet, str(out), run_id="singles")
     assert m["rows"] == 166
@@ -358,34 +376,6 @@ def test_fold_and_singles_sink_layouts_identical(spark, fixture_parquet,
         assert ka == kb, sink
 
 
-def test_decode_coalesce_and_repartition_outputs_identical(
-        spark, fixture_parquet, tmp_path, monkeypatch, pipeline_out):
-    """The decode stage's width control is shuffle-free by default
-    (job._decode_narrow: coalesce(par), round 7) with the round-4
-    repartition behind SPARK_GRAFT_DECODE_COALESCE=0 — both are pure
-    task-placement mechanisms, so every typed sink's rows, columns and
-    dir set must be identical between the two shapes. pipeline_out runs
-    the coalesce default at local[4] (par>1 => width control active on
-    the salted sinks); this run forces the repartition."""
-    from binlogpipe import job
-
-    monkeypatch.setenv("SPARK_GRAFT_DECODE_COALESCE", "0")
-    out = tmp_path / "out"
-    m = job.run_pipeline(spark, fixture_parquet, str(out), run_id="repart")
-    assert m["rows"] == 166
-    base = Path(pipeline_out["out"]) / "sinks"
-    sinks = sorted(p.name for p in base.iterdir() if p.is_dir())
-    assert sorted(p.name for p in (out / "sinks").iterdir()
-                  if p.is_dir()) == sinks
-    for sink in sinks:
-        a = spark.read.parquet(str(base / sink))
-        b = spark.read.parquet(str(out / "sinks" / sink))
-        assert sorted(a.columns) == sorted(b.columns), sink
-        ka = {r["doc_id"]: r.asDict() for r in a.collect()}
-        kb = {r["doc_id"]: r.asDict() for r in b.collect()}
-        assert ka == kb, sink
-
-
 def test_stale_group_staging_swept_on_resume(spark, fixture_parquet,
                                              tmp_path, monkeypatch):
     """A run killed mid-decode_group leaves a `sinks/_grp_*` staging dir
@@ -396,7 +386,7 @@ def test_stale_group_staging_swept_on_resume(spark, fixture_parquet,
     consumers (cli dump/status) would surface `_grp_X` as a sink."""
     from binlogpipe import job
 
-    monkeypatch.setenv("SPARK_GRAFT_FOLD_SINKS", "1")
+    monkeypatch.setattr(job, "FOLD_MAX_PARALLELISM", 10**6)
     out = tmp_path / "out"
     job.run_pipeline(spark, fixture_parquet, str(out), run_id="g1")
     counts = {r["sink"]: r["n"] for r in
@@ -451,7 +441,7 @@ def test_fold_empty_member_falls_back_to_single_write(spark, fixture_parquet,
     `_SUCCESS` and a checkpoint mark."""
     from binlogpipe import job
 
-    monkeypatch.setenv("SPARK_GRAFT_FOLD_SINKS", "1")
+    monkeypatch.setattr(job, "FOLD_MAX_PARALLELISM", 10**6)
     out = tmp_path / "out"
     job.run_pipeline(spark, fixture_parquet, str(out), run_id="f1")
     stop_count = spark.read.parquet(str(out / "sinks" / "STOP")).count()

@@ -176,10 +176,7 @@ def test_routed_write_plan_has_single_python_crossing(spark, fixture_parquet):
     lineage stamps -> salted repartition -> routed projection) must contain
     exactly ONE Python evaluation node — the pack UDF. A second crossing
     (or a plan shape that re-evaluates the UDF per branch) is the
-    non-scaling term the round-3 scaling analysis identified; the fused
-    single-crossing variant was A/B-measured slower end-to-end (see
-    BENCH/BASELINE.md round-4 appendix) because the decode pool already
-    overlaps hot-sink decode off the critical path."""
+    non-scaling term the round-3 scaling analysis identified."""
     from binlogpipe import job, layout, route
 
     hdr = parse.with_header(spark.read.parquet(fixture_parquet))

@@ -354,16 +354,18 @@ def test_kmeans_seeds_by_vec_id_value(spark):
     assert len(cents) == 3  # only ids 0,1,2 qualify — same as the oracle
 
 
-def test_shingle_unroll_matches_aggregate_fold(spark, monkeypatch):
-    """The unrolled element_at rolling hash (SPARK_GRAFT_UNROLL_SHINGLE=1,
-    the default) must be bit-identical to the aggregate(slice(...)) fold it
-    replaced — including the short-document branch (len < n, where slice()
-    folds a partial window and element_at would run past the end)."""
-    monkeypatch.setenv("SPARK_GRAFT_UNROLL_SHINGLE", "1")
+def test_shingle_unroll_matches_aggregate_fold(spark):
+    """The unrolled element_at rolling hash must be bit-identical to the
+    aggregate(slice(...)) fold it replaced — including the short-document
+    branch (len < n, where slice() folds a partial window and element_at
+    would run past the end)."""
     e_new = textops._shingle_expr()
-    monkeypatch.setenv("SPARK_GRAFT_UNROLL_SHINGLE", "0")
-    e_old = textops._shingle_expr()
-    assert e_new != e_old  # the knob actually switches forms
+    fold = ("aggregate(slice(cs, i, 3), 0L, "
+            f"(acc, x) -> (acc * 31 + x) % {textops.MH_PRIME})")
+    e_old = ("element_at(transform(array("
+             "transform(split(text, ''), ch -> ascii(ch))), cs -> "
+             "array_distinct(transform(sequence(1, greatest(size(cs) - 2, 1)),"
+             f" i -> {fold}))), 1)")
     docs = ["", "a", "ab", "abc", "abcd", "hello world " * 50,
             "é中文 mixed", "x\ty\nz", "aaa aaa aaa", "\x0b odd ws"]
     df = spark.createDataFrame(list(enumerate(docs)),

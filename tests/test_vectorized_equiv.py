@@ -146,6 +146,21 @@ def test_rotate_high_bit_position_wraps_identically():
     assert vec["next_binlog"][0] == scalar["next_binlog"] == "binlog.000042"
 
 
+def test_xid_u64_wraps_to_i64(spark):
+    """The XID sink decoder (the arrow_udf the decode stage runs) wraps a
+    u64 >= 2**63 two's-complement into its LongType column."""
+    from pyspark.sql import functions as F
+
+    bufs = [bytes(range(19)) + b"\xff" * 8 + b"\x00" * 4,
+            bytes(range(19)) + b"\x00" * 7 + b"\x80" + b"\x00" * 4]
+    _, factory = parse.DECODERS["XID"]
+    df = spark.createDataFrame([(i, b) for i, b in enumerate(bufs)],
+                               "i int, tokens_bin binary")
+    rows = (df.select("i", factory()(F.col("tokens_bin")).alias("d"))
+            .orderBy("i").select("d.*").collect())
+    assert [tuple(r) for r in rows] == [(-1, None), (-(2 ** 63), None)]
+
+
 @given(st.lists(st.binary(min_size=0, max_size=60), min_size=1, max_size=8))
 def test_rotate_vectorized_equiv(tails):
     payloads = []
