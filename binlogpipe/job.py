@@ -84,9 +84,6 @@ DECODE_BASE_COLS = ["doc_id", "n_tok", "source", "timestamp", "event_type",
 # layout. See the unit-building comment in run_pipeline.
 FOLD_MAX_PARALLELISM = 16
 
-# decode units run from a job thread pool of at most this many threads
-DECODE_POOL_SIZE = 6
-
 
 def _decode_narrow(sink_df: DataFrame, par: int) -> DataFrame:
     """Width control for a decode unit's pruned scan: ``coalesce(par)``
@@ -592,7 +589,7 @@ def run_pipeline(
         units.sort(key=lambda u: (
             0 if any(s in layout.SALT_FACTORS for s in u) else 1,
             -len(u), u[0]))
-        pool_size = max(1, min(DECODE_POOL_SIZE, len(units)))
+        pool_size = max(1, min(6, len(units)))
         with ThreadPoolExecutor(max_workers=pool_size) as pool:
             list(pool.map(decode_unit, units))
         metrics["stages"]["decode"] = {

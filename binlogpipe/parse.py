@@ -124,8 +124,7 @@ def _decode_frame(tokens: pd.Series, names: list[str],
             cols[n].append(r[n])
     # object dtype per column: pandas otherwise coerces an int column
     # containing any None (an errored row in the batch) to float64, which
-    # silently rounds i64 values beyond 2**53 before Arrow casts them
-    # back
+    # silently rounds i64 values beyond 2**53 before Arrow casts them back
     return pd.DataFrame(
         {n: pd.Series(cols[n], dtype=object) for n in names},
         columns=names)

@@ -14,9 +14,6 @@ from pyspark.sql import functions as F
 
 from . import layout
 
-# minimum fan-out width of the routed write (see routed)
-ROUTE_FLOOR = 8
-
 
 def salt_expr(sink_col=None, doc_id_col=None):
     """Per-type salt factor: salt = pmod(xxhash64(doc_id), k_sink)."""
@@ -52,5 +49,5 @@ def routed(df_with_header: DataFrame, shuffle_partitions: int | None = None) -> 
         # made the fan-out write emit 32 tasks x ~18 sinks of ~2 MB files,
         # paying task+file overhead with no parallelism to gain and
         # handing the decode stage hundreds of tiny pruned reads.
-        shuffle_partitions = max(sc.defaultParallelism * 2, ROUTE_FLOOR)
+        shuffle_partitions = max(sc.defaultParallelism * 2, 8)
     return df.repartition(shuffle_partitions, "sink", "salt")
