@@ -60,33 +60,28 @@ def load_fixture_events() -> list[tuple[str, str, bytes]]:
     """[(doc_id, source, event_bytes)] over all 16 fixtures, file order,
     read from the committed table (166 rows in `<case>/<i>` order)."""
     t = pq.read_table(FIXTURE_PARQUET)
-    return [(d, s, bytes(np.asarray(tok, dtype=np.int64).astype(np.uint8)))
+    return [(d, s, bytes(tok))
             for d, s, tok in zip(t.column("doc_id").to_pylist(),
                                  t.column("source").to_pylist(),
                                  t.column("tokens").to_pylist())]
 
 
-def write_fixture_bins(dest: Path,
-                       rows: list[tuple[str, str, bytes]] | None = None
-                       ) -> list[Path]:
-    """Rebuild each case's `<dest>/<case>/log.bin`: the 4-byte magic
-    followed by that case's event bytes in event-index order — the exact
-    framing `split_binlog` walks, so splitting a rebuilt file gives back
-    the table's events byte for byte. Returns the written paths."""
-    rows = load_fixture_events() if rows is None else rows
+def write_fixture_bins(dest: Path) -> None:
+    """Rebuild each case's `<dest>/<case>/log.bin` from the committed
+    table: the 4-byte magic followed by that case's event bytes in
+    event-index order — the exact framing `split_binlog` walks, so
+    splitting a rebuilt file gives back the table's events byte for byte."""
     by_case: dict[str, list[bytes]] = {}
-    for doc_id, source, ev in rows:
+    for doc_id, source, ev in load_fixture_events():
         case, idx = doc_id.rsplit("/", 1)
-        assert case == source and int(idx) == len(by_case.get(case, [])), \
-            f"{doc_id}: fixture rows must be in <case>/<i> order"
+        if case != source or int(idx) != len(by_case.get(case, [])):
+            raise ValueError(
+                f"{doc_id}: fixture rows must be in <case>/<i> order")
         by_case.setdefault(case, []).append(ev)
-    paths = []
     for case, events in by_case.items():
         path = Path(dest) / case / "log.bin"
         path.parent.mkdir(parents=True, exist_ok=True)
         path.write_bytes(MAGIC + b"".join(events))
-        paths.append(path)
-    return paths
 
 
 def load_reference_events() -> list[tuple[str, str, bytes]]:
