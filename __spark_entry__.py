@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from binlogpipe import aggregate as agg
-from binlogpipe import enrich, layout, parse, textops, vecops
+from binlogpipe import enrich, layout, parse, route, textops, vecops
 
 REPO = Path(__file__).resolve().parent
 FIXTURE = str(REPO / "data" / "fixture_events.parquet")
@@ -393,9 +393,9 @@ def q_bl_desc_report(spark, sf_dir):
 
 
 def q_bl_enrich_dim(spark, sf_dir):
-    """The table-map broadcast dimension itself (enrich stage output)."""
-    tm = _decoded(spark, "TABLE_MAP").select("source", "log_pos", "d.*")
-    dim = enrich.build_table_map_dim(tm.filter(F.col("parse_error").isNull()))
+    """The table-map broadcast dimension itself (enrich stage output),
+    built by the pipeline's own route projection + dictionary builder."""
+    dim = enrich.table_map_dim(route.routed_rows(spark.read.parquet(FIXTURE)))
     return dim.select(
         "source", "table_id", "schema_name", "table_name",
         F.col("column_count").cast("long").alias("column_count"),
@@ -611,10 +611,9 @@ def q_bl_rows_decode(spark, sf_dir):
     layouts and rebuilds the extra_data JSON from the raw bytes (the
     Spark side derives layouts from TABLE_MAP enrich — the general path);
     pytest additionally holds byte-exact field goldens."""
-    def branches(df, dim_src, sinks):
-        tm = dim_src.select("source", "log_pos", "d.*")
-        dim = enrich.build_table_map_dim(
-            tm.filter(F.col("parse_error").isNull()))
+    def branches(raw, sinks):
+        df = parse.with_header(raw)
+        dim = enrich.table_map_dim(route.routed_rows(raw))
         outs = []
         for sink, n_images in sinks:
             sub = df.filter(F.col("sink") == sink).withColumn(
@@ -631,11 +630,9 @@ def q_bl_rows_decode(spark, sf_dir):
                 F.posexplode(F.col("d.rows")).alias("image_idx", "cells")))
         return outs
     outs = branches(
-        _fixture_df(spark), _decoded(spark, "TABLE_MAP"),
+        spark.read.parquet(FIXTURE),
         (("WRITE_ROWS_V2", 1), ("UPDATE_ROWS_V2", 2), ("DELETE_ROWS_V2", 1)))
-    outs += branches(
-        _rare_df(spark), _rare_decoded(spark, "TABLE_MAP"),
-        (("WRITE_ROWS_V2", 1),))
+    outs += branches(spark.read.parquet(RARE), (("WRITE_ROWS_V2", 1),))
     u = outs[0]
     for x in outs[1:]:
         u = u.unionByName(x)

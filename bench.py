@@ -144,9 +144,10 @@ def run_pipeline_at(cores: int, input_path: str, tag: str,
                     **pipeline_kwargs) -> dict:
     """One timed bench cell: session, warm-up protocol, best-of-n timed
     runs. `pipeline_kwargs` pass through to job.run_pipeline and
-    `spark_conf` to build_spark, so A/B harnesses (tools/fuse_ab.py,
-    tools/route_profile.py) share this exact methodology instead of
-    re-implementing it."""
+    `spark_conf` to build_spark, so A/B harnesses (tools/bench_cell.py,
+    tools/fixed_cost_probe.py) share this exact methodology instead of
+    re-implementing it; per-layer numbers come from
+    `perfbench/run.py --trace 1`."""
     from binlogpipe.session import build_spark
 
     out = f"{out_base}/out_{tag}"
@@ -746,8 +747,9 @@ def main() -> None:
     # is measured ~1h after the pipeline cell (the scaling pairs + sf1
     # block sit between), and this host's throughput swings across that
     # gap — BENCH_r06 flagged every pipeline_* row >1.3x normalized while
-    # the same-window 2x2 matrix (tools/fold_ab.py) showed the new code
-    # FASTER than the old: pure cross-block mis-normalization. Timing
+    # the same-window 2x2 matrix (a fold A/B harness since deleted; see
+    # git history) showed the new code FASTER than the old: pure
+    # cross-block mis-normalization. Timing
     # ANCHOR_QUERY immediately after the main cell gives pipeline_* rows
     # an anchor from THEIR OWN window; delta_table uses it when the
     # previous artifact also carries one.

@@ -10,9 +10,11 @@ parser and read by the rows parsers
 Semantic note (SURVEY §7.3 hard #2): the reference resolves each rows event
 against the *latest preceding* TableMap in file order. Every fixture has at
 most one TableMap per table_id per source, so a plain broadcast join is
-exact; when that is violated the builder keeps the latest-by-log_pos entry
-per (source, table_id), with payload-field tie-breaks so the winner is
-deterministic across runs even on exact log_pos collisions.
+exact; when that is violated ``table_map_dim`` keeps the latest entry per
+(source, table_id) under ``pipeline_table_map_window`` (log_pos desc, then
+doc_id desc), so the winner is deterministic across runs even on exact
+log_pos collisions. The batch DAG, the streaming DAG and the oracle queries
+all call ``table_map_dim``; none builds the dictionary inline.
 """
 
 from __future__ import annotations
@@ -20,59 +22,59 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import parse
+
 
 def pipeline_table_map_window(table_id_col: str = "table_id"):
-    """THE authoritative latest-wins ordering for the pipeline TableMap
-    dimension: (log_pos desc, doc_id desc) per (source, table_id).
-
-    Both DAGs must use this one window or an exact log_pos collision with
-    differing payloads deterministically picks DIFFERENT winners, silently
-    breaking batch/stream parity: the batch pipeline dedups BEFORE
-    decoding (job.py route stage — payload fields don't exist yet, so the
-    key must come from pre-decode columns), and the streaming snapshot
-    (streaming.run_full_available_now) merges prev-snapshot ∪ batch rows.
-    doc_id is present and unique on both sides, which makes the winner
-    deterministic everywhere."""
+    """THE latest-wins ordering for the TableMap dimension: (log_pos desc,
+    doc_id desc) per (source, table_id). ``table_map_dim`` applies it
+    twice — over the raw rows keyed on the JVM ``rows_table_id`` (before
+    decoding, when payload fields do not exist yet) and over the decoded
+    rows, optionally unioned with a previous snapshot. doc_id is present
+    and unique on every input, which makes the winner deterministic."""
     return Window.partitionBy("source", table_id_col).orderBy(
         F.col("log_pos").desc(), F.col("doc_id").desc())
 
 
-def latest_table_map_window():
-    """Deterministic ordering for build_table_map_dim's standalone use
-    (inputs that may carry duplicated DECODED TableMaps without a doc_id
-    column, e.g. the bl_enrich_dim oracle query): log_pos desc, then the
-    FULL payload as tie-breaks — the JSON rendering of
-    (columns_type, null_bits) closes the case of rows that tie on every
-    name/count field but differ in column types, which previously left
-    row_number's winner arbitrary per run. The oracle's dedup orders by
-    the name/count keys only, which is parity-safe: candidates still tied
-    there agree on every field the oracle projects. Inside the pipeline
-    this window is a no-op — both DAGs have already deduped with
-    pipeline_table_map_window, the authoritative key."""
-    return Window.partitionBy("source", "table_id").orderBy(
-        F.col("log_pos").desc(), F.col("schema_name"), F.col("table_name"),
-        F.col("column_count"),
-        F.to_json(F.struct(F.col("columns_type"), F.col("null_bits"))))
+def _latest(df: DataFrame, table_id_col: str = "table_id") -> DataFrame:
+    w = pipeline_table_map_window(table_id_col)
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-def build_table_map_dim(table_map_decoded: DataFrame) -> DataFrame:
-    """Decoded TABLE_MAP sink rows -> broadcastable dimension.
+def table_map_dim(routed: DataFrame, prev: DataFrame | None = None
+                  ) -> DataFrame:
+    """Routed rows (``route.routed_rows`` columns) -> broadcastable TableMap
+    dimension: source, log_pos, doc_id, table_id, schema_name, table_name,
+    column_count, columns_type, null_bits — one row per (source, table_id).
 
-    Input must carry: source, log_pos, table_id, schema_name, table_name,
-    column_count, columns_type, null_bits.
-    Output: one row per (source, table_id), latest by log_pos; ties broken
-    on payload fields so row_number's winner is deterministic (duplicated
-    ingests of the same event tie on IDENTICAL rows, which is harmless).
-    """
-    w = latest_table_map_window()
-    return (
-        table_map_decoded
-        .select("source", "log_pos", "table_id", "schema_name", "table_name",
-                "column_count", "columns_type", "null_bits")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    1. latest raw TABLE_MAP row per (source, rows_table_id) — a JVM window
+       over skinny columns; the u48 key exists even when the payload is
+       corrupt;
+    2. decode only the survivors;
+    3. table_id = coalesce(decoded, rows_table_id), so a corrupt winner
+       stays behind as a TOMBSTONE;
+    4. union ``prev`` (a previous snapshot of this function's output; the
+       streaming DAG's cumulative dimension);
+    5. latest-wins per (source, table_id): a tombstone SHADOWS any older
+       valid entry, so an older TableMap never resurrects in one DAG and
+       not the other. This window also keeps step 6's filter above the
+       decode UDF, so the UDF runs once;
+    6. drop the error rows (the tombstones)."""
+    tm = _latest(routed.filter(F.col("sink") == "TABLE_MAP"),
+                 "rows_table_id")
+    _, udf_factory = parse.DECODERS["TABLE_MAP"]
+    cand = (tm.withColumn("d", udf_factory()(F.col("tokens_bin")))
+            .select("source", "log_pos", "doc_id",
+                    F.coalesce(F.col("d.table_id"),
+                               F.col("rows_table_id")).alias("table_id"),
+                    "d.schema_name", "d.table_name", "d.column_count",
+                    "d.columns_type", "d.null_bits", "d.parse_error"))
+    if prev is not None:
+        # snapshots hold only valid rows -> null parse_error
+        cand = cand.unionByName(prev, allowMissingColumns=True)
+    return (_latest(cand).filter(F.col("parse_error").isNull())
+            .drop("parse_error"))
 
 
 def enrich_rows_events(rows_df: DataFrame, dim: DataFrame) -> DataFrame:

@@ -18,9 +18,11 @@ catalog on a real cluster; the sandbox has no Iceberg jars, and parquet
 keeps identical layout semantics: partition pruning + fan-out writes).
 
 Resumability: each stage is idempotent (overwrite of its own output dir)
-and recorded in ``_checkpoint/state.json`` keyed by run_id + stage name;
-re-running skips completed stages, so a killed job resumes where it
-stopped (BASELINE.json "resumable from snapshot + checkpoint").
+and recorded in ``_checkpoint/state.json`` keyed by run_id + stage name,
+together with the run's input fingerprint; re-running the same input
+skips completed stages, so a killed job resumes where it stopped
+(BASELINE.json "resumable from snapshot + checkpoint"), and resuming with
+a different input or output settings raises.
 """
 
 from __future__ import annotations
@@ -30,22 +32,11 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import aggregate as agg
 from . import enrich, layout, lineage, parse, route
-
-# routed table stores tokens packed as binary (lossless; parquet
-# list<int32> encode was the dominant, non-scaling write cost) plus the
-# JVM-precomputed rows-event table_id join key
-ROUTED_COLS = [
-    "doc_id", "tokens_bin", "n_tok", "source", "timestamp", "event_type",
-    "server_id", "event_size", "log_pos", "flags", "checksum", "sink",
-    "salt", "rows_table_id", "input_partition", "input_pos",
-]
-
-ROWS_SINKS = ("WRITE_ROWS_V2", "UPDATE_ROWS_V2", "DELETE_ROWS_V2")
 
 # Sinks that share a decode schema AND decoder can be written by ONE
 # partitionBy(sink) job instead of one job each, then land in the
@@ -122,7 +113,7 @@ def sink_decode_projection(sink: str, sink_df: DataFrame, dim: DataFrame,
     drops it from the data files, so the per-sink schema after the
     rename is identical to a keep_sink=False write."""
     base = DECODE_BASE_COLS + (["sink"] if keep_sink else [])
-    if sink in ROWS_SINKS:
+    if sink in route.ROWS_SINKS:
         n_images = 2 if sink == "UPDATE_ROWS_V2" else 1
         sink_df = sink_df.withColumnRenamed("rows_table_id", "table_id")
         joined = enrich.enrich_rows_events(sink_df, dim)
@@ -147,18 +138,29 @@ def sink_decode_projection(sink: str, sink_df: DataFrame, dim: DataFrame,
 
 class Checkpoint:
     """Tiny JSON stage ledger; the parquet/Iceberg snapshot is the data
-    checkpoint, this records which stages of a run committed."""
+    checkpoint, this records which stages of a run committed, and the
+    ``input_fingerprint`` of the run that committed them. Resuming a
+    ledger whose fingerprint differs raises instead of skipping stages:
+    the skipped outputs would belong to another input."""
 
-    def __init__(self, out_dir: str, run_id: str):
+    def __init__(self, out_dir: str, run_id: str, fingerprint: str,
+                 resume: bool):
         import threading
 
         self.path = Path(out_dir) / "_checkpoint" / "state.json"
-        self.run_id = run_id
         self._lock = threading.Lock()
-        self.state: dict = {"run_id": run_id, "stages": {}}
-        if self.path.exists():
+        self.state: dict = {"run_id": run_id, "fingerprint": fingerprint,
+                            "stages": {}}
+        if resume and self.path.exists():
             prev = json.loads(self.path.read_text())
-            if prev.get("run_id") == run_id:
+            if prev.get("run_id") == run_id and prev.get("stages"):
+                if prev.get("fingerprint") != fingerprint:
+                    raise ValueError(
+                        f"{out_dir} holds stages of run_id {run_id!r} "
+                        f"committed for a different input or output "
+                        f"settings; resuming would reuse them. Rerun with "
+                        f"--no-resume (resume=False) to overwrite, or use "
+                        f"another --run-id or out dir.")
                 self.state = prev
 
     def done(self, stage: str) -> bool:
@@ -221,6 +223,26 @@ def delete_if_empty(spark: SparkSession, path: str) -> bool:
     if fs.exists(hpath) and len(fs.listStatus(hpath)) == 0:
         return bool(fs.delete(hpath, True))
     return False
+
+
+def input_fingerprint(spark: SparkSession, input_path: str, **args) -> str:
+    """sha256 over the input path, its file listing (names, sizes and
+    mtimes via the scheme-aware Hadoop FS; a glob expands) and the
+    output-shaping ``args`` — what a resumed run must share with the run
+    whose committed stages it skips."""
+    import hashlib
+
+    fs, hpath, _ = _hadoop_fs(spark, str(input_path))
+    files = []
+    for st in fs.globStatus(hpath) or []:
+        it = fs.listFiles(st.getPath(), True)
+        while it.hasNext():
+            f = it.next()
+            files.append((f.getPath().toString(), f.getLen(),
+                          f.getModificationTime()))
+    blob = json.dumps({"input": str(input_path), "files": sorted(files),
+                       **args}, sort_keys=True)
+    return hashlib.sha256(blob.encode()).hexdigest()
 
 
 def read_input(spark: SparkSession, input_path: str,
@@ -294,7 +316,12 @@ def run_pipeline(
 
     If enrich or decode raises, the lineage and aggregate side stages
     still run to completion (and are checkpointed) before the error
-    propagates, so a rerun with the same ``run_id`` skips them."""
+    propagates, so a rerun with the same ``run_id`` skips them.
+
+    ``resume=True`` against a ledger of the same ``run_id`` whose input
+    fingerprint (input listing, ``typed_sinks``, ``sink_format``,
+    ``input_format``) differs raises ValueError; ``resume=False``
+    overwrites."""
     import re as _re
 
     if _re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", str(out_dir)):
@@ -305,9 +332,9 @@ def run_pipeline(
             f"streaming DAG for scheme'd output trees.")
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
-    ck = Checkpoint(out_dir, run_id)
-    if not resume:
-        ck.state["stages"] = {}
+    ck = Checkpoint(out_dir, run_id, input_fingerprint(
+        spark, input_path, typed_sinks=typed_sinks, sink_format=sink_format,
+        input_format=input_format), resume)
     metrics: dict = {"run_id": run_id, "stages": {}}
     t_start = time.time()
 
@@ -317,35 +344,10 @@ def run_pipeline(
     routed_path = str(out / "routed")
     if not (resume and ck.done("route")):
         t0 = time.time()
-        hdr = parse.with_header(src)
-        # ORDER IS LOAD-BEARING: the pack UDF must sit directly on the
-        # with_header projection. Stacking rows_table_id +
-        # spark_partition_id (nondeterministic) + CollectMetrics BELOW the
-        # Python eval node measured 77s vs 9-13s for this same write at 6M
-        # events/local[8] (the Python node then buffers the full wide rows,
-        # tokens array included, while zipping UDF results back).
-        hdr = hdr.withColumn(
-            "tokens_bin", parse.pack_tokens_udf()(F.col("tokens")))
-        # rows events need their u48 table_id as the enrich join key; the
-        # array form is gone downstream of the routed write, so compute it
-        # here (JVM expr, mod.rs:1182-1186)
-        hdr = hdr.withColumn(
-            "rows_table_id",
-            F.when(F.col("sink").isin(*ROWS_SINKS + ("TABLE_MAP",)),
-                   layout.u48le(F.col("tokens"), 19)))
-        # input partition id + within-partition position recorded
-        # pre-shuffle: lineage derives from the routed table afterwards
-        # instead of re-scanning the input, and first/last doc_id must be
-        # POSITIONAL (the id is monotonic within a partition; a
-        # lexicographic min/max over "<stem>/<i>" ids misorders the moment
-        # the index crosses a digit-length boundary)
-        hdr = hdr.withColumn("input_partition", F.spark_partition_id())
-        hdr = hdr.withColumn("input_pos", F.monotonically_increasing_id())
-        obs = lineage.stage_observation("route")
-        hdr = lineage.observe_counts(hdr, obs)
-        routed_df = route.routed(hdr)
-        write_output(routed_df.select(*ROUTED_COLS), sink_format,
-                     routed_path, f"{iceberg_prefix}.routed", ("sink",))
+        obs = Observation("route")
+        rows = lineage.observe_counts(route.routed_rows(src), obs)
+        write_output(route.routed(rows), sink_format, routed_path,
+                     f"{iceberg_prefix}.routed", ("sink",))
         try:
             stage_metrics = {k: (int(v) if v is not None else None)
                              for k, v in obs.get.items()}
@@ -423,22 +425,7 @@ def run_pipeline(
         if resume and ck.done("enrich"):
             return
         t0 = time.time()
-        # dedup BEFORE decoding: keep only the latest TableMap per
-        # (source, table_id) — a JVM window over skinny columns — then run
-        # the Python dictionary decode on the handful of survivors
-        tm_sink = routed_df.filter(F.col("sink") == "TABLE_MAP")
-        # the authoritative latest-wins key, SHARED with the streaming
-        # snapshot (enrich.pipeline_table_map_window): the winner chosen
-        # here is final — build_table_map_dim's payload tie-break below is
-        # a no-op on the single survivor per (source, table_id)
-        w = enrich.pipeline_table_map_window("rows_table_id")
-        latest = (tm_sink.withColumn("_rn", F.row_number().over(w))
-                  .filter(F.col("_rn") == 1).drop("_rn"))
-        schema, udf_factory = parse.DECODERS["TABLE_MAP"]
-        tm = latest.withColumn("d", udf_factory()(F.col("tokens_bin")))
-        tm_decoded = tm.select("source", "log_pos", "d.*")
-        dim = enrich.build_table_map_dim(
-            tm_decoded.filter(F.col("parse_error").isNull()))
+        dim = enrich.table_map_dim(routed_df).drop("doc_id")
         dim.write.mode("overwrite").parquet(dim_path)
         metrics["stages"]["enrich"] = {"wall_sec": round(time.time() - t0, 3)}
         ck.mark("enrich")
@@ -574,7 +561,7 @@ def run_pipeline(
         if sink_format == "parquet" and fold:
             header_only = [s for s in sorted(present)
                            if s not in parse.DECODERS
-                           and s not in ROWS_SINKS]
+                           and s not in route.ROWS_SINKS]
             for members in (*SAME_SCHEMA_GROUPS, tuple(header_only)):
                 g = [s for s in members if s in present]
                 if len(g) > 1:

@@ -79,10 +79,6 @@ def lineage_from_routed(routed_df: DataFrame) -> DataFrame:
     )
 
 
-def stage_observation(name: str) -> Observation:
-    return Observation(name)
-
-
 def observe_counts(df: DataFrame, obs: Observation) -> DataFrame:
     return df.observe(obs, F.count(F.lit(1)).alias("rows"),
                       F.sum("n_tok").alias("tokens"))

@@ -12,7 +12,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import layout
+from . import layout, parse
+
+# routed table stores tokens packed as binary (lossless; parquet
+# list<int32> encode was the dominant, non-scaling write cost) plus the
+# JVM-precomputed rows-event table_id join key
+ROUTED_COLS = [
+    "doc_id", "tokens_bin", "n_tok", "source", "timestamp", "event_type",
+    "server_id", "event_size", "log_pos", "flags", "checksum", "sink",
+    "salt", "rows_table_id", "input_partition", "input_pos",
+]
+
+ROWS_SINKS = ("WRITE_ROWS_V2", "UPDATE_ROWS_V2", "DELETE_ROWS_V2")
 
 
 def salt_expr(sink_col=None, doc_id_col=None):
@@ -28,8 +39,41 @@ def salt_expr(sink_col=None, doc_id_col=None):
     return F.pmod(F.xxhash64(doc_id_col), factor)
 
 
-def routed(df_with_header: DataFrame, shuffle_partitions: int | None = None) -> DataFrame:
-    """Add salt and repartition on (sink, salt) ahead of the fan-out write.
+def routed_rows(df: DataFrame) -> DataFrame:
+    """Contract input rows -> the ROUTED_COLS projection, salt included:
+    header decode, token pack, rows-event table_id, lineage stamps. THE
+    single definition of a routed row, shared by the batch route stage,
+    each streaming micro-batch and the oracle queries."""
+    hdr = parse.with_header(df)
+    # ORDER IS LOAD-BEARING: the pack UDF must sit directly on the
+    # with_header projection. Stacking rows_table_id +
+    # spark_partition_id (nondeterministic) + CollectMetrics BELOW the
+    # Python eval node measured 77s vs 9-13s for this same write at 6M
+    # events/local[8] (the Python node then buffers the full wide rows,
+    # tokens array included, while zipping UDF results back).
+    hdr = hdr.withColumn(
+        "tokens_bin", parse.pack_tokens_udf()(F.col("tokens")))
+    # rows events need their u48 table_id as the enrich join key; the
+    # array form is gone downstream of the routed write, so compute it
+    # here (JVM expr, mod.rs:1182-1186)
+    hdr = hdr.withColumn(
+        "rows_table_id",
+        F.when(F.col("sink").isin(*ROWS_SINKS + ("TABLE_MAP",)),
+               layout.u48le(F.col("tokens"), 19)))
+    # input partition id + within-partition position recorded
+    # pre-shuffle: lineage derives from the routed table afterwards
+    # instead of re-scanning the input, and first/last doc_id must be
+    # POSITIONAL (the id is monotonic within a partition; a
+    # lexicographic min/max over "<stem>/<i>" ids misorders the moment
+    # the index crosses a digit-length boundary)
+    hdr = hdr.withColumn("input_partition", F.spark_partition_id())
+    hdr = hdr.withColumn("input_pos", F.monotonically_increasing_id())
+    hdr = hdr.withColumn("salt", salt_expr())
+    return hdr.select(*ROUTED_COLS)
+
+
+def routed(rows: DataFrame, shuffle_partitions: int | None = None) -> DataFrame:
+    """Repartition routed rows on (sink, salt) ahead of the fan-out write.
 
     One shuffle total for the whole fan-out; per-type typed decodes then
     read partition-pruned slices of the routed table.
@@ -39,9 +83,8 @@ def routed(df_with_header: DataFrame, shuffle_partitions: int | None = None) -> 
     write parallelism (measured 4 tasks for a 240 MB shuffle — 8x
     under-parallelized on 32 cores). An explicit N pins the fan-out width.
     """
-    df = df_with_header.withColumn("salt", salt_expr())
     if shuffle_partitions is None:
-        sc = df.sparkSession.sparkContext
+        sc = rows.sparkSession.sparkContext
         # Floor 8, not 32 (round 7): the width already scales with cores
         # (2x defaultParallelism — 64 at local[32], unchanged there; any
         # real cluster is far above the floor), and the old constant-32
@@ -50,4 +93,4 @@ def routed(df_with_header: DataFrame, shuffle_partitions: int | None = None) -> 
         # paying task+file overhead with no parallelism to gain and
         # handing the decode stage hundreds of tiny pruned reads.
         shuffle_partitions = max(sc.defaultParallelism * 2, 8)
-    return df.repartition(shuffle_partitions, "sink", "salt")
+    return rows.repartition(shuffle_partitions, "sink", "salt")

@@ -6,8 +6,9 @@ source over the same input table (SURVEY §2.1 S4): `readStream` on the
 sequence directory -> identical JVM header/route transforms ->
 watermarked per-sink counts and per-(source, sink) token stats ->
 checkpointed sinks. Batch and stream share the exact transform code
-(parse.with_header / route.salt_expr), so stream results converge to the
-batch goldens when drained with Trigger.AvailableNow.
+(route.routed_rows, enrich.table_map_dim, job.sink_decode_projection), so
+stream results converge to the batch goldens when drained with
+Trigger.AvailableNow.
 
 The wire/replication client itself (handshake, auth, COM_BINLOG_DUMP) is
 deliberately NOT ported — it carries no analytics semantics (SURVEY §3.3)
@@ -175,10 +176,11 @@ def _full_dag_writer(spark: SparkSession, input_dir: str, out_dir: str,
     Connection::recv loop analog); both MUST run the identical process
     fn, or live-follow behavior would silently diverge from the drained
     form the goldens pin. Each
-    micro-batch routes to the routed table, refreshes the TableMap
-    dimension (cumulative latest-wins — a rows event may arrive batches
-    after its TableMap), and appends per-sink typed decodes, reusing the
-    exact batch decoders (parse.DECODERS).
+    micro-batch routes to the routed table (route.routed_rows), refreshes
+    the TableMap dimension by calling enrich.table_map_dim with the
+    previous snapshot (cumulative latest-wins — a rows event may arrive
+    batches after its TableMap), and appends per-sink typed decodes,
+    reusing the exact batch decoders (parse.DECODERS).
 
     Idempotence on retry: every write lands in a `batch=<id>` subdirectory
     with mode=overwrite, so a replayed micro-batch overwrites its own
@@ -195,17 +197,16 @@ def _full_dag_writer(spark: SparkSession, input_dir: str, out_dir: str,
     every trigger. Winner-of-winners equals the global winner, so the
     snapshot chain reproduces the full-history window exactly.
 
-    Batch-parity precondition (same as enrich.build_table_map_dim
-    documents): at most one TableMap per (source, table_id) per stream.
+    Batch-parity precondition (the enrich module's semantic note): at
+    most one TableMap per (source, table_id) per stream.
     A rows event decoded in batch N is never re-decoded if a NEWER
     TableMap for its table arrives in batch M>N, while the batch DAG
     applies global latest-wins — the two agree only under that
     single-TableMap assumption (real replication streams satisfy it per
     binlog file; the fixtures do too)."""
-    from . import enrich, layout
-    from .job import (ROUTED_COLS, ROWS_SINKS, delete_if_empty, delete_path,
-                      list_partition_dirs, list_sink_partitions,
-                      sink_decode_projection)
+    from . import enrich
+    from .job import (delete_if_empty, delete_path, list_partition_dirs,
+                      list_sink_partitions, sink_decode_projection)
 
     # string joins, not pathlib: PurePath collapses the double slash in
     # scheme URIs (hdfs://nn -> hdfs:/nn); every filesystem-metadata op
@@ -237,54 +238,22 @@ def _full_dag_writer(spark: SparkSession, input_dir: str, out_dir: str,
                 # entirely: "empty directory" breaks whole-directory
                 # parquet reads where "absent" would not
                 delete_if_empty(spark, f"{sinks_root}/{s}")
-        hdr = parse.with_header(batch_df)
-        hdr = hdr.withColumn(
-            "tokens_bin", parse.pack_tokens_udf()(F.col("tokens")))
-        hdr = hdr.withColumn(
-            "rows_table_id",
-            F.when(F.col("sink").isin(*ROWS_SINKS + ("TABLE_MAP",)),
-                   layout.u48le(F.col("tokens"), 19)))
-        hdr = hdr.withColumn("input_partition", F.spark_partition_id())
-        hdr = hdr.withColumn("input_pos", F.monotonically_increasing_id())
-        hdr = hdr.withColumn("salt", route.salt_expr())
         routed_batch = f"{routed_root}/batch={batch_id}"
-        (hdr.select(*ROUTED_COLS).write.mode("overwrite")
+        (route.routed_rows(batch_df).write.mode("overwrite")
             .partitionBy("sink").parquet(routed_batch))
 
-        # Incremental cumulative dim, mirroring the batch pipeline's
-        # build order EXACTLY: (1) latest-wins over RAW TableMaps per
-        # (source, rows_table_id) — the JVM u48 key exists even when the
-        # payload is corrupt; (2) decode only the survivors; (3) a corrupt
-        # winner becomes a TOMBSTONE carried into the cumulative union so
-        # it SHADOWS any older valid entry (the batch DAG's global
-        # latest-wins also yields no dim entry when the newest TableMap is
-        # corrupt — an older TableMap must not resurrect in one DAG and
-        # not the other); (4) tombstones drop after the final window.
+        # Incremental cumulative dim: enrich.table_map_dim over this
+        # batch's routed rows with the previous snapshot unioned in, so a
+        # corrupt newest TableMap is carried as a tombstone that SHADOWS
+        # an older valid entry exactly as the batch DAG's global
+        # latest-wins does.
         batch_routed = spark.read.option(
             "basePath", routed_root).parquet(routed_batch)
-        tm_raw = batch_routed.filter(F.col("sink") == "TABLE_MAP")
-        w_raw = enrich.pipeline_table_map_window("rows_table_id")
-        latest_raw = (tm_raw.withColumn("_rn", F.row_number().over(w_raw))
-                      .filter(F.col("_rn") == 1).drop("_rn"))
-        schema, factory = parse.DECODERS["TABLE_MAP"]
-        cand = (latest_raw.withColumn("d", factory()(F.col("tokens_bin")))
-                .select("source", "log_pos", "doc_id", "rows_table_id",
-                        "d.*")
-                .select("source", "log_pos", "doc_id",
-                        F.coalesce(F.col("table_id"),
-                                   F.col("rows_table_id")).alias("table_id"),
-                        "schema_name", "table_name", "column_count",
-                        "columns_type", "null_bits", "parse_error"))
         prior = [int(v) for v in list_partition_dirs(spark, dim_root, "v=")
                  if v.isdigit() and int(v) < batch_id]
-        if prior:
-            prev = spark.read.parquet(f"{dim_root}/v={max(prior)}")
-            # prev snapshots hold only valid rows -> null parse_error
-            cand = cand.unionByName(prev, allowMissingColumns=True)
-        w = enrich.pipeline_table_map_window()
-        snap = (cand.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn")
-                .filter(F.col("parse_error").isNull()).drop("parse_error"))
+        prev = (spark.read.parquet(f"{dim_root}/v={max(prior)}")
+                if prior else None)
+        snap = enrich.table_map_dim(batch_routed, prev)
         snap_path = f"{dim_root}/v={batch_id}"
         snap.write.mode("overwrite").parquet(snap_path)
         dim = spark.read.parquet(snap_path).drop("doc_id")

@@ -130,6 +130,25 @@ def test_checkpoint_resume(spark, fixture_parquet, tmp_path):
     assert spark.read.parquet(str(out / "agg" / "sink_counts")).count() == 18
 
 
+def test_resume_refuses_another_inputs_output(spark, fixture_parquet,
+                                              tmp_path):
+    """Resuming a run_id whose ledger was committed for a DIFFERENT input
+    must refuse, not skip every stage and report the other input's rows;
+    resume=False reruns the stages on the new input."""
+    from binlogpipe.job import run_pipeline
+
+    rare = str(Path(fixture_parquet).with_name("rare_events.parquet"))
+    out = str(tmp_path / "out")
+    assert run_pipeline(spark, fixture_parquet, out, run_id="cli")["rows"] == 166
+    with pytest.raises(ValueError, match="--no-resume"):
+        run_pipeline(spark, rare, out, run_id="cli")
+    m = run_pipeline(spark, rare, out, run_id="cli", resume=False)
+    assert m["rows"] == 34 and "route" in m["stages"]
+    assert spark.read.parquet(f"{out}/routed").count() == 34
+    # the ledger now records the rare input: resuming it skips every stage
+    assert run_pipeline(spark, rare, out, run_id="cli")["stages"] == {}
+
+
 def test_compact_sink(spark, fixture_parquet, tmp_path):
     from binlogpipe.job import compact_sink, run_pipeline
 
@@ -290,8 +309,7 @@ def test_metrics_failure_does_not_fake_empty_input(
         def get(self):
             raise RuntimeError("transient metrics failure")
 
-    monkeypatch.setattr(lineage, "stage_observation",
-                        lambda name: _BoomObs())
+    monkeypatch.setattr(job, "Observation", lambda name: _BoomObs())
     monkeypatch.setattr(lineage, "observe_counts", lambda df, obs: df)
     m = job.run_pipeline(spark, fixture_parquet, str(tmp_path / "out"),
                          run_id="metrics-boom")
@@ -313,7 +331,7 @@ def test_side_stages_complete_when_enrich_fails(spark, fixture_parquet,
     def boom(_):
         raise RuntimeError("injected enrich failure")
 
-    monkeypatch.setattr(enrich, "build_table_map_dim", boom)
+    monkeypatch.setattr(enrich, "table_map_dim", boom)
     out = tmp_path / "out"
     with pytest.raises(RuntimeError, match="injected enrich failure"):
         job.run_pipeline(spark, fixture_parquet, str(out), run_id="side")

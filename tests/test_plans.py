@@ -72,7 +72,8 @@ def test_salting_defuses_hot_type_skew(spark, tmp_path):
         return max(sizes) / n_total
 
     unsalted = max_share(hdr.repartition(64, "sink"))
-    salted = max_share(route.routed(hdr, shuffle_partitions=64))
+    salted = max_share(route.routed(hdr.withColumn("salt", route.salt_expr()),
+                                    shuffle_partitions=64))
     assert unsalted >= 38 / 166 * 0.9  # QUERY-sized straggler partition
     assert salted < unsalted / 2
     assert salted <= 0.08, salted  # no task holds >8% of the data
@@ -172,27 +173,29 @@ def test_engine_defaults_emit_no_global_sort(spark):
 
 
 def test_routed_write_plan_has_single_python_crossing(spark, fixture_parquet):
-    """The FULL routed-write plan (with_header -> pack -> rows_table_id ->
-    lineage stamps -> salted repartition -> routed projection) must contain
-    exactly ONE Python evaluation node — the pack UDF. A second crossing
-    (or a plan shape that re-evaluates the UDF per branch) is the
-    non-scaling term the round-3 scaling analysis identified."""
-    from binlogpipe import job, layout, route
+    """The FULL routed-write plan (route.routed_rows -> salted repartition,
+    the projection both DAGs write) must contain exactly ONE Python
+    evaluation node — the pack UDF. A second crossing (or a plan shape
+    that re-evaluates the UDF per branch) is the non-scaling term the
+    round-3 scaling analysis identified."""
+    from binlogpipe import route
 
-    hdr = parse.with_header(spark.read.parquet(fixture_parquet))
-    hdr = hdr.withColumn("tokens_bin", parse.pack_tokens_udf()(F.col("tokens")))
-    hdr = hdr.withColumn(
-        "rows_table_id",
-        F.when(F.col("sink").isin(*job.ROWS_SINKS + ("TABLE_MAP",)),
-               layout.u48le(F.col("tokens"), 19)))
-    hdr = hdr.withColumn("input_partition", F.spark_partition_id())
-    hdr = hdr.withColumn("input_pos", F.monotonically_increasing_id())
-    routed = route.routed(hdr).select(*job.ROUTED_COLS)
+    routed = route.routed(route.routed_rows(spark.read.parquet(fixture_parquet)))
     plan = _plan(routed)
     assert plan.count("ArrowEvalPython") == 1, plan
     for marker in ("BatchEvalPython", "MapInPandas",
                    "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas"):
         assert marker not in plan, f"{marker} in routed write plan:\n{plan}"
+
+
+def test_table_map_dim_decodes_once(spark, pipeline_out):
+    """The batch dictionary build decodes each surviving TableMap ONCE:
+    the parse_error filter must stay above the decode projection (the
+    final latest-wins window keeps it there). A filter pushed below the
+    projection evaluates the decode UDF a second time for the predicate."""
+    routed = spark.read.parquet(f"{pipeline_out['out']}/routed")
+    plan = _plan(enrich.table_map_dim(routed))
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_analytic_queries_push_filters_and_prune_columns(spark):

@@ -200,12 +200,10 @@ def test_stream_batch0_wipes_stale_outputs(spark, fixture_parquet, tmp_path):
 def test_stream_dim_tiebreak_matches_batch(spark):
     """ADVICE pin: on an exact log_pos collision with differing payloads
     the streaming snapshot and the batch pipeline must pick the SAME
-    winner. The authoritative key is enrich.pipeline_table_map_window
-    (log_pos desc, doc_id desc) — used verbatim by BOTH the batch
-    route-stage pre-decode dedup (job.py) and the streaming snapshot, so
-    parity is structural; this pins its winner. build_table_map_dim's
-    payload tie-break is a separate standalone-use contract (its pipeline
-    input is already deduped) and is pinned alongside."""
+    winner. The key is enrich.pipeline_table_map_window (log_pos desc,
+    doc_id desc), applied by enrich.table_map_dim — the one dictionary
+    builder BOTH DAGs call — so parity is structural; this pins its
+    winner."""
     from pyspark.sql import functions as SF
 
     from binlogpipe import enrich
@@ -220,15 +218,6 @@ def test_stream_dim_tiebreak_matches_batch(spark):
            .filter(SF.col("_rn") == 1).collect())
     # highest doc_id wins on a log_pos tie — in both DAGs by construction
     assert len(got) == 1 and got[0]["doc_id"] == "x/2"
-
-    dim_rows = [("s", 100, 5, "db_b", "t_b", 2, [3, 3], [0]),
-                ("s", 100, 5, "db_a", "t_a", 1, [3], [0])]
-    dim_cols = ("source string, log_pos long, table_id long, "
-                "schema_name string, table_name string, column_count int, "
-                "columns_type array<int>, null_bits array<int>")
-    got2 = enrich.build_table_map_dim(
-        spark.createDataFrame(dim_rows, dim_cols)).collect()
-    assert len(got2) == 1 and got2[0]["schema_name"] == "db_a"
 
 
 def test_corrupt_latest_tablemap_tombstones_in_both_dags(

@@ -101,7 +101,8 @@ def probe_jvmdag(cores: int) -> float:
         for _ in range(2):
             t0 = time.time()
             hdr = parse.with_header(src)
-            r = route.routed(hdr).drop("tokens")
+            r = route.routed(hdr.withColumn("salt", route.salt_expr())).drop(
+                "tokens")
             (r.groupBy("source", "sink")
               .agg(F.count("*").alias("n"), F.sum("n_tok").alias("tokens"),
                    F.min("log_pos"), F.max("log_pos"))
