@@ -321,7 +321,8 @@ def run_pipeline(
     ``resume=True`` against a ledger of the same ``run_id`` whose input
     fingerprint (input listing, ``typed_sinks``, ``sink_format``,
     ``input_format``) differs raises ValueError; ``resume=False``
-    overwrites."""
+    overwrites. ``metrics["resumed"]`` names the stages this call
+    skipped because the ledger already held them."""
     import re as _re
 
     if _re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", str(out_dir)):
@@ -335,7 +336,10 @@ def run_pipeline(
     ck = Checkpoint(out_dir, run_id, input_fingerprint(
         spark, input_path, typed_sinks=typed_sinks, sink_format=sink_format,
         input_format=input_format), resume)
-    metrics: dict = {"run_id": run_id, "stages": {}}
+    # a stage whose ledger mark predates this call is skipped, not rerun
+    metrics: dict = {"run_id": run_id, "resumed": [
+        s for s in ("route", "lineage", "aggregate", "enrich", "decode")
+        if resume and ck.done(s)], "stages": {}}
     t_start = time.time()
 
     src = read_input(spark, input_path, input_format)
@@ -598,12 +602,10 @@ def run_pipeline(
         f.result()
 
     metrics["wall_sec"] = round(time.time() - t_start, 3)
-    n_in = metrics.get("stages", {}).get("route", {}).get("rows")
-    if n_in is None:
-        n_in = routed_df.count()
-        metrics["rows"] = n_in
-    else:
-        metrics["rows"] = n_in
+    # the ledger's route count (this call's or the resumed run's); scan
+    # the routed table only when a metrics failure left it unknown
+    n_in = route_rows if route_rows is not None else routed_df.count()
+    metrics["rows"] = n_in
     metrics["rows_per_sec"] = round(n_in / metrics["wall_sec"], 1)
     if collect_metrics:
         (out / "metrics.json").write_text(json.dumps(metrics, indent=1))

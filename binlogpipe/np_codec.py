@@ -49,8 +49,8 @@ def u48(buf: bytes, off: int) -> tuple[int, int]:
 
 def u64(buf: bytes, off: int) -> tuple[int, int]:
     """64-bit little-endian read, wrapped two's-complement to i64: the sink
-    columns are Spark LongType, and the vectorized path (_FlatBatch.u /
-    _u64_col, uint64 acc .view(int64)) wraps the same way — an unsigned
+    columns are Spark LongType, and the vectorized path (_FlatBatch.u,
+    uint64 acc .view(int64)) wraps the same way — an unsigned
     Python int >= 2^63 here would fail the pandas->Arrow conversion and
     quarantine the row only on the scalar path, diverging from vectorized."""
     return int.from_bytes(_take(buf, off, 8), "little", signed=True), off + 8

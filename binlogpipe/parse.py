@@ -3,9 +3,13 @@ payload decoders (Arrow-batched UDFs).
 
 Each decoder re-implements the semantics of the matching reference parser in
 `/root/reference/crates/old/src/events/mod.rs` (file:line cited per
-function). All heavy decode runs batch-at-a-time over Arrow (no row-at-a-time
-Spark UDFs); fixed-layout arithmetic uses ``int.from_bytes``/numpy, strings
-use lossy UTF-8 exactly like the reference (utils.rs:66,75,87,94).
+function). Every payload decoder, the rows decoder included, is a Spark
+arrow_udf built by ``_rowwise`` over one input form: the tokens batch
+(packed binary, or the contract array<int32>) becomes a ``_FlatBatch`` over
+packed-binary buffers, a whole-batch numpy fast path decodes it where one
+exists, and ``_decode_frame``'s per-row loop decodes the rest. No
+row-at-a-time Spark UDFs; strings use lossy UTF-8 exactly like the
+reference (utils.rs:66,75,87,94).
 
 Decode errors never panic an executor (the reference `unreachable!()`s,
 mod.rs:405-415): every decode struct carries a ``parse_error`` field, and the
@@ -97,12 +101,14 @@ def _struct_with_error(fields: list[T.StructField]) -> T.StructType:
     return T.StructType(fields + [T.StructField("parse_error", T.StringType())])
 
 
-def _decode_frame(tokens: pd.Series, names: list[str],
-                  fn: Callable[[bytes], dict],
-                  vectorized: Callable | None) -> pd.DataFrame:
+def _decode_frame(tokens: _FlatBatch, names: list[str],
+                  fn: Callable[..., dict], vectorized: Callable | None,
+                  *extra: list) -> pd.DataFrame:
     """One Arrow batch -> decoded DataFrame: the whole-batch numpy fast
     path when available (returns None to refuse a batch), else the scalar
-    per-row loop whose try/except turns a bad row into a parse_error row."""
+    per-row loop whose try/except turns a bad row into a parse_error row.
+    Each row calls ``fn(row_bytes, *row_extra)``, with one value per
+    `extra` column (the rows decoder's ``columns_type``)."""
     if vectorized is not None:
         try:
             out = vectorized(tokens)
@@ -113,9 +119,9 @@ def _decode_frame(tokens: pd.Series, names: list[str],
         if out is not None:
             return out
     cols: dict[str, list] = {n: [] for n in names}
-    for t in tokens:
+    for args in zip(tokens, *extra):
         try:
-            r = fn(c.tokens_to_bytes(t))
+            r = fn(*args)
             r["parse_error"] = None
         except Exception as e:  # noqa: BLE001 — quarantine, don't panic
             r = dict.fromkeys(names)
@@ -130,25 +136,26 @@ def _decode_frame(tokens: pd.Series, names: list[str],
         columns=names)
 
 
-def _arrow_tokens(arr):
-    """One arrow_udf input batch of the tokens column -> the form
-    _decode_frame consumes: a _FlatBatch over the batch's own buffers for
-    the packed-binary fast path (zero per-row materialization), else a
-    pd.Series of the rows (array<int32> inputs, nulls)."""
+def _arrow_tokens(arr) -> _FlatBatch:
+    """One arrow_udf input batch of the tokens column -> the one form
+    every decoder consumes: a _FlatBatch over packed-binary buffers.
+    Any input goes through _pack_arrow_array first (the route stage's
+    pack: list<int32> is one whole-batch cast, a null cell becomes b""),
+    so the fast paths and the per-row loop see a single type."""
     import numpy as np
 
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if pa.types.is_binary(arr.type) and arr.null_count == 0 and len(arr):
-        off0 = arr.offset
-        offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-            off0:off0 + len(arr) + 1].astype(np.int64)
-        base = offs[0]
-        offs = offs - base
-        flat = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[
-            base:base + int(offs[-1])]
-        return _FlatBatch(flat, None, offs[:-1], np.diff(offs))
-    return arr.to_pandas()
+    n = len(arr)
+    if n == 0:  # an empty IPC batch may carry no offsets buffer at all
+        empty = np.empty(0, dtype=np.int64)
+        return _FlatBatch(np.empty(0, dtype=np.uint8), empty, empty)
+    arr = _pack_arrow_array(arr)
+    _, offs_buf, data_buf = arr.buffers()
+    offs = np.frombuffer(offs_buf, dtype=np.int32)[
+        arr.offset:arr.offset + n + 1].astype(np.int64)
+    base = offs[0]
+    offs -= base
+    flat = np.frombuffer(data_buf, dtype=np.uint8)[base:base + int(offs[-1])]
+    return _FlatBatch(flat, offs[:-1], np.diff(offs))
 
 
 def _frame_to_struct(frame: pd.DataFrame, schema: T.StructType):
@@ -165,25 +172,31 @@ def _frame_to_struct(frame: pd.DataFrame, schema: T.StructType):
                                       names=[f.name for f in schema.fields])
 
 
-def _rowwise(schema: T.StructType, fn: Callable[[bytes], dict],
+def _rowwise(schema: T.StructType, fn: Callable[..., dict],
              vectorized: Callable | None = None):
     """Wrap a per-event ``bytes -> dict`` decoder as a Spark 4.1 arrow_udf
-    returning ``schema`` (+ parse_error). The binary tokens batch feeds
-    _FlatBatch straight from the Arrow buffers (no per-row bytes on
-    input, no pandas round-trip on output). The Python loop is per Arrow
-    batch, never per Spark row; records accumulate columnar (dict-of-lists —
-    pd.DataFrame from columns is several times faster than from row dicts).
+    returning ``schema`` (+ parse_error). Every decoder is built here: the
+    tokens batch becomes one _FlatBatch (_arrow_tokens; no pandas
+    round-trip on input or output) and _decode_frame runs the one per-row
+    loop. The Python loop is per Arrow batch, never per Spark row; records
+    accumulate columnar (dict-of-lists — pd.DataFrame from columns is
+    several times faster than from row dicts).
 
     `vectorized`, when given, is a whole-batch numpy fast path; it returns a
-    DataFrame or None to fall back to the loop (e.g. mixed event sizes)."""
+    DataFrame or None to fall back to the loop (e.g. mixed event sizes).
+    Columns after the tokens column (the rows decoder's ``columns_type``)
+    reach ``fn`` as extra per-row values, converted by Arrow's C++
+    ``to_numpy`` (``to_pylist`` boxes every nested scalar: ~3x slower on a
+    columns_type batch)."""
     from pyspark.sql.functions import arrow_udf
 
     names = [f.name for f in schema.fields]
 
     @arrow_udf(schema)
-    def audf(tokens: pa.Array) -> pa.Array:
+    def audf(tokens: pa.Array, *extra: pa.Array) -> pa.Array:
         return _frame_to_struct(
-            _decode_frame(_arrow_tokens(tokens), names, fn, vectorized),
+            _decode_frame(_arrow_tokens(tokens), names, fn, vectorized,
+                          *(e.to_numpy(zero_copy_only=False) for e in extra)),
             schema)
 
     return audf
@@ -248,46 +261,9 @@ def unpack_tokens_udf():
 # whole-batch numpy fast paths for hot fixed-layout events
 # ---------------------------------------------------------------------------
 
-def _stack_fixed(tokens, size: int):
-    """(n, size) uint8-ish int64 matrix if every event is exactly `size`
-    bytes, else None (mixed sizes -> scalar fallback). Accepts array<int32>
-    rows, packed-binary rows, or a prebuilt _FlatBatch (arrow_udf path —
-    the rows are contiguous in `flat`, so the matrix is one reshape)."""
-    import numpy as np
-
-    if isinstance(tokens, _FlatBatch):
-        fb = tokens
-        if fb.n == 0 or not bool((fb.lens == size).all()):
-            return None
-        start = int(fb.offs[0])
-        return (fb.flat[start:start + fb.n * size]
-                .astype(np.int64).reshape(fb.n, size))
-    arrs = tokens.values
-    if len(arrs) == 0:
-        return None
-    for a in arrs:
-        if len(a) != size:
-            return None
-    if isinstance(arrs[0], (bytes, bytearray)):
-        flat = np.frombuffer(b"".join(arrs), dtype=np.uint8)
-        return flat.astype(np.int64).reshape(len(arrs), size)
-    return np.stack([np.asarray(a, dtype=np.int64) for a in arrs])
-
-
-def _u64_col(m, off: int):
-    """Vectorized u64le -> int64 (two's-complement wraparound like the
-    reference's i64 reads)."""
-    import numpy as np
-
-    acc = np.zeros(m.shape[0], dtype=np.uint64)
-    for k in range(8):
-        acc += m[:, off + k].astype(np.uint64) << np.uint64(8 * k)
-    return acc.view(np.int64)
-
-
-def _gtid_vectorized(tokens: pd.Series):
+def _gtid_vectorized(tokens: _FlatBatch):
     """GTID/AnonymousGtid events are a fixed 65-byte layout
-    (19 hdr + 1 + 16 + 8 + 1 + 8 + 8 + 4 crc) — full matrix decode.
+    (19 hdr + 1 + 16 + 8 + 1 + 8 + 8 + 4 crc) — column gathers.
 
     The decimal-rendered source_id/transaction_id strings are built per
     *unique* (source_id ‖ txn_id) byte pattern and gathered back (dictionary
@@ -295,38 +271,38 @@ def _gtid_vectorized(tokens: pd.Series):
     construction drops out of the per-row cost entirely."""
     import numpy as np
 
-    m = _stack_fixed(tokens, 65)
-    if m is None:
+    fl = _flat_batch(tokens, 65)
+    if fl is None or bool((fl.lens != 65).any()):
         return None
-    ids = np.ascontiguousarray(m[:, 20:44])
+    ids = fl.flat[fl.offs[:, None] + np.arange(H + 1, H + 25)]
     uniq, inv = np.unique(ids, axis=0, return_inverse=True)
     src_u = np.empty(len(uniq), dtype=object)
     txn_u = np.empty(len(uniq), dtype=object)
     for i, row in enumerate(uniq):
-        b = bytes(int(x) for x in row)
+        b = row.tobytes()
         src_u[i] = "-".join(
             c.byte_decimal_concat(b[a:e])
             for a, e in ((0, 4), (4, 6), (6, 8), (8, 10), (10, 16)))
         txn_u[i] = c.byte_decimal_concat(b[16:24])
     return pd.DataFrame({
-        "rbr_only": m[:, 19] == 0,
+        "rbr_only": fl.flat[fl.offs + H] == 0,
         "source_id": src_u[inv],
         "transaction_id": txn_u[inv],
-        "ts_type": m[:, 44].astype(np.int32),
-        "last_committed": _u64_col(m, 45),
-        "sequence_number": _u64_col(m, 53),
+        "ts_type": fl.u(H + 25, 1).astype(np.int32),
+        "last_committed": fl.u(H + 26, 8),
+        "sequence_number": fl.u(H + 34, 8),
         "parse_error": None,
     })
 
 
-def _xid_vectorized(tokens: pd.Series):
-    m = _stack_fixed(tokens, 31)  # 19 + 8 + 4
-    if m is None:
+def _xid_vectorized(tokens: _FlatBatch):
+    fl = _flat_batch(tokens, H + 8 + 4)
+    if fl is None or bool((fl.lens != H + 8 + 4).any()):
         return None
-    return pd.DataFrame({"xid": _u64_col(m, 19), "parse_error": None})
+    return pd.DataFrame({"xid": fl.u(H, 8), "parse_error": None})
 
 
-def _intvar_vectorized(tokens: pd.Series):
+def _intvar_vectorized(tokens: _FlatBatch):
     """IntVar event, whole-batch (mod.rs:537-554): type byte + u64. A
     batch containing any unknown type byte bails to the scalar path,
     which owns the per-row error semantics."""
@@ -344,7 +320,7 @@ def _intvar_vectorized(tokens: pd.Series):
                          "parse_error": None})
 
 
-def _rand_vectorized(tokens: pd.Series):
+def _rand_vectorized(tokens: _FlatBatch):
     """Rand event, whole-batch (mod.rs:773-784): two u64 seeds."""
     fl = _flat_batch(tokens, H + 16)
     if fl is None:
@@ -353,7 +329,7 @@ def _rand_vectorized(tokens: pd.Series):
                          "parse_error": None})
 
 
-def _file_id16_vectorized(tokens: pd.Series):
+def _file_id16_vectorized(tokens: _FlatBatch):
     """ExecLoad/DeleteFile body, whole-batch (mod.rs:698-718): one u16."""
     fl = _flat_batch(tokens, H + 2)
     if fl is None:
@@ -373,12 +349,11 @@ def _file_id16_vectorized(tokens: pd.Series):
 class _FlatBatch:
     __slots__ = ("flat", "_buf", "offs", "lens", "n")
 
-    def __init__(self, flat, buf, offs, lens):
+    def __init__(self, flat, offs, lens):
         self.flat = flat      # np.uint8 view of the whole batch
-        self._buf = buf       # the same bytes (for cheap per-row slicing);
-                              # None = materialize lazily from `flat` (the
-                              # arrow_udf path — fixed-layout decoders then
-                              # never pay the batch copy at all)
+        self._buf = None      # the same bytes (for cheap per-row slicing),
+                              # materialized on first use — fixed-layout
+                              # decoders never pay the batch copy at all
         self.offs = offs      # int64 start offset of each row
         self.lens = lens      # int64 length of each row
         self.n = len(offs)
@@ -409,31 +384,13 @@ class _FlatBatch:
         return acc.view(np.int64) if width == 8 else acc.astype(np.int64)
 
 
-def _flat_batch(tokens, min_len: int):
-    """Build a _FlatBatch over packed-binary rows, or None when the batch
-    is empty / in contract array<int32> form / contains any row shorter
+def _flat_batch(fb: _FlatBatch, min_len: int):
+    """`fb`, or None when the batch is empty or contains any row shorter
     than `min_len` (those batches take the scalar fallback, which carries
-    per-row try/except quarantine semantics). A prebuilt _FlatBatch (the
-    arrow_udf input path) passes straight through the same gates."""
-    import numpy as np
-
-    if isinstance(tokens, _FlatBatch):
-        if tokens.n == 0 or int(tokens.lens.min()) < min_len:
-            return None
-        return tokens
-    vals = tokens.values
-    n = len(vals)
-    if n == 0 or not isinstance(vals[0], (bytes, bytearray)):
+    per-row try/except quarantine semantics)."""
+    if fb.n == 0 or int(fb.lens.min()) < min_len:
         return None
-    lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=n)
-    if int(lens.min()) < min_len:
-        return None
-    buf = b"".join(vals)
-    offs = np.empty(n + 1, dtype=np.int64)
-    offs[0] = 0
-    np.cumsum(lens, out=offs[1:])
-    flat = np.frombuffer(buf, dtype=np.uint8)
-    return _FlatBatch(flat, buf, offs[:-1], lens)
+    return fb
 
 
 def _mask_errors(cols: dict, err: list):
@@ -454,7 +411,7 @@ def _mask_errors(cols: dict, err: list):
     return pd.DataFrame(cols)
 
 
-def _query_vectorized(tokens: pd.Series):
+def _query_vectorized(tokens: _FlatBatch):
     """Query event, whole-batch (mod.rs:469-514): the 13-byte fixed prefix
     decodes as five numpy gathers; the status-vars block stays memoized per
     distinct byte pattern; schema/query are per-row slices of the flat
@@ -503,7 +460,7 @@ def _query_vectorized(tokens: pd.Series):
     }, err)
 
 
-def _rotate_vectorized(tokens: pd.Series):
+def _rotate_vectorized(tokens: _FlatBatch):
     """Rotate event, whole-batch (mod.rs:521-535)."""
     fl = _flat_batch(tokens, H + 8 + 4)
     if fl is None:
@@ -520,7 +477,7 @@ def _rotate_vectorized(tokens: pd.Series):
                          "parse_error": None})
 
 
-def _rows_query_vectorized(tokens: pd.Series):
+def _rows_query_vectorized(tokens: _FlatBatch):
     """RowsQuery event, whole-batch (mod.rs:1048-1061)."""
     fl = _flat_batch(tokens, H + 1)
     if fl is None:
@@ -537,7 +494,7 @@ def _rows_query_vectorized(tokens: pd.Series):
                          "parse_error": None})
 
 
-def _user_var_vectorized(tokens: pd.Series):
+def _user_var_vectorized(tokens: _FlatBatch):
     """UserVar event, whole-batch (mod.rs:797-858): name_length is the one
     fixed u32 gather; after the per-row name, the is_null byte splits the
     batch into the two fixed layouts — NULL (nothing follows) and value
@@ -608,7 +565,7 @@ def _user_var_vectorized(tokens: pd.Series):
         "value_flags": value_flags, "parse_error": None})
 
 
-def _format_desc_vectorized(tokens: pd.Series):
+def _format_desc_vectorized(tokens: _FlatBatch):
     """FormatDescription event, whole-batch (mod.rs:860-882).
     supported_types returns int32 numpy slices (Arrow accepts ndarray cells
     for array<int> columns — no per-row Python list build)."""
@@ -639,7 +596,7 @@ def _format_desc_vectorized(tokens: pd.Series):
     })
 
 
-def _prev_gtids_vectorized(tokens: pd.Series):
+def _prev_gtids_vectorized(tokens: _FlatBatch):
     """PreviousGtids event, whole-batch (mod.rs:1164-1177)."""
     import numpy as np
 
@@ -1115,23 +1072,20 @@ def _decode_table_map_cached(buf: bytes) -> dict:
     return decode_table_map_py(buf)
 
 
-def _table_map_vectorized(tokens):
+def _table_map_vectorized(tokens: _FlatBatch):
     """Whole-batch TableMap decode via per-unique-payload memoization.
-    Real binlogs repeat a byte-identical TableMap ahead of every rows
-    event of the same table (decode_table_map_memo's legitimacy argument)
-    — a 20k-row batch holds only a handful of distinct payloads, so
+    Real binlogs emit a byte-identical TableMap ahead of every rows event
+    of the same table (the event IS the schema dictionary, mod.rs:23-26),
+    so distinct payloads are bounded by live (table, schema-version) pairs
+    — the same legitimacy argument as the status-vars memo
+    (_status_vars_json); whole-payload memoization of other event types
+    would merely game the synthetic bench. A 20k-row batch holds only a handful of distinct payloads, so
     decode each once and gather columns back instead of paying the
     per-row lru lookup + dict copy + per-field append (measured 7.0s of
     the pinned 1-core decode stage at 6M events, round-7 profile).
     Per-payload errors keep scalar-path parity: the same decoder raises
     the same exception text, nulling every field of the affected rows."""
-    if isinstance(tokens, _FlatBatch):
-        rows = list(tokens)
-    else:
-        vals = tokens.values
-        if len(vals) == 0 or not isinstance(vals[0], (bytes, bytearray)):
-            return None
-        rows = [bytes(v) for v in vals]
+    rows = list(tokens)
     if not rows:
         return None
     names = [f.name for f in TABLE_MAP_SCHEMA.fields]
@@ -1152,17 +1106,6 @@ def _table_map_vectorized(tokens):
             cols[n].append(d[n])
     return pd.DataFrame(
         {n: pd.Series(cols[n], dtype=object) for n in names}, columns=names)
-
-
-def decode_table_map_memo(buf: bytes) -> dict:
-    """Memoized TableMap decode. Real binlogs emit a byte-identical
-    TableMap ahead of every rows event of the same table (the event IS the
-    schema dictionary, mod.rs:23-26), so distinct payloads are bounded by
-    live (table, schema-version) pairs — same legitimacy argument as the
-    status-vars memo (_status_vars_json). Whole-payload memoization of
-    other event types would merely game the synthetic bench; don't.
-    Shallow copy because _rowwise mutates the result (parse_error)."""
-    return dict(_decode_table_map_cached(buf))
 
 
 def decode_table_map_py(buf: bytes) -> dict:
@@ -1521,100 +1464,65 @@ def decode_rows_py(buf: bytes, col_defs: list[tuple[int, list[int]]],
     }
 
 
-def _coerce_col_defs(defs) -> list[tuple[int, list[int]]]:
-    """columns_type arrives from Arrow as list of dicts/Rows; normalize."""
-    out = []
-    for d in defs:
-        if isinstance(d, dict):
-            out.append((int(d["type_id"]), [int(x) for x in d["meta"]]))
-        else:  # pyspark Row
-            out.append((int(d.type_id), [int(x) for x in d.meta]))
-    return out
+def _decode_rows_event(buf: bytes, defs, n_images: int) -> dict:
+    """One rows event with its enriched ``columns_type``: an array of
+    ``{type_id, meta}`` dicts with ``meta`` an int32 ndarray (Arrow
+    ``to_numpy``), or None when the broadcast join found no TableMap for
+    the event's table_id."""
+    if defs is None:
+        raise ValueError("no table-map entry for table_id")
+    return decode_rows_py(
+        buf, [(d["type_id"], d["meta"].tolist()) for d in defs], n_images)
 
 
 def make_rows_udf(n_images: int):
-    names = [f.name for f in ROWS_SCHEMA.fields]
-
-    @pandas_udf(ROWS_SCHEMA)
-    def udf(tokens: pd.Series, col_defs: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {n: [] for n in names}
-        for t, defs in zip(tokens, col_defs):
-            try:
-                if defs is None:
-                    raise ValueError("no table-map entry for table_id")
-                r = decode_rows_py(c.tokens_to_bytes(t), _coerce_col_defs(defs),
-                                   n_images)
-                r["parse_error"] = None
-            except Exception as e:  # noqa: BLE001
-                r = dict.fromkeys(names)
-                r["parse_error"] = f"{type(e).__name__}: {e}"
-            for n in names:
-                cols[n].append(r[n])
-        return pd.DataFrame(cols, columns=names)
-
-    return udf
+    """Rows decoder: an arrow_udf over (tokens, columns_type) built by
+    _rowwise like every other decoder; its per-row loop is _decode_frame's."""
+    return _rowwise(ROWS_SCHEMA, _functools.partial(
+        _decode_rows_event, n_images=n_images))
 
 
 # ---------------------------------------------------------------------------
 # decoder registry: sink name -> (schema, arrow_udf factory)
 # ---------------------------------------------------------------------------
 
-def _simple(schema, fn):
-    return lambda: _rowwise(schema, fn)
+def _decoder(schema: T.StructType, fn: Callable[[bytes], dict],
+             vectorized: Callable | None = None):
+    """(schema, factory): the factory builds the sink's arrow_udf, and its
+    ``.args`` are ``(schema, fn, vectorized)``."""
+    return schema, _functools.partial(_rowwise, schema, fn, vectorized)
 
 
 DECODERS: dict[str, tuple[T.StructType, Callable]] = {
-    "QUERY": (QUERY_SCHEMA,
-              lambda: _rowwise(QUERY_SCHEMA, decode_query_py,
-                               _query_vectorized)),
-    "ROTATE": (ROTATE_SCHEMA,
-               lambda: _rowwise(ROTATE_SCHEMA, decode_rotate_py,
-                                _rotate_vectorized)),
-    "INTVAR": (INTVAR_SCHEMA,
-               lambda: _rowwise(INTVAR_SCHEMA, decode_intvar_py,
-                                _intvar_vectorized)),
-    "RAND": (RAND_SCHEMA,
-             lambda: _rowwise(RAND_SCHEMA, decode_rand_py,
-                              _rand_vectorized)),
-    "USER_VAR": (USER_VAR_SCHEMA,
-                 lambda: _rowwise(USER_VAR_SCHEMA, decode_user_var_py,
-                                  _user_var_vectorized)),
-    "FORMAT_DESC": (FORMAT_DESC_SCHEMA,
-                    lambda: _rowwise(FORMAT_DESC_SCHEMA, decode_format_desc_py,
-                                     _format_desc_vectorized)),
-    "XID": (XID_SCHEMA,
-            lambda: _rowwise(XID_SCHEMA, decode_xid_py, _xid_vectorized)),
-    "BEGIN_LOAD_QUERY": (FILE_DATA_SCHEMA,
-                         _simple(FILE_DATA_SCHEMA, decode_file_data_py)),
-    "CREATE_FILE": (FILE_DATA_SCHEMA,
-                    _simple(FILE_DATA_SCHEMA, decode_file_data_py)),
-    "APPEND_BLOCK": (FILE_DATA_SCHEMA,
-                     _simple(FILE_DATA_SCHEMA, decode_file_data_py)),
-    "EXEC_LOAD": (FILE_ID16_SCHEMA,
-                  lambda: _rowwise(FILE_ID16_SCHEMA, decode_file_id16_py,
-                                   _file_id16_vectorized)),
-    "DELETE_FILE": (FILE_ID16_SCHEMA,
-                    lambda: _rowwise(FILE_ID16_SCHEMA, decode_file_id16_py,
-                                     _file_id16_vectorized)),
-    "EXEC_LOAD_QUERY": (EXEC_LOAD_QUERY_SCHEMA,
-                        _simple(EXEC_LOAD_QUERY_SCHEMA,
-                                decode_execute_load_query_py)),
-    "TABLE_MAP": (TABLE_MAP_SCHEMA,
-                  lambda: _rowwise(TABLE_MAP_SCHEMA, decode_table_map_memo,
-                                   _table_map_vectorized)),
-    "INCIDENT": (INCIDENT_SCHEMA, _simple(INCIDENT_SCHEMA, decode_incident_py)),
-    "ROWS_QUERY": (ROWS_QUERY_SCHEMA,
-                   lambda: _rowwise(ROWS_QUERY_SCHEMA, decode_rows_query_py,
-                                    _rows_query_vectorized)),
-    "GTID": (GTID_SCHEMA,
-             lambda: _rowwise(GTID_SCHEMA, _gtid_fields, _gtid_vectorized)),
-    "ANON_GTID": (GTID_SCHEMA,
-                  lambda: _rowwise(GTID_SCHEMA, _gtid_fields, _gtid_vectorized)),
-    "PREV_GTIDS": (PREV_GTIDS_SCHEMA,
-                   lambda: _rowwise(PREV_GTIDS_SCHEMA, decode_previous_gtids_py,
-                                    _prev_gtids_vectorized)),
-    "LOAD": (LOAD_SCHEMA, _simple(LOAD_SCHEMA, decode_load_py)),
-    "NEW_LOAD": (NEW_LOAD_SCHEMA, _simple(NEW_LOAD_SCHEMA, decode_new_load_py)),
+    "QUERY": _decoder(QUERY_SCHEMA, decode_query_py, _query_vectorized),
+    "ROTATE": _decoder(ROTATE_SCHEMA, decode_rotate_py, _rotate_vectorized),
+    "INTVAR": _decoder(INTVAR_SCHEMA, decode_intvar_py, _intvar_vectorized),
+    "RAND": _decoder(RAND_SCHEMA, decode_rand_py, _rand_vectorized),
+    "USER_VAR": _decoder(USER_VAR_SCHEMA, decode_user_var_py,
+                         _user_var_vectorized),
+    "FORMAT_DESC": _decoder(FORMAT_DESC_SCHEMA, decode_format_desc_py,
+                            _format_desc_vectorized),
+    "XID": _decoder(XID_SCHEMA, decode_xid_py, _xid_vectorized),
+    "BEGIN_LOAD_QUERY": _decoder(FILE_DATA_SCHEMA, decode_file_data_py),
+    "CREATE_FILE": _decoder(FILE_DATA_SCHEMA, decode_file_data_py),
+    "APPEND_BLOCK": _decoder(FILE_DATA_SCHEMA, decode_file_data_py),
+    "EXEC_LOAD": _decoder(FILE_ID16_SCHEMA, decode_file_id16_py,
+                          _file_id16_vectorized),
+    "DELETE_FILE": _decoder(FILE_ID16_SCHEMA, decode_file_id16_py,
+                            _file_id16_vectorized),
+    "EXEC_LOAD_QUERY": _decoder(EXEC_LOAD_QUERY_SCHEMA,
+                                decode_execute_load_query_py),
+    "TABLE_MAP": _decoder(TABLE_MAP_SCHEMA, decode_table_map_py,
+                          _table_map_vectorized),
+    "INCIDENT": _decoder(INCIDENT_SCHEMA, decode_incident_py),
+    "ROWS_QUERY": _decoder(ROWS_QUERY_SCHEMA, decode_rows_query_py,
+                           _rows_query_vectorized),
+    "GTID": _decoder(GTID_SCHEMA, _gtid_fields, _gtid_vectorized),
+    "ANON_GTID": _decoder(GTID_SCHEMA, _gtid_fields, _gtid_vectorized),
+    "PREV_GTIDS": _decoder(PREV_GTIDS_SCHEMA, decode_previous_gtids_py,
+                           _prev_gtids_vectorized),
+    "LOAD": _decoder(LOAD_SCHEMA, decode_load_py),
+    "NEW_LOAD": _decoder(NEW_LOAD_SCHEMA, decode_new_load_py),
 }
 
 # Header-only sinks (STOP/SLAVE/HEARTBEAT/UNKNOWN) need no payload decoder:

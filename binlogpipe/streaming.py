@@ -3,12 +3,13 @@
 The reference's live replication source (`Connection::recv` packet loop,
 `crates/old/src/connection.rs:41-80`) maps to a Structured Streaming
 source over the same input table (SURVEY §2.1 S4): `readStream` on the
-sequence directory -> identical JVM header/route transforms ->
-watermarked per-sink counts and per-(source, sink) token stats ->
-checkpointed sinks. Batch and stream share the exact transform code
+sequence directory. The full DAG (run_full_available_now, start_full_live)
+runs each micro-batch through the batch transform code
 (route.routed_rows, enrich.table_map_dim, job.sink_decode_projection), so
 stream results converge to the batch goldens when drained with
-Trigger.AvailableNow.
+Trigger.AvailableNow. The stateful operators (running and watermarked
+per-sink counts, transaction assembly) read only header fields, so they
+consume parse.with_header rows directly.
 
 The wire/replication client itself (handshake, auth, COM_BINLOG_DUMP) is
 deliberately NOT ported — it carries no analytics semantics (SURVEY §3.3)
@@ -49,12 +50,6 @@ def read_stream(spark: SparkSession, input_dir: str,
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", max_files_per_trigger)
     return r.parquet(input_dir)
-
-
-def routed_stream(stream_df: DataFrame) -> DataFrame:
-    """Same parse+route transforms as the batch DAG, on a stream."""
-    hdr = parse.with_header(stream_df)
-    return hdr.withColumn("salt", route.salt_expr())
 
 
 def sink_counts_stream(routed: DataFrame) -> DataFrame:
@@ -137,7 +132,7 @@ def transaction_assembler(routed: DataFrame) -> DataFrame:
 def run_transactions_available_now(spark: SparkSession, input_dir: str,
                                    checkpoint_dir: str) -> list:
     txns = transaction_assembler(
-        routed_stream(read_stream(spark, input_dir))
+        parse.with_header(read_stream(spark, input_dir))
         .select("source", "sink", "log_pos"))
     q = (txns.writeStream.outputMode("append")
          .format("memory").queryName("stream_txns")
@@ -147,22 +142,6 @@ def run_transactions_available_now(spark: SparkSession, input_dir: str,
     q.awaitTermination()
     return spark.sql(
         "select * from stream_txns order by source, gtid_log_pos").collect()
-
-
-def run_available_now(spark: SparkSession, input_dir: str, out_dir: str,
-                      checkpoint_dir: str) -> None:
-    """Drain the current table contents through the streaming DAG (used by
-    tests to prove batch/stream parity); restartable from the checkpoint."""
-    routed = routed_stream(read_stream(spark, input_dir))
-    q = (
-        routed.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def _full_dag_writer(spark: SparkSession, input_dir: str, out_dir: str,
@@ -332,7 +311,8 @@ def run_counts_available_now(spark: SparkSession, input_dir: str,
             f"{checkpoint_dir} has committed batches; golden-comparison "
             f"counts need a fresh checkpoint (a re-drain would return "
             f"only new-data counts, or {{}} when nothing is new)")
-    counts = sink_counts_stream(routed_stream(read_stream(spark, input_dir)))
+    counts = sink_counts_stream(
+        parse.with_header(read_stream(spark, input_dir)))
     q = (
         counts.writeStream.outputMode("complete")
         .format("memory").queryName("stream_sink_counts")

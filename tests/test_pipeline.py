@@ -130,6 +130,31 @@ def test_checkpoint_resume(spark, fixture_parquet, tmp_path):
     assert spark.read.parquet(str(out / "agg" / "sink_counts")).count() == 18
 
 
+def test_resume_reads_rows_from_the_ledger(spark, fixture_parquet,
+                                          pipeline_out, tmp_path,
+                                          monkeypatch):
+    """A resumed run takes its row count from the ledger's route entry
+    instead of rescanning the routed table, and its metrics name every
+    stage it skipped."""
+    import shutil
+
+    from binlogpipe.job import run_pipeline
+
+    out = tmp_path / "out"
+    shutil.copytree(pipeline_out["out"], out)
+
+    def no_scan(self):
+        raise AssertionError("resumed run scanned a table")
+
+    # the concrete DataFrame class: it overrides the base class's count
+    monkeypatch.setattr(type(spark.range(0)), "count", no_scan)
+    m = run_pipeline(spark, fixture_parquet, str(out), run_id="test")
+    assert m["rows"] == 166 and m["stages"] == {}
+    assert m["resumed"] == ["route", "lineage", "aggregate", "enrich",
+                            "decode"]
+    assert pipeline_out["metrics"]["resumed"] == []
+
+
 def test_resume_refuses_another_inputs_output(spark, fixture_parquet,
                                               tmp_path):
     """Resuming a run_id whose ledger was committed for a DIFFERENT input

@@ -5,7 +5,7 @@ resume from its checkpoint without reprocessing."""
 import shutil
 from pathlib import Path
 
-from binlogpipe import streaming
+from binlogpipe import parse, streaming
 from tests.test_pipeline import GOLDEN_COUNTS
 
 
@@ -152,22 +152,25 @@ def test_stream_full_dag_matches_batch(spark, fixture_parquet, tmp_path):
 
 def test_stream_routed_parquet_and_checkpoint_resume(spark, fixture_parquet,
                                                      tmp_path):
+    """The full DAG's routed table: every event once, nothing new on a
+    re-drain of the same checkpoint, only the delta after a new file."""
     input_dir = _stage_input(fixture_parquet, tmp_path)
     out = tmp_path / "stream_out"
+    routed = str(out / "routed")
     ck = tmp_path / "ck_route"
-    streaming.run_available_now(spark, input_dir, str(out), str(ck))
-    df = spark.read.parquet(str(out))
+    streaming.run_full_available_now(spark, input_dir, str(out), str(ck))
+    df = spark.read.parquet(routed)
     assert df.count() == 166
     assert {r["sink"] for r in df.select("sink").distinct().collect()} == set(
         GOLDEN_COUNTS)
     # second drain with the same checkpoint: no new files -> no new rows
-    streaming.run_available_now(spark, input_dir, str(out), str(ck))
-    assert spark.read.parquet(str(out)).count() == 166
+    streaming.run_full_available_now(spark, input_dir, str(out), str(ck))
+    assert spark.read.parquet(routed).count() == 166
     # new file arrives -> incremental processing picks up only the delta
     shutil.copy(Path(fixture_parquet),
                 Path(input_dir) / "part-1.parquet")
-    streaming.run_available_now(spark, input_dir, str(out), str(ck))
-    assert spark.read.parquet(str(out)).count() == 332
+    streaming.run_full_available_now(spark, input_dir, str(out), str(ck))
+    assert spark.read.parquet(routed).count() == 332
 
 
 def test_stream_batch0_wipes_stale_outputs(spark, fixture_parquet, tmp_path):
@@ -298,7 +301,7 @@ def test_windowed_counts_append_mode_emits_finalized_windows(
     watermark — bounded state for long-running deployments."""
     ind = _stage_input(fixture_parquet, tmp_path)
     counts = streaming.windowed_sink_counts_stream(
-        streaming.routed_stream(streaming.read_stream(spark, ind)))
+        parse.with_header(streaming.read_stream(spark, ind)))
     q = (counts.writeStream.outputMode("append")
          .format("memory").queryName("win_counts")
          .option("checkpointLocation", str(tmp_path / "ck_win"))

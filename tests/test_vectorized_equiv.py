@@ -5,8 +5,7 @@ paths must agree on the error row, not just the happy row)."""
 
 import json
 
-import pandas as pd
-import pytest
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -21,6 +20,12 @@ def _hdr(event_type: int, size: int) -> bytes:
     return (b"\x00\x00\x00\x00" + bytes([event_type])
             + b"\x01\x00\x00\x00" + size.to_bytes(4, "little")
             + b"\x00\x00\x00\x00" + b"\x00\x00")
+
+
+def _fb(payloads):
+    """The decoders' one input form: a packed-binary Arrow batch through
+    parse._arrow_tokens, exactly as the arrow_udf receives it."""
+    return parse._arrow_tokens(pa.array(payloads, pa.binary()))
 
 
 def _scalar_frame(fn, schema, payloads):
@@ -43,7 +48,7 @@ def _scalar_frame(fn, schema, payloads):
 
 
 def _compare(vec_fn, scalar_fn, schema, payloads):
-    out = vec_fn(pd.Series(payloads))
+    out = vec_fn(_fb(payloads))
     assert out is not None, "vectorized path refused a valid batch"
     exp = _scalar_frame(scalar_fn, schema, payloads)
     for name in exp:
@@ -139,7 +144,7 @@ def test_rotate_high_bit_position_wraps_identically():
     body = pos + b"binlog.000042"
     payload = _hdr(0x04, H + len(body) + 4) + body + b"\x00" * 4
     scalar = parse.decode_rotate_py(payload)
-    vec = parse._rotate_vectorized(pd.Series([payload]))
+    vec = parse._rotate_vectorized(_fb([payload]))
     expect = 0xFEDCBA9876543210 - (1 << 64)
     assert scalar["position"] == expect
     assert int(vec["position"][0]) == expect
@@ -208,8 +213,8 @@ def test_vectorized_fallback_on_short_rows():
     """A batch containing any row shorter than the layout minimum must fall
     back to the scalar path (returns None) rather than crash."""
     ok = _hdr(0x04, H + 12) + b"\x04\x00\x00\x00\x00\x00\x00\x00" + b"\x00" * 4
-    assert parse._rotate_vectorized(pd.Series([ok, b"\x01\x02"])) is None
-    assert parse._query_vectorized(pd.Series([b""])) is None
+    assert parse._rotate_vectorized(_fb([ok, b"\x01\x02"])) is None
+    assert parse._query_vectorized(_fb([b""])) is None
 
 
 def test_query_vectorized_bad_status_vars_is_row_error():
@@ -223,7 +228,7 @@ def test_query_vectorized_bad_status_vars_is_row_error():
     good_body = (b"\x01\x00\x00\x00" + b"\x00\x00\x00\x00" + b"\x00"
                  + b"\x00\x00" + b"\x00\x00" + b"\x00" + b"SELECT 2")
     good = _hdr(0x02, H + len(good_body) + 4) + good_body + b"\x00" * 4
-    out = parse._query_vectorized(pd.Series([bad, good]))
+    out = parse._query_vectorized(_fb([bad, good]))
     assert out["parse_error"][0] is not None
     assert out["slave_proxy_id"][0] is None
     assert out["parse_error"][1] is None
@@ -265,11 +270,11 @@ def test_user_var_vectorized_falls_back_on_corrupt_rows():
     body = ((3).to_bytes(4, "little") + b"abc" + b"\x00" + b"\x02"
             + b"\x21\x00\x00\x00" + (99).to_bytes(4, "little") + b"\x01")
     bad = _hdr(0x0E, H + len(body) + 4) + body + b"\x00" * 4
-    assert parse._user_var_vectorized(pd.Series([bad])) is None
+    assert parse._user_var_vectorized(_fb([bad])) is None
     # name_length overrunning the row: is_null byte unreachable
     body2 = (250).to_bytes(4, "little") + b"ab"
     bad2 = _hdr(0x0E, H + len(body2) + 4) + body2 + b"\x00" * 4
-    assert parse._user_var_vectorized(pd.Series([bad2])) is None
+    assert parse._user_var_vectorized(_fb([bad2])) is None
     # and the scalar path quarantines them per-row instead of raising
     exp = _scalar_frame(parse.decode_user_var_py, parse.USER_VAR_SCHEMA,
                         [bad, bad2])
@@ -285,7 +290,7 @@ def test_intvar_vectorized_equiv(items):
         body = bytes([t]) + v
         payloads.append(_hdr(0x05, H + len(body) + 4) + body + b"\x00" * 4)
     # type byte 3 is invalid -> whole batch takes the scalar path (None)
-    out = parse._intvar_vectorized(pd.Series(payloads))
+    out = parse._intvar_vectorized(_fb(payloads))
     if any(t == 3 for t, _ in items):
         assert out is None
     else:
@@ -305,3 +310,116 @@ def test_file_id16_vectorized_equiv(bodies):
     payloads = [_hdr(0x0A, H + len(b) + 4) + b + b"\x00" * 4 for b in bodies]
     _compare(parse._file_id16_vectorized, parse.decode_file_id16_py,
              parse.FILE_ID16_SCHEMA, payloads)
+
+
+@st.composite
+def gtid_batch(draw):
+    """GTID/ANON_GTID payloads (fixed 65 bytes) whose source_id ‖ txn_id
+    patterns repeat across the batch, as real server uuids do — the fast
+    path renders each distinct pattern once and gathers it back."""
+    ids = draw(st.lists(st.binary(min_size=24, max_size=24), min_size=1,
+                        max_size=3))
+    out = []
+    for _ in range(draw(st.integers(min_value=1, max_value=8))):
+        body = (bytes([draw(st.integers(min_value=0, max_value=2))])
+                + draw(st.sampled_from(ids))
+                + draw(st.binary(min_size=17, max_size=17)))
+        et = draw(st.sampled_from([0x21, 0x22]))  # GTID, ANON_GTID
+        out.append(_hdr(et, H + len(body) + 4) + body + b"\x00" * 4)
+    return out
+
+
+@given(gtid_batch())
+def test_gtid_vectorized_equiv(payloads):
+    _compare(parse._gtid_vectorized, parse._gtid_fields,
+             parse.GTID_SCHEMA, payloads)
+
+
+def test_fixed_layouts_refuse_other_lengths():
+    """GTID and XID fast paths need every row at its exact layout length;
+    a longer row sends the batch to the scalar loop."""
+    gtid = _hdr(0x21, 65) + bytes(42) + b"\x00" * 4
+    xid = _hdr(0x10, 31) + bytes(8) + b"\x00" * 4
+    assert parse._gtid_vectorized(_fb([gtid, gtid + b"\x00"])) is None
+    assert parse._xid_vectorized(_fb([xid, xid + b"\x00"])) is None
+    assert parse._xid_vectorized(_fb([xid])) is not None
+
+
+@st.composite
+def table_map_payload(draw):
+    """TableMap events over column types with 0/1/2-byte metadata; the
+    metadata block's length is drawn independently, so a short block
+    errors the row on both paths."""
+    types = draw(st.lists(st.sampled_from([1, 3, 4, 5, 8, 15, 246, 252, 254]),
+                          max_size=6))
+    meta = draw(st.binary(max_size=10))
+    schema = draw(st.binary(max_size=8))
+    table = draw(st.binary(max_size=8))
+    body = (draw(st.binary(min_size=6, max_size=6))      # table_id
+            + draw(st.binary(min_size=2, max_size=2))    # flags
+            + bytes([len(schema)]) + schema + b"\x00"
+            + bytes([len(table)]) + table + b"\x00"
+            + bytes([len(types)]) + bytes(types)
+            + bytes([len(meta)]) + meta
+            + draw(st.binary(min_size=(len(types) + 7) // 8,
+                             max_size=(len(types) + 7) // 8)))
+    return _hdr(0x13, H + len(body) + 4) + body + b"\x00" * 4
+
+
+@given(st.lists(table_map_payload(), min_size=1, max_size=4),
+       st.lists(st.integers(min_value=0, max_value=3), min_size=1,
+                max_size=10),
+       st.binary(max_size=30))
+def test_table_map_vectorized_equiv(distinct, picks, junk):
+    """Repeated payloads (the per-distinct-payload memo) and a corrupt row
+    decode exactly like decode_table_map_py row by row."""
+    payloads = [distinct[i % len(distinct)] for i in picks] + [junk]
+    _compare(parse._table_map_vectorized, parse.decode_table_map_py,
+             parse.TABLE_MAP_SCHEMA, payloads)
+
+
+def test_fast_paths_take_the_contract_array_form(fixture_parquet):
+    """Every fast path present in the fixture decodes the contract
+    list<int32> tokens batch (the form the oracle queries pass) and
+    returns what it returns for the packed-binary form."""
+    import pyarrow.parquet as pq
+
+    from binlogpipe import layout
+    from binlogpipe import np_codec as c
+
+    tokens = pq.read_table(fixture_parquet)["tokens"]
+    by_sink: dict[str, list[int]] = {}
+    for i, t in enumerate(tokens.to_pylist()):
+        by_sink.setdefault(layout.EVENT_TYPES.get(t[4]), []).append(i)
+    checked = []
+    for sink, (schema, factory) in sorted(parse.DECODERS.items()):
+        _, _, vec = factory.args
+        if vec is None or sink not in by_sink:
+            continue
+        arr = tokens.take(by_sink[sink]).combine_chunks()
+        assert pa.types.is_list(arr.type)
+        packed = pa.array([c.tokens_to_bytes(t) for t in arr.to_pylist()],
+                          pa.binary())
+        got = vec(parse._arrow_tokens(arr))
+        assert got is not None, sink
+        want = vec(parse._arrow_tokens(packed))
+        assert (parse._frame_to_struct(got, schema).to_pylist()
+                == parse._frame_to_struct(want, schema).to_pylist()), sink
+        checked.append(sink)
+    assert len(checked) == 12, checked
+
+
+def test_null_tokens_cell_is_a_parse_error_row(spark):
+    """A null tokens cell — packed binary or contract array — decodes to a
+    parse_error row through the Spark UDF; the other rows of its batch
+    still decode and the task does not fail."""
+    from pyspark.sql import functions as F
+
+    xid = _hdr(0x10, 31) + (7).to_bytes(8, "little") + b"\x00" * 4
+    _, factory = parse.DECODERS["XID"]
+    for ddl, cell in (("tokens binary", xid), ("tokens array<int>", list(xid))):
+        df = spark.createDataFrame([(0, cell), (1, None)], f"i int, {ddl}")
+        rows = (df.select("i", factory()(F.col("tokens")).alias("d"))
+                .orderBy("i").select("d.*").collect())
+        assert rows[0]["xid"] == 7 and rows[0]["parse_error"] is None, ddl
+        assert rows[1]["xid"] is None and rows[1]["parse_error"], ddl
