@@ -103,7 +103,7 @@ def _struct_with_error(fields: list[T.StructField]) -> T.StructType:
 
 def _decode_frame(tokens: _FlatBatch, names: list[str],
                   fn: Callable[..., dict], vectorized: Callable | None,
-                  *extra: list) -> pd.DataFrame:
+                  *extra) -> pd.DataFrame:
     """One Arrow batch -> decoded DataFrame: the whole-batch numpy fast
     path when available (returns None to refuse a batch), else the scalar
     per-row loop whose try/except turns a bad row into a parse_error row.
