@@ -76,29 +76,35 @@ DECODE_BASE_COLS = ["doc_id", "n_tok", "source", "timestamp", "event_type",
 FOLD_MAX_PARALLELISM = 16
 
 
-def _decode_narrow(sink_df: DataFrame, par: int) -> DataFrame:
-    """Width control for a decode unit's pruned scan: ``coalesce(par)``
-    buys the fewer-bigger-tasks benefit (tiny scan splits pay per-task
-    Python-worker overhead) WITHOUT serializing the sink payload through
-    an exchange. A round-robin ``repartition(par)`` was the largest
-    non-scaling term on the 1->4 scaling pair's 4-core side. Same-window
-    interleaved pinned A/Bs (round 7):
+# Bytes of routed input per decode task. Every Python-UDF task pays a fixed
+# worker cost: pyspark's per-task setup_spark_files runs
+# importlib.invalidate_caches(), which re-reads the pyspark.zip directory
+# (118 ms CPU per call on CPython 3.11.7, 4-vCPU VM). The decode work itself
+# grows with bytes. So a unit's task count follows its routed bytes, not
+# the number of files the router's salt spread it over: a small sink is one
+# task, a large one takes the cluster's full width. bench.py's sf0.1 input
+# routes to ~306 MB, which puts its QUERY and GTID sinks near the 8-12 task
+# optimum measured there; at sf1 they clamp to defaultParallelism. The
+# width sweeps are in OPTIMIZATION_r07.md #9.
+DECODE_TASK_BYTES = 8 * 1024 * 1024
 
-      4c pinned, 12M events: repartition decode 58.8/57.9 s ->
-        no-repart 46.4/48.0 s (-19%) -> coalesce 45.0/41.9 s
-        (coalesce beats no-repart in every pairwise round; e2e
-        112.7 s median -> 89.5 s across the chained windows)
-      32c, 6M events: repartition decode median 7.46 s -> coalesce
-        6.93 s; e2e median 17.27 -> 16.61 s (coalesce wins 2/3 rounds,
-        3rd a tie); plain no-repart loses at 32c (decode median 9.1 s,
-        one 15.7 s variance spike) — task-count control still pays at
-        wide parallelism, it just never needed the shuffle.
 
-    coalesce(par) is a no-op when the scan yields <= par splits, so the
-    underparallelized-read case the round-4 repartition targeted cannot
-    regress below the scan's own width; at par==1 the stage stays
-    width-control-free (the round-7 repartition(1) removal)."""
-    return sink_df.coalesce(par) if par > 1 else sink_df
+def decode_width(nbytes: int, parallelism: int) -> int:
+    """Task count of a decode unit: one per DECODE_TASK_BYTES of routed
+    input, at least 1 and at most ``parallelism``."""
+    return max(1, min(parallelism, -(-nbytes // DECODE_TASK_BYTES)))
+
+
+def decode_input(routed: DataFrame, sinks: list[str], nbytes: int,
+                 parallelism: int) -> tuple[DataFrame, int]:
+    """A decode unit's input and its width: the partition-pruned scan of
+    ``sinks``, coalesced to ``decode_width(nbytes, parallelism)`` tasks.
+    ``coalesce`` merges scan splits without an exchange (a round-robin
+    repartition serialized the sink payload through a shuffle) and is a
+    no-op when the scan has fewer splits. The batch decode stage and the
+    streaming foreachBatch both build their decode inputs here."""
+    width = decode_width(nbytes, parallelism)
+    return routed.filter(F.col("sink").isin(sinks)).coalesce(width), width
 
 
 def sink_decode_projection(sink: str, sink_df: DataFrame, dim: DataFrame,
@@ -204,10 +210,15 @@ def list_partition_dirs(spark: SparkSession, path: str,
     return out
 
 
-def list_sink_partitions(spark: SparkSession, path: str) -> list[str]:
-    """The `sink=` partition directory names under a routed table — the
-    distinct sink set without scanning the table."""
-    return list_partition_dirs(spark, path, "sink=")
+def sink_partition_bytes(spark: SparkSession, path: str) -> dict[str, int]:
+    """Each `sink=` partition directory under a routed table, mapped to
+    the bytes of its files: the distinct sink set and every sink's size
+    without scanning the table (one listing plus one content summary per
+    sink — filesystem metadata only)."""
+    fs, _, HPath = _hadoop_fs(spark, path)
+    return {s: int(fs.getContentSummary(
+                HPath(f"{path.rstrip('/')}/sink={s}")).getLength())
+            for s in list_partition_dirs(spark, path, "sink=")}
 
 
 def delete_path(spark: SparkSession, path: str) -> bool:
@@ -446,17 +457,20 @@ def run_pipeline(
         # measured decode 11s -> 16s at sf0.1 — the 18 pruned parquet scans
         # are cheaper than one full cache build + 18 cache reads.
         #
-        # Which sinks exist is FILESYSTEM METADATA: the routed write is
-        # partitioned by sink, so the `sink=<name>` directory names ARE the
-        # distinct set — listing them costs one directory listing instead
-        # of a full routed-table scan (an extra 100 TB scan per run just to
-        # learn ≤22 known names). Iceberg keeps the scan-free property via
-        # its partitions metadata table.
+        # Which sinks exist, and how many bytes each holds, is FILESYSTEM
+        # METADATA: the routed write is partitioned by sink, so the
+        # `sink=<name>` directories ARE the distinct set and their content
+        # summaries the sizes — no routed-table scan (an extra 100 TB scan
+        # per run just to learn ≤22 known names). Iceberg keeps the
+        # scan-free property via its partitions metadata table. The sizes
+        # set each unit's decode width (decode_width).
         if sink_format == "iceberg":
-            present = [r["partition"]["sink"] for r in spark.table(
-                f"{iceberg_prefix}.routed.partitions").collect()]
+            sizes = {r["partition"]["sink"]:
+                     int(r["total_data_file_size_in_bytes"])
+                     for r in spark.table(
+                         f"{iceberg_prefix}.routed.partitions").collect()}
         else:
-            present = list_sink_partitions(spark, routed_path)
+            sizes = sink_partition_bytes(spark, routed_path)
             # A `_grp_*` staging dir under sinks/ is always garbage on
             # (re)entry to this stage: either a crashed decode_group left
             # it (the per-sink marks below say what to redo) or its final
@@ -466,33 +480,18 @@ def run_pipeline(
             for stale in list_partition_dirs(spark, str(out / "sinks"),
                                              "_grp_"):
                 delete_path(spark, str(out / "sinks" / f"_grp_{stale}"))
-
-        # Per-sink decode width scales with INPUT SIZE, not just cores.
-        # Round-4 interleaved sweeps: at sf0.1 (6M events) width 8-12
-        # beats full 32-wide decode (5.9-6.5s vs 8.0-8.9s — tiny tasks pay
-        # pool_size × cores Python-worker startups), but at sf1.0 (60M)
-        # the SAME cap loses (75.4s vs 64.7s uncapped — tasks are now
-        # CPU-heavy, parallelism wins and startup amortizes). So the width
-        # targets ~750k rows per decode task (both measured optima fall
-        # out: 6M→8, 60M→32), clamped to defaultParallelism; 8-core runs
-        # are unaffected at either scale.
+        present = sorted(sizes)
         par = spark.sparkContext.defaultParallelism
-        if route_rows:  # None after a metrics failure -> full width
-            par = min(par, max(4, int(route_rows) // 750_000))
+        decoded_units: list[dict] = []
 
-        def decode_single(sink: str) -> None:
-            sink_df = routed_df.filter(F.col("sink") == sink)
-            # hot (salted) sinks get shuffle-free width control for the
-            # decode UDF — see _decode_narrow for the measured rationale
-            if sink in layout.SALT_FACTORS:
-                sink_df = _decode_narrow(sink_df, par)
+        def decode_single(sink: str, sink_df: DataFrame) -> None:
             tgt = str(out / "sinks" / sink)
             dec = sink_decode_projection(sink, sink_df, dim)
             write_output(dec, sink_format, tgt,
                          f"{iceberg_prefix}.sink_{sink.lower()}")
             ck.mark(f"decode:{sink}")
 
-        def decode_group(todo: list[str]) -> None:
+        def decode_group(todo: list[str], sink_df: DataFrame) -> None:
             # same-schema sinks in ONE partitionBy(sink) write job, then a
             # per-sink directory rename (filesystem metadata) into the
             # sinks/<NAME> layout — saves len(todo)-1 jobs' worth of fixed
@@ -500,9 +499,6 @@ def run_pipeline(
             # so each renamed dir's schema is identical to a single-sink
             # write. Crash safety: marks land only after a sink's rename;
             # a rerun regroups the unmarked remainder.
-            sink_df = routed_df.filter(F.col("sink").isin(todo))
-            if any(s in layout.SALT_FACTORS for s in todo):
-                sink_df = _decode_narrow(sink_df, par)
             dec = sink_decode_projection(todo[0], sink_df, dim,
                                          keep_sink=True)
             tmp = str(out / "sinks" / f"_grp_{todo[0]}")
@@ -527,7 +523,8 @@ def run_pipeline(
                     # partitionBy wrote no dir for it, so fall back to the
                     # single-sink write — a schema'd empty parquet dir, the
                     # exact shape (and mark) consumers can read
-                    decode_single(s)
+                    decode_single(s, decode_input(routed_df, [s], sizes[s],
+                                                  par)[0])
             delete_path(spark, tmp)
 
         def decode_unit(unit: list[str]) -> None:
@@ -539,10 +536,14 @@ def run_pipeline(
             todo = [s for s in unit if not (resume and ck.done(f"decode:{s}"))]
             if not todo:
                 return
+            nbytes = sum(sizes[s] for s in todo)
+            sink_df, width = decode_input(routed_df, todo, nbytes, par)
+            decoded_units.append(
+                {"sinks": todo, "bytes": nbytes, "width": width})
             if len(todo) == 1:
-                decode_single(todo[0])
+                decode_single(todo[0], sink_df)
             else:
-                decode_group(todo)
+                decode_group(todo, sink_df)
 
         # Unit building: same-schema groups fold into one job each (see
         # SAME_SCHEMA_GROUPS); everything else is a single-sink unit. The
@@ -563,7 +564,7 @@ def run_pipeline(
         fold = (spark.sparkContext.defaultParallelism
                 <= FOLD_MAX_PARALLELISM)
         if sink_format == "parquet" and fold:
-            header_only = [s for s in sorted(present)
+            header_only = [s for s in present
                            if s not in parse.DECODERS
                            and s not in route.ROWS_SINKS]
             for members in (*SAME_SCHEMA_GROUPS, tuple(header_only)):
@@ -571,7 +572,7 @@ def run_pipeline(
                 if len(g) > 1:
                     units.append(g)
                     grouped.update(g)
-        units += [[s] for s in sorted(present) if s not in grouped]
+        units += [[s] for s in present if s not in grouped]
         # hot units first (LPT-style scheduling: starting the longest jobs
         # first avoids a hot-sink tail after the small ones drain) with a
         # pool of 6; measured on the sf0.1 bench input: alpha-order pool=4
@@ -584,7 +585,8 @@ def run_pipeline(
         with ThreadPoolExecutor(max_workers=pool_size) as pool:
             list(pool.map(decode_unit, units))
         metrics["stages"]["decode"] = {
-            "wall_sec": round(time.time() - t0, 3), "sinks": len(present)}
+            "wall_sec": round(time.time() - t0, 3), "sinks": len(present),
+            "units": sorted(decoded_units, key=lambda u: u["sinks"])}
         ck.mark("decode", sinks=len(present))
 
     # Leaving the `with` joins the side pool even when enrich/decode

@@ -1067,51 +1067,15 @@ EXEC_LOAD_QUERY_SCHEMA = _struct_with_error([
 ])
 
 
-@_functools.lru_cache(maxsize=4096)
-def _decode_table_map_cached(buf: bytes) -> dict:
-    return decode_table_map_py(buf)
-
-
-def _table_map_vectorized(tokens: _FlatBatch):
-    """Whole-batch TableMap decode via per-unique-payload memoization.
-    Real binlogs emit a byte-identical TableMap ahead of every rows event
-    of the same table (the event IS the schema dictionary, mod.rs:23-26),
-    so distinct payloads are bounded by live (table, schema-version) pairs
-    — the same legitimacy argument as the status-vars memo
-    (_status_vars_json); whole-payload memoization of other event types
-    would merely game the synthetic bench. A 20k-row batch holds only a handful of distinct payloads, so
-    decode each once and gather columns back instead of paying the
-    per-row lru lookup + dict copy + per-field append (measured 7.0s of
-    the pinned 1-core decode stage at 6M events, round-7 profile).
-    Per-payload errors keep scalar-path parity: the same decoder raises
-    the same exception text, nulling every field of the affected rows."""
-    rows = list(tokens)
-    if not rows:
-        return None
-    names = [f.name for f in TABLE_MAP_SCHEMA.fields]
-    uniq: dict[bytes, dict] = {}
-    for b in rows:
-        if b not in uniq:
-            try:
-                d = dict(_decode_table_map_cached(b))
-                d["parse_error"] = None
-            except Exception as e:  # noqa: BLE001 — quarantine, don't panic
-                d = dict.fromkeys(names)
-                d["parse_error"] = f"{type(e).__name__}: {e}"
-            uniq[b] = d
-    cols: dict[str, list] = {n: [] for n in names}
-    for b in rows:
-        d = uniq[b]
-        for n in names:
-            cols[n].append(d[n])
-    return pd.DataFrame(
-        {n: pd.Series(cols[n], dtype=object) for n in names}, columns=names)
-
-
 def decode_table_map_py(buf: bytes) -> dict:
     """TableMap event (mod.rs:966-1018). The dictionary row that feeds the
     enrich broadcast join (replaces the reference's global registry,
-    mod.rs:23-26, 999-1001)."""
+    mod.rs:23-26, 999-1001).
+
+    ``DECODERS["TABLE_MAP"]`` runs it once per row, with no whole-batch
+    fast path and no memo: a memo keyed on the event never hits, since
+    every event carries its own header (timestamp, log_pos) and CRC even
+    when two bodies are byte-identical."""
     off = H
     table_id, off = c.u48(buf, off)
     tm_flags, off = c.u16(buf, off)
@@ -1512,8 +1476,7 @@ DECODERS: dict[str, tuple[T.StructType, Callable]] = {
                             _file_id16_vectorized),
     "EXEC_LOAD_QUERY": _decoder(EXEC_LOAD_QUERY_SCHEMA,
                                 decode_execute_load_query_py),
-    "TABLE_MAP": _decoder(TABLE_MAP_SCHEMA, decode_table_map_py,
-                          _table_map_vectorized),
+    "TABLE_MAP": _decoder(TABLE_MAP_SCHEMA, decode_table_map_py),
     "INCIDENT": _decoder(INCIDENT_SCHEMA, decode_incident_py),
     "ROWS_QUERY": _decoder(ROWS_QUERY_SCHEMA, decode_rows_query_py,
                            _rows_query_vectorized),

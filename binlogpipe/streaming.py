@@ -184,8 +184,9 @@ def _full_dag_writer(spark: SparkSession, input_dir: str, out_dir: str,
     single-TableMap assumption (real replication streams satisfy it per
     binlog file; the fixtures do too)."""
     from . import enrich
-    from .job import (delete_if_empty, delete_path, list_partition_dirs,
-                      list_sink_partitions, sink_decode_projection)
+    from .job import (decode_input, delete_if_empty, delete_path,
+                      list_partition_dirs, sink_decode_projection,
+                      sink_partition_bytes)
 
     # string joins, not pathlib: PurePath collapses the double slash in
     # scheme URIs (hdfs://nn -> hdfs:/nn); every filesystem-metadata op
@@ -243,12 +244,15 @@ def _full_dag_writer(spark: SparkSession, input_dir: str, out_dir: str,
         for k in sorted(prior)[:-2]:
             delete_path(spark, f"{dim_root}/v={k}")
 
-        # which sinks this batch produced is filesystem metadata (the
-        # routed batch write is partitioned by sink) — list the sink=*
-        # directory names (scheme-aware) instead of re-scanning the batch
-        present = list_sink_partitions(spark, routed_batch)
-        for sink in sorted(present):
-            sink_df = batch_routed.filter(F.col("sink") == sink)
+        # which sinks this batch produced, and their sizes, is filesystem
+        # metadata (the routed batch write is partitioned by sink) — list
+        # the sink=* directories (scheme-aware) instead of re-scanning the
+        # batch; each sink decodes at the batch DAG's width rule
+        # (job.decode_input)
+        sizes = sink_partition_bytes(spark, routed_batch)
+        par = spark.sparkContext.defaultParallelism
+        for sink in sorted(sizes):
+            sink_df, _ = decode_input(batch_routed, [sink], sizes[sink], par)
             # the SHARED projection (job.sink_decode_projection): batch
             # and stream typed sinks cannot drift in schema or semantics
             dec = sink_decode_projection(sink, sink_df, dim)

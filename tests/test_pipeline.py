@@ -86,6 +86,50 @@ def test_metrics_emitted(pipeline_out):
     assert m["stages"]["route"]["rows"] == 166
 
 
+def test_decode_units_recorded(pipeline_out):
+    """metrics record each decode unit's sinks, routed bytes and width:
+    on the fixture every unit is one task, and the units cover exactly
+    the present sinks."""
+    units = pipeline_out["metrics"]["stages"]["decode"]["units"]
+    assert all(u["width"] == 1 for u in units), units
+    assert all(u["bytes"] > 0 for u in units), units
+    sinks = [s for u in units for s in u["sinks"]]
+    assert sorted(sinks) == sorted(GOLDEN_COUNTS)
+
+
+def test_decode_width(spark):
+    from binlogpipe import job
+
+    par = spark.sparkContext.defaultParallelism
+    assert job.decode_width(0, par) == 1
+    assert job.decode_width(job.DECODE_TASK_BYTES, par) == 1
+    assert job.decode_width(job.DECODE_TASK_BYTES + 1, par) == 2
+    assert job.decode_width(10**15, par) == par
+
+
+def test_full_width_decode_matches(spark, fixture_parquet, tmp_path,
+                                   monkeypatch, pipeline_out):
+    """With one byte per decode task every unit runs at full scan width;
+    every sink's rows equal the one-task-per-unit run's."""
+    from binlogpipe import job
+
+    monkeypatch.setattr(job, "DECODE_TASK_BYTES", 1)
+    out = tmp_path / "out"
+    m = job.run_pipeline(spark, fixture_parquet, str(out), run_id="wide")
+    par = spark.sparkContext.defaultParallelism
+    assert all(u["width"] == par
+               for u in m["stages"]["decode"]["units"])
+    base = Path(pipeline_out["out"]) / "sinks"
+    sinks = sorted(p.name for p in base.iterdir() if p.is_dir())
+    assert sorted(p.name for p in (out / "sinks").iterdir()
+                  if p.is_dir()) == sinks
+    for sink in sinks:
+        a = spark.read.parquet(str(base / sink))
+        b = spark.read.parquet(str(out / "sinks" / sink)).select(*a.columns)
+        assert sorted(map(repr, a.collect())) == \
+            sorted(map(repr, b.collect())), sink
+
+
 def test_iceberg_seam(spark, fixture_parquet, tmp_path):
     """The sink_format='iceberg' path is code, not a docstring: dispatch
     reaches writeTo(...).using('iceberg'), and without the runtime jars it

@@ -345,39 +345,6 @@ def test_fixed_layouts_refuse_other_lengths():
     assert parse._xid_vectorized(_fb([xid])) is not None
 
 
-@st.composite
-def table_map_payload(draw):
-    """TableMap events over column types with 0/1/2-byte metadata; the
-    metadata block's length is drawn independently, so a short block
-    errors the row on both paths."""
-    types = draw(st.lists(st.sampled_from([1, 3, 4, 5, 8, 15, 246, 252, 254]),
-                          max_size=6))
-    meta = draw(st.binary(max_size=10))
-    schema = draw(st.binary(max_size=8))
-    table = draw(st.binary(max_size=8))
-    body = (draw(st.binary(min_size=6, max_size=6))      # table_id
-            + draw(st.binary(min_size=2, max_size=2))    # flags
-            + bytes([len(schema)]) + schema + b"\x00"
-            + bytes([len(table)]) + table + b"\x00"
-            + bytes([len(types)]) + bytes(types)
-            + bytes([len(meta)]) + meta
-            + draw(st.binary(min_size=(len(types) + 7) // 8,
-                             max_size=(len(types) + 7) // 8)))
-    return _hdr(0x13, H + len(body) + 4) + body + b"\x00" * 4
-
-
-@given(st.lists(table_map_payload(), min_size=1, max_size=4),
-       st.lists(st.integers(min_value=0, max_value=3), min_size=1,
-                max_size=10),
-       st.binary(max_size=30))
-def test_table_map_vectorized_equiv(distinct, picks, junk):
-    """Repeated payloads (the per-distinct-payload memo) and a corrupt row
-    decode exactly like decode_table_map_py row by row."""
-    payloads = [distinct[i % len(distinct)] for i in picks] + [junk]
-    _compare(parse._table_map_vectorized, parse.decode_table_map_py,
-             parse.TABLE_MAP_SCHEMA, payloads)
-
-
 def test_fast_paths_take_the_contract_array_form(fixture_parquet):
     """Every fast path present in the fixture decodes the contract
     list<int32> tokens batch (the form the oracle queries pass) and
@@ -406,7 +373,7 @@ def test_fast_paths_take_the_contract_array_form(fixture_parquet):
         assert (parse._frame_to_struct(got, schema).to_pylist()
                 == parse._frame_to_struct(want, schema).to_pylist()), sink
         checked.append(sink)
-    assert len(checked) == 12, checked
+    assert len(checked) == 11, checked
 
 
 def test_null_tokens_cell_is_a_parse_error_row(spark):
