@@ -38,12 +38,7 @@ def cmd_trans(args) -> None:
     # scheme-aware listing (hdfs/s3a out dirs; also absent on empty-input
     # runs where the pipeline returns before creating sinks/) + delete-
     # before-write so a resumed invocation doesn't crash on the old dump
-    # `_grp_*` is decode_group staging, never a sink — run_pipeline sweeps
-    # stale ones on resume, but this dump may read an out tree written by
-    # a run that crashed mid-group
-    sinks = sorted(s for s in
-                   job.list_partition_dirs(spark, f"{out_s}/sinks", "")
-                   if not s.startswith("_grp_"))
+    sinks = sorted(job.list_partition_dirs(spark, f"{out_s}/sinks", ""))
     if args.format == "json":
         dump_dir = f"{out_s}/debug_json"
         for sink in sinks:
@@ -154,12 +149,8 @@ def cmd_stream(args) -> None:
             input_format=fmt)
     # scheme-aware: a drain with no new files processes zero micro-batches
     # and never creates out/sinks — a valid no-op invocation, not an error.
-    # `_grp_*` is decode_group staging, never a sink (same filter as the
-    # trans dump listing): if a batch run sharing this out tree crashed
-    # mid-group, its staging dir must not surface as a bogus sink here.
-    sinks = sorted(s for s in job.list_partition_dirs(
-        spark, f"{str(args.out).rstrip('/')}/sinks", "")
-        if not s.startswith("_grp_"))
+    sinks = sorted(job.list_partition_dirs(
+        spark, f"{str(args.out).rstrip('/')}/sinks", ""))
     print(json.dumps({"out": args.out, "checkpoint": ck, "sinks": sinks}))
 
 

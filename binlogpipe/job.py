@@ -31,36 +31,13 @@ import json
 import time
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import aggregate as agg
 from . import enrich, layout, lineage, parse, route
-
-# Sinks that share a decode schema AND decoder can be written by ONE
-# partitionBy(sink) job instead of one job each, then land in the
-# per-sink sinks/<NAME> layout via filesystem renames (metadata ops).
-# Every write job carries a core-count-independent driver cost (planning
-# + job commit + scheduling, ~22 jobs/run measured at ~5.8s total by
-# tools/fixed_cost_probe.py round 5); folding same-schema jobs is a pure
-# fixed-cost cut, which is what holds the 1->4 scaling pair below the
-# 0.8 contract line (efficiency = (W+F)/(W/4+F)·1/4 — F is the
-# non-scaling term). Header-only sinks (no DECODERS entry, e.g.
-# STOP/SLAVE/HEARTBEAT/UNKNOWN/QUARANTINE) all share the
-# base+tokens_bin schema and fold the same way, computed from the
-# present set at run time.
-SAME_SCHEMA_GROUPS: tuple[tuple[str, ...], ...] = (
-    ("GTID", "ANON_GTID"),
-    ("BEGIN_LOAD_QUERY", "CREATE_FILE", "APPEND_BLOCK"),
-    ("EXEC_LOAD", "DELETE_FILE"),
-    # WRITE and DELETE rows events share ROWS_SCHEMA and the n_images=1
-    # decoder (sink_decode_projection's todo[0] dispatch); UPDATE
-    # (n_images=2) must stay single. One fewer write job in the 1-4-core
-    # fold regime, where per-job fixed cost is the scaling-pair cap
-    # (round-7 F profile: ~0.7-2s per decode job at pinned 1 core).
-    ("WRITE_ROWS_V2", "DELETE_ROWS_V2"),
-)
 
 # typed sinks carry decoded fields + this header slice; the raw bytes stay
 # in the routed table (doc_id joins back) — except quarantine/header-only
@@ -70,17 +47,11 @@ DECODE_BASE_COLS = ["doc_id", "n_tok", "source", "timestamp", "event_type",
                     "checksum"]
 
 
-# Sink folding (SAME_SCHEMA_GROUPS) is used only when the session has at
-# most this many task slots; tests lower it to force the one-job-per-sink
-# layout. See the unit-building comment in run_pipeline.
-FOLD_MAX_PARALLELISM = 16
-
-
 # Bytes of routed input per decode task. Every Python-UDF task pays a fixed
 # worker cost: pyspark's per-task setup_spark_files runs
 # importlib.invalidate_caches(), which re-reads the pyspark.zip directory
 # (118 ms CPU per call on CPython 3.11.7, 4-vCPU VM). The decode work itself
-# grows with bytes. So a unit's task count follows its routed bytes, not
+# grows with bytes. So a sink's task count follows its routed bytes, not
 # the number of files the router's salt spread it over: a small sink is one
 # task, a large one takes the cluster's full width. bench.py's sf0.1 input
 # routes to ~306 MB, which puts its QUERY and GTID sinks near the 8-12 task
@@ -90,35 +61,17 @@ DECODE_TASK_BYTES = 8 * 1024 * 1024
 
 
 def decode_width(nbytes: int, parallelism: int) -> int:
-    """Task count of a decode unit: one per DECODE_TASK_BYTES of routed
+    """Task count of a sink's decode: one per DECODE_TASK_BYTES of routed
     input, at least 1 and at most ``parallelism``."""
     return max(1, min(parallelism, -(-nbytes // DECODE_TASK_BYTES)))
 
 
-def decode_input(routed: DataFrame, sinks: list[str], nbytes: int,
-                 parallelism: int) -> tuple[DataFrame, int]:
-    """A decode unit's input and its width: the partition-pruned scan of
-    ``sinks``, coalesced to ``decode_width(nbytes, parallelism)`` tasks.
-    ``coalesce`` merges scan splits without an exchange (a round-robin
-    repartition serialized the sink payload through a shuffle) and is a
-    no-op when the scan has fewer splits. The batch decode stage and the
-    streaming foreachBatch both build their decode inputs here."""
-    width = decode_width(nbytes, parallelism)
-    return routed.filter(F.col("sink").isin(sinks)).coalesce(width), width
-
-
-def sink_decode_projection(sink: str, sink_df: DataFrame, dim: DataFrame,
-                           keep_sink: bool = False) -> DataFrame:
+def sink_decode_projection(sink: str, sink_df: DataFrame,
+                           dim: DataFrame) -> DataFrame:
     """The typed-sink decode projection for one sink — THE single
     definition shared by the batch decode stage and the streaming
     foreachBatch, so the two DAGs' output schemas cannot drift (a round-4
-    review found the streaming copy had silently lost statement_kind).
-
-    ``keep_sink=True`` (grouped same-schema writes) additionally carries
-    the `sink` column so the caller can partitionBy it — partitionBy
-    drops it from the data files, so the per-sink schema after the
-    rename is identical to a keep_sink=False write."""
-    base = DECODE_BASE_COLS + (["sink"] if keep_sink else [])
+    review found the streaming copy had silently lost statement_kind)."""
     if sink in route.ROWS_SINKS:
         n_images = 2 if sink == "UPDATE_ROWS_V2" else 1
         sink_df = sink_df.withColumnRenamed("rows_table_id", "table_id")
@@ -126,13 +79,14 @@ def sink_decode_projection(sink: str, sink_df: DataFrame, dim: DataFrame,
         udf = parse.make_rows_udf(n_images)
         dec = joined.withColumn(
             "d", udf(F.col("tokens_bin"), F.col("columns_type")))
-        return dec.select(*base, "tm_schema_name", "tm_table_name", "d.*")
+        return dec.select(*DECODE_BASE_COLS, "tm_schema_name",
+                          "tm_table_name", "d.*")
     if sink in parse.DECODERS:
         schema, udf_factory = parse.DECODERS[sink]
         dec = sink_df.withColumn("d", udf_factory()(F.col("tokens_bin")))
-        dec = dec.select(*base, "d.*")
+        dec = dec.select(*DECODE_BASE_COLS, "d.*")
     else:
-        return sink_df.select(*base, "tokens_bin")
+        return sink_df.select(*DECODE_BASE_COLS, "tokens_bin")
     if sink in ("QUERY", "EXEC_LOAD_QUERY"):
         dec = dec.withColumn(
             "statement_kind", parse.statement_kind(F.col("query")))
@@ -140,6 +94,40 @@ def sink_decode_projection(sink: str, sink_df: DataFrame, dim: DataFrame,
         dec = dec.withColumn(
             "statement_kind", parse.statement_kind(F.col("query_text")))
     return dec
+
+
+def decode_sinks(spark: SparkSession, routed: DataFrame,
+                 sizes: dict[str, int], dim: DataFrame,
+                 write: Callable[[str, DataFrame], None]) -> list[dict]:
+    """Decode every sink in ``sizes`` (sink -> routed bytes) as one write
+    job: the partition-pruned scan of the sink, coalesced to
+    ``decode_width(bytes, defaultParallelism)`` tasks, then
+    ``sink_decode_projection``, then ``write(sink, df)``. ``coalesce``
+    merges scan splits without an exchange (a round-robin repartition
+    serialized the sink payload through a shuffle) and is a no-op when
+    the scan has fewer splits. The batch decode stage and the streaming
+    foreachBatch both decode here; only their ``write`` differs.
+
+    Returns one ``{"sinks": [sink], "bytes", "width"}`` record per sink,
+    sorted by sink."""
+    par = spark.sparkContext.defaultParallelism
+
+    def decode(sink: str) -> dict:
+        width = decode_width(sizes[sink], par)
+        sink_df = routed.filter(F.col("sink") == sink).coalesce(width)
+        write(sink, sink_decode_projection(sink, sink_df, dim))
+        return {"sinks": [sink], "bytes": sizes[sink], "width": width}
+
+    # Each sink is one Spark job; a thread pool lets the scheduler pipeline
+    # their stages instead of paying per-job fixed overhead serially. Hot
+    # sinks start first (LPT-style: starting the longest jobs first avoids
+    # a hot-sink tail after the small ones drain). Measured on the sf0.1
+    # bench input: alpha-order pool=4 15.4s -> hot-first pool=4 11.0s ->
+    # hot-first pool=6 9.7s; pool=8 thrashes Python workers (17s in
+    # the round-1 measurement).
+    order = sorted(sizes, key=lambda s: (s not in layout.SALT_FACTORS, s))
+    with ThreadPoolExecutor(max_workers=max(1, min(6, len(order)))) as pool:
+        return sorted(pool.map(decode, order), key=lambda u: u["sinks"])
 
 
 class Checkpoint:
@@ -463,7 +451,7 @@ def run_pipeline(
         # summaries the sizes — no routed-table scan (an extra 100 TB scan
         # per run just to learn ≤22 known names). Iceberg keeps the
         # scan-free property via its partitions metadata table. The sizes
-        # set each unit's decode width (decode_width).
+        # set each sink's decode width (decode_width).
         if sink_format == "iceberg":
             sizes = {r["partition"]["sink"]:
                      int(r["total_data_file_size_in_bytes"])
@@ -471,123 +459,21 @@ def run_pipeline(
                          f"{iceberg_prefix}.routed.partitions").collect()}
         else:
             sizes = sink_partition_bytes(spark, routed_path)
-            # A `_grp_*` staging dir under sinks/ is always garbage on
-            # (re)entry to this stage: either a crashed decode_group left
-            # it (the per-sink marks below say what to redo) or its final
-            # delete didn't run. Left in place it would surface as a
-            # bogus sink to directory-listing consumers (cli status /
-            # dump) and hold duplicate data.
-            for stale in list_partition_dirs(spark, str(out / "sinks"),
-                                             "_grp_"):
-                delete_path(spark, str(out / "sinks" / f"_grp_{stale}"))
-        present = sorted(sizes)
-        par = spark.sparkContext.defaultParallelism
-        decoded_units: list[dict] = []
 
-        def decode_single(sink: str, sink_df: DataFrame) -> None:
-            tgt = str(out / "sinks" / sink)
-            dec = sink_decode_projection(sink, sink_df, dim)
-            write_output(dec, sink_format, tgt,
+        def write_sink(sink: str, dec: DataFrame) -> None:
+            write_output(dec, sink_format, str(out / "sinks" / sink),
                          f"{iceberg_prefix}.sink_{sink.lower()}")
             ck.mark(f"decode:{sink}")
 
-        def decode_group(todo: list[str], sink_df: DataFrame) -> None:
-            # same-schema sinks in ONE partitionBy(sink) write job, then a
-            # per-sink directory rename (filesystem metadata) into the
-            # sinks/<NAME> layout — saves len(todo)-1 jobs' worth of fixed
-            # cost. partitionBy drops the sink column from the data files,
-            # so each renamed dir's schema is identical to a single-sink
-            # write. Crash safety: marks land only after a sink's rename;
-            # a rerun regroups the unmarked remainder.
-            dec = sink_decode_projection(todo[0], sink_df, dim,
-                                         keep_sink=True)
-            tmp = str(out / "sinks" / f"_grp_{todo[0]}")
-            delete_path(spark, tmp)
-            write_output(dec, sink_format, tmp, None, ("sink",))
-            fs, _, HPath = _hadoop_fs(spark, tmp)
-            for s in todo:
-                dest = str(out / "sinks" / s)
-                delete_path(spark, dest)
-                part = HPath(f"{tmp}/sink={s}")
-                if fs.exists(part):
-                    if not fs.rename(part, HPath(dest)):
-                        raise OSError(f"rename failed: {part} -> {dest}")
-                    # the job's _SUCCESS stayed in the _grp_ root; recreate
-                    # it per sink so fold-written dirs keep the Hadoop
-                    # completeness convention single-sink writes follow
-                    fs.create(HPath(f"{dest}/_SUCCESS")).close()
-                    ck.mark(f"decode:{s}")
-                else:
-                    # present-but-filtered-empty member (e.g. a stale
-                    # zero-row sink=<s> partition in the routed table):
-                    # partitionBy wrote no dir for it, so fall back to the
-                    # single-sink write — a schema'd empty parquet dir, the
-                    # exact shape (and mark) consumers can read
-                    decode_single(s, decode_input(routed_df, [s], sizes[s],
-                                                  par)[0])
-            delete_path(spark, tmp)
-
-        def decode_unit(unit: list[str]) -> None:
-            # each unit is one Spark write job; running units from a
-            # thread pool lets the scheduler pipeline their stages instead
-            # of paying per-job fixed overhead serially. Per-sink
-            # checkpoint marks make a mid-stage crash resume from the
-            # first unwritten sink (each write is an idempotent overwrite).
-            todo = [s for s in unit if not (resume and ck.done(f"decode:{s}"))]
-            if not todo:
-                return
-            nbytes = sum(sizes[s] for s in todo)
-            sink_df, width = decode_input(routed_df, todo, nbytes, par)
-            decoded_units.append(
-                {"sinks": todo, "bytes": nbytes, "width": width})
-            if len(todo) == 1:
-                decode_single(todo[0], sink_df)
-            else:
-                decode_group(todo, sink_df)
-
-        # Unit building: same-schema groups fold into one job each (see
-        # SAME_SCHEMA_GROUPS); everything else is a single-sink unit. The
-        # Iceberg path keeps one job per sink — its sinks are catalog
-        # TABLES, not directories, so the rename trick does not apply.
-        grouped: set[str] = set()
-        units: list[list[str]] = []
-        # Fold only when task slots are scarce: the fold trades per-job
-        # fixed cost (driver planning + commit — the term that caps the
-        # 1->4 scaling pair, worth ~0.05 efficiency there) for a
-        # partitionBy write that is measurably WORSE once the executor
-        # pool is wide enough to pipeline the single-sink jobs instead
-        # (round-7 same-window 2x2 matrix at 32c, sf0.1,
-        # median-of-3: fold-only 23.5s vs singles 21.3s; with side-stage
-        # overlap on, 18.4s vs 17.7s — fold loses at saturation in every
-        # pairwise round). <=16 slots keeps the fold for the 1/4/8-core
-        # regimes the fixed-cost math targets.
-        fold = (spark.sparkContext.defaultParallelism
-                <= FOLD_MAX_PARALLELISM)
-        if sink_format == "parquet" and fold:
-            header_only = [s for s in present
-                           if s not in parse.DECODERS
-                           and s not in route.ROWS_SINKS]
-            for members in (*SAME_SCHEMA_GROUPS, tuple(header_only)):
-                g = [s for s in members if s in present]
-                if len(g) > 1:
-                    units.append(g)
-                    grouped.update(g)
-        units += [[s] for s in present if s not in grouped]
-        # hot units first (LPT-style scheduling: starting the longest jobs
-        # first avoids a hot-sink tail after the small ones drain) with a
-        # pool of 6; measured on the sf0.1 bench input: alpha-order pool=4
-        # 15.4s -> hot-first pool=4 11.0s -> hot-first pool=6 9.7s; pool=8
-        # thrashes Python workers (17s in the round-1 measurement)
-        units.sort(key=lambda u: (
-            0 if any(s in layout.SALT_FACTORS for s in u) else 1,
-            -len(u), u[0]))
-        pool_size = max(1, min(6, len(units)))
-        with ThreadPoolExecutor(max_workers=pool_size) as pool:
-            list(pool.map(decode_unit, units))
+        # Per-sink marks make a mid-stage crash resume from the sinks not
+        # yet written (each write is an idempotent overwrite).
+        todo = {s: n for s, n in sizes.items()
+                if not (resume and ck.done(f"decode:{s}"))}
+        units = decode_sinks(spark, routed_df, todo, dim, write_sink)
         metrics["stages"]["decode"] = {
-            "wall_sec": round(time.time() - t0, 3), "sinks": len(present),
-            "units": sorted(decoded_units, key=lambda u: u["sinks"])}
-        ck.mark("decode", sinks=len(present))
+            "wall_sec": round(time.time() - t0, 3), "sinks": len(sizes),
+            "units": units}
+        ck.mark("decode", sinks=len(sizes))
 
     # Leaving the `with` joins the side pool even when enrich/decode
     # raises: the side stages are independent idempotent overwrites whose

@@ -5,7 +5,7 @@ The reference's live replication source (`Connection::recv` packet loop,
 source over the same input table (SURVEY §2.1 S4): `readStream` on the
 sequence directory. The full DAG (run_full_available_now, start_full_live)
 runs each micro-batch through the batch transform code
-(route.routed_rows, enrich.table_map_dim, job.sink_decode_projection), so
+(route.routed_rows, enrich.table_map_dim, job.decode_sinks), so
 stream results converge to the batch goldens when drained with
 Trigger.AvailableNow. The stateful operators (running and watermarked
 per-sink counts, transaction assembly) read only header fields, so they
@@ -158,8 +158,9 @@ def _full_dag_writer(spark: SparkSession, input_dir: str, out_dir: str,
     micro-batch routes to the routed table (route.routed_rows), refreshes
     the TableMap dimension by calling enrich.table_map_dim with the
     previous snapshot (cumulative latest-wins — a rows event may arrive
-    batches after its TableMap), and appends per-sink typed decodes,
-    reusing the exact batch decoders (parse.DECODERS).
+    batches after its TableMap), and decodes its sinks through
+    job.decode_sinks, the batch DAG's own decode stage (same width rule,
+    same hot-first job pool, same projection).
 
     Idempotence on retry: every write lands in a `batch=<id>` subdirectory
     with mode=overwrite, so a replayed micro-batch overwrites its own
@@ -184,9 +185,8 @@ def _full_dag_writer(spark: SparkSession, input_dir: str, out_dir: str,
     single-TableMap assumption (real replication streams satisfy it per
     binlog file; the fixtures do too)."""
     from . import enrich
-    from .job import (decode_input, delete_if_empty, delete_path,
-                      list_partition_dirs, sink_decode_projection,
-                      sink_partition_bytes)
+    from .job import (decode_sinks, delete_if_empty, delete_path,
+                      list_partition_dirs, sink_partition_bytes)
 
     # string joins, not pathlib: PurePath collapses the double slash in
     # scheme URIs (hdfs://nn -> hdfs:/nn); every filesystem-metadata op
@@ -247,17 +247,16 @@ def _full_dag_writer(spark: SparkSession, input_dir: str, out_dir: str,
         # which sinks this batch produced, and their sizes, is filesystem
         # metadata (the routed batch write is partitioned by sink) — list
         # the sink=* directories (scheme-aware) instead of re-scanning the
-        # batch; each sink decodes at the batch DAG's width rule
-        # (job.decode_input)
-        sizes = sink_partition_bytes(spark, routed_batch)
-        par = spark.sparkContext.defaultParallelism
-        for sink in sorted(sizes):
-            sink_df, _ = decode_input(batch_routed, [sink], sizes[sink], par)
-            # the SHARED projection (job.sink_decode_projection): batch
-            # and stream typed sinks cannot drift in schema or semantics
-            dec = sink_decode_projection(sink, sink_df, dim)
+        # batch. The batch DAG's decode (job.decode_sinks) writes each
+        # sink into this batch's partition, so batch and stream typed
+        # sinks cannot drift in schema, semantics or decode width.
+        def write_sink(sink: str, dec: DataFrame) -> None:
             dec.write.mode("overwrite").parquet(
                 f"{sinks_root}/{sink}/batch={batch_id}")
+
+        decode_sinks(spark, batch_routed,
+                     sink_partition_bytes(spark, routed_batch), dim,
+                     write_sink)
 
     return (read_stream(spark, input_dir, max_files_per_trigger,
                         input_format)

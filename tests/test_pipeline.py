@@ -426,132 +426,67 @@ def test_side_stages_complete_when_enrich_fails(spark, fixture_parquet,
     assert counts(out) == counts(pipeline_out["out"])
 
 
-def test_fold_and_singles_sink_layouts_identical(spark, fixture_parquet,
-                                                 tmp_path, monkeypatch,
-                                                 pipeline_out):
-    """The same-schema sink fold is parallelism-conditional (job.py: fold
-    when defaultParallelism <= FOLD_MAX_PARALLELISM), so BOTH
-    write shapes are production paths — one job per sink at wide
-    parallelism, grouped partitionBy(sink) + renames when slots are
-    scarce. Their sinks/ trees must be indistinguishable: same sink dirs,
-    same columns (partitionBy must drop the `sink` column from data
-    files), same rows. pipeline_out runs at local[4] => the FOLD path;
-    this run forces singles."""
+def test_decode_resume_redoes_only_unmarked_sinks(spark, fixture_parquet,
+                                                  tmp_path):
+    """A run killed mid-decode leaves some sinks marked `decode:<S>` and
+    some not. The rerun with the same run_id decodes exactly the unmarked
+    ones: the lost sink comes back with the same rows, and a marked sink's
+    files are not rewritten."""
+    import shutil
+
     from binlogpipe import job
 
-    monkeypatch.setattr(job, "FOLD_MAX_PARALLELISM", 0)
     out = tmp_path / "out"
-    m = job.run_pipeline(spark, fixture_parquet, str(out), run_id="singles")
-    assert m["rows"] == 166
-    base = Path(pipeline_out["out"]) / "sinks"
-    sinks = sorted(p.name for p in base.iterdir() if p.is_dir())
-    assert sorted(p.name for p in (out / "sinks").iterdir()
-                  if p.is_dir()) == sinks
-    for sink in sinks:
-        # fold-written dirs must keep the Hadoop _SUCCESS completeness
-        # convention (decode_group recreates it after the rename —
-        # downstream validation tooling treats a marker-less dir as a
-        # partial write)
-        assert (base / sink / "_SUCCESS").exists(), sink
-        assert (out / "sinks" / sink / "_SUCCESS").exists(), sink
-        a = spark.read.parquet(str(base / sink))
-        b = spark.read.parquet(str(out / "sinks" / sink))
-        assert sorted(a.columns) == sorted(b.columns), sink
-        assert "sink" not in a.columns, sink
-        ka = {r["doc_id"]: r.asDict() for r in a.collect()}
-        kb = {r["doc_id"]: r.asDict() for r in b.collect()}
-        assert ka == kb, sink
+    job.run_pipeline(spark, fixture_parquet, str(out), run_id="r1")
+    anon = out / "sinks" / "ANON_GTID"
+    anon_ids = sorted(r["doc_id"] for r in
+                      spark.read.parquet(str(anon)).collect())
 
+    def files(d):
+        return {p.name: p.stat().st_mtime_ns for p in d.iterdir()}
 
-def test_stale_group_staging_swept_on_resume(spark, fixture_parquet,
-                                             tmp_path, monkeypatch):
-    """A run killed mid-decode_group leaves a `sinks/_grp_*` staging dir
-    (the job's temp partitionBy output) holding duplicate data for the
-    not-yet-renamed members. On re-entry to the decode stage every
-    `_grp_*` dir is garbage by construction (per-sink marks say what to
-    redo), so the stage sweeps them — otherwise directory-listing
-    consumers (cli dump/status) would surface `_grp_X` as a sink."""
-    from binlogpipe import job
-
-    monkeypatch.setattr(job, "FOLD_MAX_PARALLELISM", 10**6)
-    out = tmp_path / "out"
-    job.run_pipeline(spark, fixture_parquet, str(out), run_id="g1")
-    counts = {r["sink"]: r["n"] for r in
-              spark.read.parquet(str(out / "agg" / "sink_counts")).collect()}
-
-    # simulate the mid-group crash: GTID renamed+marked, ANON_GTID not —
-    # the staging dir survives with ANON_GTID's partition still inside
+    gtid = files(out / "sinks" / "GTID")
     ck_path = out / "_checkpoint" / "state.json"
     state = json.loads(ck_path.read_text())
     for stage in ("decode", "decode:ANON_GTID"):
         state["stages"].pop(stage)
     ck_path.write_text(json.dumps(state))
-    stale = out / "sinks" / "_grp_GTID"
-    (stale / "sink=ANON_GTID").mkdir(parents=True)
-    (stale / "sink=ANON_GTID" / "part-junk.parquet").write_bytes(b"junk")
-    (stale / "_SUCCESS").write_bytes(b"")
-    anon_rows = sorted(
-        r["doc_id"] for r in
-        spark.read.parquet(str(out / "sinks" / "ANON_GTID")).collect())
-    import shutil as _sh
+    shutil.rmtree(anon)
 
-    _sh.rmtree(out / "sinks" / "ANON_GTID")
-
-    job.run_pipeline(spark, fixture_parquet, str(out), run_id="g1")
-    assert not stale.exists()
-    got = sorted(
-        r["doc_id"] for r in
-        spark.read.parquet(str(out / "sinks" / "ANON_GTID")).collect())
-    assert got == anon_rows
-    # untouched (still-marked) members were not rewritten or damaged
-    assert spark.read.parquet(str(out / "sinks" / "GTID")).count() == \
-        counts["GTID"]
-    # the sweep also clears staging dirs that do NOT collide with the
-    # rerun's own tmp name (a crash in a DIFFERENT group's unit)
-    leftover = out / "sinks" / "_grp_LEFTOVER"
-    leftover.mkdir()
-    state = json.loads(ck_path.read_text())
-    state["stages"].pop("decode")
-    ck_path.write_text(json.dumps(state))
-    job.run_pipeline(spark, fixture_parquet, str(out), run_id="g1")
-    assert not leftover.exists()
+    m = job.run_pipeline(spark, fixture_parquet, str(out), run_id="r1")
+    assert [u["sinks"] for u in m["stages"]["decode"]["units"]] == \
+        [["ANON_GTID"]]
+    assert sorted(r["doc_id"] for r in
+                  spark.read.parquet(str(anon)).collect()) == anon_ids
+    assert files(out / "sinks" / "GTID") == gtid
 
 
-def test_fold_empty_member_falls_back_to_single_write(spark, fixture_parquet,
-                                                      tmp_path, monkeypatch):
+def test_empty_routed_sink_writes_empty_typed_sink(spark, fixture_parquet,
+                                                   tmp_path):
     """A routed-table sink partition can exist as a directory yet hold
     zero rows (stale leftover of a dynamic-partition overwrite or a swept
-    compaction). It is then listed as `present` and joins its same-schema
-    fold group, but partitionBy writes no `sink=<s>` dir for it — the
-    rename loop must fall back to the single-sink write, leaving the
-    standard consumer-readable shape: a schema'd empty parquet dir with
-    `_SUCCESS` and a checkpoint mark."""
+    compaction). Its decode still writes the standard consumer-readable
+    shape: a schema'd empty parquet dir with `_SUCCESS` and a checkpoint
+    mark."""
     from binlogpipe import job
 
-    monkeypatch.setattr(job, "FOLD_MAX_PARALLELISM", 10**6)
     out = tmp_path / "out"
-    job.run_pipeline(spark, fixture_parquet, str(out), run_id="f1")
-    stop_count = spark.read.parquet(str(out / "sinks" / "STOP")).count()
+    job.run_pipeline(spark, fixture_parquet, str(out), run_id="e1")
 
-    # stale zero-row partition: dir exists under routed/, no data files.
-    # HEARTBEAT is header-only like STOP, so the two fold into one group
-    # and partitionBy emits a dir only for STOP.
+    # HEARTBEAT is header-only like STOP, so it decodes to STOP's columns
     (out / "routed" / "sink=HEARTBEAT").mkdir()
     ck_path = out / "_checkpoint" / "state.json"
     state = json.loads(ck_path.read_text())
-    for stage in ("decode", "decode:STOP"):
-        state["stages"].pop(stage)
+    state["stages"].pop("decode")
     ck_path.write_text(json.dumps(state))
 
-    job.run_pipeline(spark, fixture_parquet, str(out), run_id="f1")
+    job.run_pipeline(spark, fixture_parquet, str(out), run_id="e1")
 
     hb = out / "sinks" / "HEARTBEAT"
     assert (hb / "_SUCCESS").exists()
     hb_df = spark.read.parquet(str(hb))
     assert hb_df.count() == 0
     stop_df = spark.read.parquet(str(out / "sinks" / "STOP"))
-    assert sorted(hb_df.columns) == sorted(stop_df.columns)
-    assert stop_df.count() == stop_count
-    # the fallback marked the sink: a third resume is a decode no-op
+    assert hb_df.columns == stop_df.columns
     state = json.loads(ck_path.read_text())
     assert "decode:HEARTBEAT" in state["stages"]

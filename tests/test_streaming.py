@@ -132,18 +132,23 @@ def test_stream_full_dag_matches_batch(spark, fixture_parquet, tmp_path):
     snaps = sorted(p.name for p in (out / "table_map_dim").glob("v=*"))
     assert len(snaps) <= 3 and "v=3" in snaps, snaps
 
-    # typed decode parity with the batch DAG on a payload-bearing sink
+    # typed decode parity with the batch DAG on every sink: both DAGs
+    # decode through job.decode_sinks
     from binlogpipe.job import run_pipeline
     bout = tmp_path / "full_batch"
     run_pipeline(spark, fixture_parquet, str(bout), run_id="fb")
-    for sink in ("QUERY", "WRITE_ROWS_V2", "ROWS_QUERY"):
+    sinks = sorted(p.name for p in (bout / "sinks").iterdir() if p.is_dir())
+    assert sinks == sorted(GOLDEN_COUNTS)
+    for sink in sinks:
+        # Hadoop completeness convention: every batch sink dir is committed
+        assert (bout / "sinks" / sink / "_SUCCESS").exists(), sink
         # drop only the micro-batch partition column — everything else
         # must match exactly
         s = spark.read.parquet(str(out / "sinks" / sink)).drop("batch")
         b = spark.read.parquet(str(bout / "sinks" / sink))
         # FULL schema equality — an intersection compare silently masked
         # the streaming copy losing statement_kind (round-4 review)
-        assert sorted(s.columns) == sorted(b.columns), sink
+        assert sorted(s.dtypes) == sorted(b.dtypes), sink
         cols = sorted(b.columns)
         srows = {r["doc_id"]: r.asDict() for r in s.select(cols).collect()}
         brows = {r["doc_id"]: r.asDict() for r in b.select(cols).collect()}
