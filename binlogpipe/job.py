@@ -47,16 +47,18 @@ DECODE_BASE_COLS = ["doc_id", "n_tok", "source", "timestamp", "event_type",
                     "checksum"]
 
 
-# Bytes of routed input per decode task. Every Python-UDF task pays a fixed
-# worker cost: pyspark's per-task setup_spark_files runs
-# importlib.invalidate_caches(), which re-reads the pyspark.zip directory
-# (118 ms CPU per call on CPython 3.11.7, 4-vCPU VM). The decode work itself
-# grows with bytes. So a sink's task count follows its routed bytes, not
-# the number of files the router's salt spread it over: a small sink is one
-# task, a large one takes the cluster's full width. bench.py's sf0.1 input
-# routes to ~306 MB, which puts its QUERY and GTID sinks near the 8-12 task
-# optimum measured there; at sf1 they clamp to defaultParallelism. The
-# width sweeps are in OPTIMIZATION_r07.md #9.
+# Bytes of routed input per decode task. A decode task's cost is a
+# per-task part (task scheduling, worker hand-off, Arrow stream set-up,
+# the sink's write commit) plus decode work that grows with bytes. So a
+# sink's task count follows its routed bytes, not the number of files the
+# router's salt spread it over: a small sink is one task, a large one
+# takes the cluster's full width. bench.py's sf0.1 input routes to
+# ~306 MB, which puts its QUERY and GTID sinks near the 8-12 task optimum
+# measured there; at sf1 they clamp to defaultParallelism. The value was
+# chosen while every Python task also paid ~0.2 s CPU re-reading Spark's
+# archives, which pydaemon now removes on local masters; the trans_hot
+# sweep at 2/4/8 MiB after that change is in ROADMAP.md. The width sweeps
+# are in OPTIMIZATION_r07.md #9.
 DECODE_TASK_BYTES = 8 * 1024 * 1024
 
 
@@ -572,11 +574,14 @@ def main() -> None:  # spark-submit entrypoint
     spark = build_spark(cores=args.cores)
     m = run_pipeline(spark, args.input, args.out, run_id=args.run_id,
                      resume=not args.no_resume)
-    # effective master in the printed metrics: a spark-submit --master must
-    # survive build_spark (session.py master resolution) — the submit test
-    # asserts this from the driver's own report, the only place the
-    # regression is visible (round-5 advice items 1+4)
+    # effective master and Python daemon module in the printed metrics: a
+    # spark-submit --master must survive build_spark (session.py master
+    # resolution), and only build_spark's own local master may switch the
+    # daemon — the submit test asserts both from the driver's own report,
+    # the only place the regression is visible (round-5 advice items 1+4)
     m["master"] = spark.sparkContext.master
+    m["daemon_module"] = spark.sparkContext.getConf().get(
+        "spark.python.daemon.module", None)
     print(json.dumps(m))
 
 

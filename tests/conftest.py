@@ -33,8 +33,10 @@ def data_dir_is_read_only():
 def spark():
     from pyspark.sql import SparkSession
 
+    from binlogpipe.session import local_python_daemon
+
     s = (
-        SparkSession.builder.master("local[4]")
+        local_python_daemon(SparkSession.builder.master("local[4]"))
         .appName("binlogpipe-tests")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")

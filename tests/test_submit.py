@@ -47,6 +47,9 @@ def test_spark_submit_pyfiles_full_dag(tmp_path):
     # job.main prints the metrics JSON on its last stdout line
     metrics = json.loads(p.stdout.strip().splitlines()[-1])
     assert metrics["master"] == "local[3]"
+    # the workers cannot import binlogpipe.pydaemon before --py-files
+    # reach them: a submitted master keeps the default Python daemon
+    assert metrics["daemon_module"] is None
     assert metrics["rows"] == 166
     assert metrics["stages"]["route"]["rows"] == 166
     sinks = sorted(d.name for d in (out / "sinks").iterdir())
