@@ -21,8 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-MAGIC = b"\xfebin"
-HEADER_LEN = 19
+from . import layout
 
 CONTRACT_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -32,16 +31,17 @@ def split_binlog_bytes(data: bytes) -> tuple[list[bytes], str | None]:
     parsed before the corruption point are kept (the reference aborts the
     whole file; keeping the valid prefix is strictly more useful and the
     quarantine row preserves the evidence)."""
-    if not data.startswith(MAGIC):
+    magic = bytes(layout.MAGIC)
+    if not data.startswith(magic):
         return [], "missing binlog magic"
-    events, off = [], len(MAGIC)
+    events, off = [], len(magic)
     import struct
 
     while off < len(data):
-        if off + HEADER_LEN > len(data):
+        if off + layout.HEADER_LEN > len(data):
             return events, f"trailing garbage at {off}"
         (event_size,) = struct.unpack_from("<I", data, off + 9)
-        if event_size < HEADER_LEN or off + event_size > len(data):
+        if event_size < layout.HEADER_LEN or off + event_size > len(data):
             return events, f"bad event_size {event_size} at {off}"
         events.append(data[off:off + event_size])
         off += event_size
@@ -154,8 +154,9 @@ def split_stream(files: DataFrame, root: str = "") -> DataFrame:
                     # quarantine row: the unparseable tail (or whole file),
                     # capped so one corrupt 1 GB file can't blow a row.
                     # MAGIC only counts as consumed when it was present.
-                    consumed = ((len(MAGIC) if data.startswith(MAGIC) else 0)
-                                + sum(len(e) for e in events))
+                    consumed = ((len(layout.MAGIC)
+                                 if data.startswith(bytes(layout.MAGIC))
+                                 else 0) + sum(len(e) for e in events))
                     bad = data[consumed:consumed + 4096]
                     out["doc_id"].append(f"{stem}/_corrupt")
                     out["tokens"].append(

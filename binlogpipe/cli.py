@@ -35,9 +35,9 @@ def cmd_trans(args) -> None:
         input_format="binlog" if args.binlog else "parquet")
     print(json.dumps(metrics, indent=1))
     out_s = str(args.out).rstrip("/")
-    # scheme-aware listing (hdfs/s3a out dirs; also absent on empty-input
-    # runs where the pipeline returns before creating sinks/) + delete-
-    # before-write so a resumed invocation doesn't crash on the old dump
+    # scheme-aware listing (hdfs/s3a out dirs; sinks/ is absent after an
+    # empty input, which writes no typed sink) + delete-before-write so a
+    # resumed invocation doesn't crash on the old dump
     sinks = sorted(job.list_partition_dirs(spark, f"{out_s}/sinks", ""))
     if args.format == "json":
         dump_dir = f"{out_s}/debug_json"

@@ -9,7 +9,7 @@ Spark lifecycle equivalent of `bcrab trans` (SURVEY §3.1):
   [pass 1] TABLE_MAP slice -> decode -> table-map dimension (broadcast) ->
   [pass 2] per-sink typed decode (partition-pruned reads of the routed
            table; rows events join the broadcast dimension first) ->
-  aggregates (sink counts, per-(source,sink) token stats, desc report) ->
+  aggregates (sink counts, per-(source,sink) token stats) ->
   lineage + metrics + _checkpoint state.
 
 Sinks are parquet directories with per-sink typed schemas (the Iceberg
@@ -17,20 +17,25 @@ catalog is an optional seam: set sink_format="iceberg" + a configured
 catalog on a real cluster; the sandbox has no Iceberg jars, and parquet
 keeps identical layout semantics: partition pruning + fan-out writes).
 
+Empty input takes the same path: lineage and the aggregates are zero-row
+tables, no typed sink is written, and every stage is marked.
+
 Resumability: each stage is idempotent (overwrite of its own output dir)
 and recorded in ``_checkpoint/state.json`` keyed by run_id + stage name,
 together with the run's input fingerprint; re-running the same input
 skips completed stages, so a killed job resumes where it stopped
 (BASELINE.json "resumable from snapshot + checkpoint"), and resuming with
-a different input or output settings raises.
+a different input or output settings raises. The ledger and
+metrics.json go through the Hadoop FileSystem like every stage output, so
+the out dir may be any scheme Spark writes to (file://, hdfs://, s3a://).
 """
 
 from __future__ import annotations
 
 import json
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
-from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -139,25 +144,30 @@ class Checkpoint:
     ledger whose fingerprint differs raises instead of skipping stages:
     the skipped outputs would belong to another input."""
 
-    def __init__(self, out_dir: str, run_id: str, fingerprint: str,
-                 resume: bool):
-        import threading
-
-        self.path = Path(out_dir) / "_checkpoint" / "state.json"
+    def __init__(self, spark: SparkSession, out_dir: str, run_id: str,
+                 fingerprint: str, resume: bool):
+        self._spark = spark
+        self.path = f"{out_dir}/_checkpoint/state.json"
         self._lock = threading.Lock()
         self.state: dict = {"run_id": run_id, "fingerprint": fingerprint,
                             "stages": {}}
-        if resume and self.path.exists():
-            prev = json.loads(self.path.read_text())
-            if prev.get("run_id") == run_id and prev.get("stages"):
-                if prev.get("fingerprint") != fingerprint:
-                    raise ValueError(
-                        f"{out_dir} holds stages of run_id {run_id!r} "
-                        f"committed for a different input or output "
-                        f"settings; resuming would reuse them. Rerun with "
-                        f"--no-resume (resume=False) to overwrite, or use "
-                        f"another --run-id or out dir.")
-                self.state = prev
+        prev: dict = {}
+        fs, hpath = _small_file_fs(spark, self.path)
+        if resume and fs.exists(hpath):
+            stream = fs.open(hpath)
+            try:
+                prev = json.loads(bytes(stream.readAllBytes()))
+            finally:
+                stream.close()
+        if prev.get("run_id") == run_id and prev.get("stages"):
+            if prev.get("fingerprint") != fingerprint:
+                raise ValueError(
+                    f"{out_dir} holds stages of run_id {run_id!r} "
+                    f"committed for a different input or output "
+                    f"settings; resuming would reuse them. Rerun with "
+                    f"--no-resume (resume=False) to overwrite, or use "
+                    f"another --run-id or out dir.")
+            self.state = prev
 
     def done(self, stage: str) -> bool:
         return stage in self.state["stages"]
@@ -165,10 +175,8 @@ class Checkpoint:
     def mark(self, stage: str, **info) -> None:
         with self._lock:  # decode marks arrive from the job thread pool
             self.state["stages"][stage] = {"ts": time.time(), **info}
-            self.path.parent.mkdir(parents=True, exist_ok=True)
-            tmp = self.path.with_suffix(".tmp")
-            tmp.write_text(json.dumps(self.state, indent=1))
-            tmp.replace(self.path)
+            _write_text(self._spark, self.path,
+                        json.dumps(self.state, indent=1))
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -182,6 +190,41 @@ def _hadoop_fs(spark: SparkSession, path: str):
     cls = jvm.org.apache.hadoop.fs.Path
     hpath = cls(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, cls
+
+
+def _small_file_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for one small driver-written file of the output
+    tree: the session's cached FileSystem for ``path``, or the raw
+    FileSystem inside it when it is a checksummed one (the local FS). A
+    ``.crc`` sidecar written there would fail every read after the file
+    is edited by hand."""
+    fs, hpath, _ = _hadoop_fs(spark, path)
+    if spark._jvm.org.apache.hadoop.fs.ChecksumFileSystem \
+            ._java_lang_class.isInstance(fs):
+        fs = fs.getRawFileSystem()
+    return fs, hpath
+
+
+def _write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Atomically replace a scheme-aware ``path`` with ``text``: write a
+    sibling ``.tmp`` file, then rename it over the target."""
+    fs, hpath = _small_file_fs(spark, path)
+    tmp = hpath.suffix(".tmp")
+    stream = fs.create(tmp, True)
+    try:
+        stream.write(text.encode())
+    finally:
+        stream.close()
+    if not fs.rename(tmp, hpath):
+        # HDFS's rename refuses an existing target (the raw local FS's
+        # replaces it); FileContext's OVERWRITE rename replaces it there
+        jvm = spark._jvm
+        over = spark.sparkContext._gateway.new_array(
+            jvm.org.apache.hadoop.fs.Options.Rename, 1)
+        over[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+        jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+            hpath.toUri(), spark._jsc.hadoopConfiguration()).rename(
+                tmp, hpath, over)
 
 
 def list_partition_dirs(spark: SparkSession, path: str,
@@ -295,7 +338,6 @@ def run_pipeline(
     out_dir: str,
     run_id: str = "run0",
     resume: bool = True,
-    typed_sinks: bool = True,
     collect_metrics: bool = True,
     sink_format: str = "parquet",
     iceberg_prefix: str = "local.binlog",
@@ -307,91 +349,80 @@ def run_pipeline(
     through `write_output`'s Iceberg path as ``<iceberg_prefix>.<name>``
     tables (requires a configured catalog; see write_output).
 
-    The batch pipeline's out_dir must be DRIVER-POSIX (local or a
-    mounted filesystem): the checkpoint ledger and metrics.json are
-    local-file operations and the stage paths join via pathlib, which
-    collapses scheme URIs. A scheme'd out_dir fails loudly here instead
-    of silently writing to a mangled local path; the streaming DAG
-    (streaming.run_full_available_now), compact_sink, and the CLI
-    listings ARE scheme-aware.
-
     If enrich or decode raises, the lineage and aggregate side stages
     still run to completion (and are checkpointed) before the error
     propagates, so a rerun with the same ``run_id`` skips them.
 
     ``resume=True`` against a ledger of the same ``run_id`` whose input
-    fingerprint (input listing, ``typed_sinks``, ``sink_format``,
-    ``input_format``) differs raises ValueError; ``resume=False``
-    overwrites. ``metrics["resumed"]`` names the stages this call
-    skipped because the ledger already held them."""
-    import re as _re
-
-    if _re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", str(out_dir)):
-        raise ValueError(
-            f"run_pipeline out_dir must be a driver-local path, got "
-            f"{out_dir!r} (pathlib would silently mangle the scheme; the "
-            f"checkpoint ledger and metrics are local-file ops). Use the "
-            f"streaming DAG for scheme'd output trees.")
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    ck = Checkpoint(out_dir, run_id, input_fingerprint(
-        spark, input_path, typed_sinks=typed_sinks, sink_format=sink_format,
+    fingerprint (input listing, ``sink_format``, ``input_format``)
+    differs raises ValueError; ``resume=False`` overwrites.
+    ``metrics["resumed"]`` names the stages this call skipped because the
+    ledger already held them."""
+    out = str(out_dir).rstrip("/")
+    ck = Checkpoint(spark, out, run_id, input_fingerprint(
+        spark, input_path, sink_format=sink_format,
         input_format=input_format), resume)
     # a stage whose ledger mark predates this call is skipped, not rerun
     metrics: dict = {"run_id": run_id, "resumed": [
         s for s in ("route", "lineage", "aggregate", "enrich", "decode")
-        if resume and ck.done(s)], "stages": {}}
+        if ck.done(s)], "stages": {}}
     t_start = time.time()
 
-    src = read_input(spark, input_path, input_format)
+    def stage(name: str, work: Callable[[], dict | None]) -> None:
+        """Run ``work`` unless the ledger already holds ``name``; record
+        its metrics and wall time, then mark ``name`` with them."""
+        if name in metrics["resumed"]:
+            return
+        t0 = time.time()
+        rec = work() or {}
+        rec["wall_sec"] = round(time.time() - t0, 3)
+        metrics["stages"][name] = rec
+        ck.mark(name, **rec)
+
+    rows = route.routed_rows(read_input(spark, input_path, input_format))
 
     # ---- stage: route (header decode + validation + salted fan-out) ----
-    routed_path = str(out / "routed")
-    if not (resume and ck.done("route")):
-        t0 = time.time()
-        obs = Observation("route")
-        rows = lineage.observe_counts(route.routed_rows(src), obs)
-        write_output(route.routed(rows), sink_format, routed_path,
-                     f"{iceberg_prefix}.routed", ("sink",))
-        try:
-            stage_metrics = {k: (int(v) if v is not None else None)
-                             for k, v in obs.get.items()}
-        except Exception:  # noqa: BLE001 — Observation.get asserts on a
-            # zero-row observed action (Spark 4); empty input is valid.
-            # But ANY metrics failure lands here, so confirm emptiness
-            # against the routed output that was just written before
-            # recording rows=0 — a transient metrics error must not
-            # masquerade as empty input, skip decode, and persist rows=0
-            # into the checkpoint for every resumed run after
-            try:
-                probe = (spark.table(f"{iceberg_prefix}.routed")
-                         if sink_format == "iceberg"
-                         else spark.read.parquet(routed_path))
-                is_empty = len(probe.head(1)) == 0
-            except Exception:  # noqa: BLE001 — a zero-row partitionBy
-                # write leaves only _SUCCESS; the schema-less read throws
-                is_empty = True
-            stage_metrics = ({"rows": 0, "tokens": 0} if is_empty
-                             else {"rows": None, "tokens": None})
-        stage_metrics["wall_sec"] = round(time.time() - t0, 3)
-        metrics["stages"]["route"] = stage_metrics
-        ck.mark("route", **stage_metrics)
-    # empty input: a partitionBy write of zero rows leaves only _SUCCESS
-    # (schema inference on the read would throw) and there are no sinks to
-    # decode — complete gracefully with zero-row metrics instead of dying
-    route_rows = ck.state["stages"].get("route", {}).get("rows")
-    if route_rows == 0:
-        metrics["wall_sec"] = round(time.time() - t_start, 3)
-        metrics["rows"] = 0
-        metrics["rows_per_sec"] = 0.0
-        metrics["empty_input"] = True
-        if collect_metrics:
-            (out / "metrics.json").write_text(json.dumps(metrics, indent=1))
-        return metrics
+    routed_path = f"{out}/routed"
 
+    def list_sinks() -> dict[str, int]:
+        # The `sink=<name>` directories of the sink-partitioned routed
+        # write ARE the distinct sink set and their content summaries the
+        # sizes: filesystem metadata, no routed-table scan (Iceberg: its
+        # partitions metadata table). The sizes set each sink's decode
+        # width (decode_width).
+        if sink_format == "iceberg":
+            return {r["partition"]["sink"]:
+                    int(r["total_data_file_size_in_bytes"])
+                    for r in spark.table(
+                        f"{iceberg_prefix}.routed.partitions").collect()}
+        return sink_partition_bytes(spark, routed_path)
+
+    sizes: dict[str, int] = {}
+
+    def route_stage() -> dict:
+        obs = Observation("route")
+        write_output(route.routed(rows.observe(
+            obs, F.count(F.lit(1)).alias("rows"),
+            F.sum("n_tok").alias("tokens"))), sink_format, routed_path,
+            f"{iceberg_prefix}.routed", ("sink",))
+        sizes.update(list_sinks())
+        # zero rows leave no sink partition, and Observation.get asserts
+        # on a zero-row observed action (Spark 4)
+        if not sizes:
+            return {"rows": 0, "tokens": 0}
+        return {k: (int(v) if v is not None else None)
+                for k, v in obs.get.items()}
+
+    stage("route", route_stage)
+    if "route" in metrics["resumed"]:
+        sizes.update(list_sinks())
+
+    # The route projection's schema, not inference: a zero-row
+    # partitionBy write leaves only _SUCCESS, which inference refuses and
+    # this reads as zero rows.
     routed_df = (spark.table(f"{iceberg_prefix}.routed")
                  if sink_format == "iceberg"
-                 else spark.read.parquet(routed_path))
+                 else spark.read.schema(rows.schema).parquet(routed_path))
 
     # ---- side stages: lineage + aggregate (only need the routed table) ----
     # Submitted to a side thread pool so their driver-side planning + job
@@ -399,83 +430,45 @@ def run_pipeline(
     # enrich/decode window instead of adding serially to the run wall
     # (tools/fixed_cost_probe.py: F is what caps the 1->4 scaling pair).
 
-    def _lineage_stage() -> None:
-        if resume and ck.done("lineage"):
-            return
-        t0 = time.time()
-        lin = lineage.lineage_from_routed(routed_df)
-        lin.write.mode("overwrite").parquet(str(out / "lineage"))
-        metrics["stages"]["lineage"] = {"wall_sec": round(time.time() - t0, 3)}
-        ck.mark("lineage")
+    def lineage_stage() -> None:
+        lineage.lineage_from_routed(routed_df).write.mode(
+            "overwrite").parquet(f"{out}/lineage")
 
-    def _aggregate_stage() -> None:
-        if resume and ck.done("aggregate"):
-            return
-        t0 = time.time()
+    def aggregate_stage() -> None:
         # one scan: per-(source, sink) stats; sink counts are a rollup of it
-        stats = agg.source_type_stats(routed_df)
-        stats.write.mode("overwrite").parquet(
-            str(out / "agg" / "source_type_stats"))
-        stats_df = spark.read.parquet(str(out / "agg" / "source_type_stats"))
-        (stats_df.groupBy("sink").agg(F.sum("n").alias("n")).orderBy("sink")
-         .write.mode("overwrite").parquet(str(out / "agg" / "sink_counts")))
-        metrics["stages"]["aggregate"] = {
-            "wall_sec": round(time.time() - t0, 3)}
-        ck.mark("aggregate")
+        stats_path = f"{out}/agg/source_type_stats"
+        agg.source_type_stats(routed_df).write.mode("overwrite").parquet(
+            stats_path)
+        (spark.read.parquet(stats_path)
+         .groupBy("sink").agg(F.sum("n").alias("n")).orderBy("sink")
+         .write.mode("overwrite").parquet(f"{out}/agg/sink_counts"))
 
     # ---- stage: enrich (table-map dictionary from the TABLE_MAP slice) ----
-    dim_path = str(out / "table_map_dim")
+    dim_path = f"{out}/table_map_dim"
 
-    def _enrich_stage() -> None:
-        if resume and ck.done("enrich"):
-            return
-        t0 = time.time()
-        dim = enrich.table_map_dim(routed_df).drop("doc_id")
-        dim.write.mode("overwrite").parquet(dim_path)
-        metrics["stages"]["enrich"] = {"wall_sec": round(time.time() - t0, 3)}
-        ck.mark("enrich")
+    def enrich_stage() -> None:
+        enrich.table_map_dim(routed_df).drop("doc_id").write.mode(
+            "overwrite").parquet(dim_path)
 
     # ---- stage: per-sink typed decode ----
-    def _decode_stage() -> None:
-        if not typed_sinks or (resume and ck.done("decode")):
-            return
-        t0 = time.time()
-        dim = spark.read.parquet(dim_path)
-        # NO persist of the routed table here: an A/B that pre-built the
-        # cache outside the timed region showed a 15-20% win, but paying
-        # the cache materialization INSIDE the stage (as a real run must)
-        # measured decode 11s -> 16s at sf0.1 — the 18 pruned parquet scans
-        # are cheaper than one full cache build + 18 cache reads.
-        #
-        # Which sinks exist, and how many bytes each holds, is FILESYSTEM
-        # METADATA: the routed write is partitioned by sink, so the
-        # `sink=<name>` directories ARE the distinct set and their content
-        # summaries the sizes — no routed-table scan (an extra 100 TB scan
-        # per run just to learn ≤22 known names). Iceberg keeps the
-        # scan-free property via its partitions metadata table. The sizes
-        # set each sink's decode width (decode_width).
-        if sink_format == "iceberg":
-            sizes = {r["partition"]["sink"]:
-                     int(r["total_data_file_size_in_bytes"])
-                     for r in spark.table(
-                         f"{iceberg_prefix}.routed.partitions").collect()}
-        else:
-            sizes = sink_partition_bytes(spark, routed_path)
-
+    # NO persist of the routed table here: an A/B that pre-built the cache
+    # outside the timed region showed a 15-20% win, but paying the cache
+    # materialization INSIDE the stage (as a real run must) measured
+    # decode 11s -> 16s at sf0.1 — the 18 pruned parquet scans are cheaper
+    # than one full cache build + 18 cache reads.
+    def decode_stage() -> dict:
         def write_sink(sink: str, dec: DataFrame) -> None:
-            write_output(dec, sink_format, str(out / "sinks" / sink),
+            write_output(dec, sink_format, f"{out}/sinks/{sink}",
                          f"{iceberg_prefix}.sink_{sink.lower()}")
             ck.mark(f"decode:{sink}")
 
         # Per-sink marks make a mid-stage crash resume from the sinks not
         # yet written (each write is an idempotent overwrite).
         todo = {s: n for s, n in sizes.items()
-                if not (resume and ck.done(f"decode:{s}"))}
-        units = decode_sinks(spark, routed_df, todo, dim, write_sink)
-        metrics["stages"]["decode"] = {
-            "wall_sec": round(time.time() - t0, 3), "sinks": len(sizes),
-            "units": units}
-        ck.mark("decode", sinks=len(sizes))
+                if not ck.done(f"decode:{s}")}
+        units = decode_sinks(spark, routed_df, todo,
+                             spark.read.parquet(dim_path), write_sink)
+        return {"sinks": len(sizes), "units": units}
 
     # Leaving the `with` joins the side pool even when enrich/decode
     # raises: the side stages are independent idempotent overwrites whose
@@ -484,21 +477,20 @@ def run_pipeline(
     # resumed run skips them. Their own errors surface via result().
     with ThreadPoolExecutor(max_workers=2,
                             thread_name_prefix="side") as side_pool:
-        side_futures = [side_pool.submit(_lineage_stage),
-                        side_pool.submit(_aggregate_stage)]
-        _enrich_stage()
-        _decode_stage()
+        side_futures = [side_pool.submit(stage, "lineage", lineage_stage),
+                        side_pool.submit(stage, "aggregate", aggregate_stage)]
+        stage("enrich", enrich_stage)
+        stage("decode", decode_stage)
     for f in side_futures:
         f.result()
 
     metrics["wall_sec"] = round(time.time() - t_start, 3)
-    # the ledger's route count (this call's or the resumed run's); scan
-    # the routed table only when a metrics failure left it unknown
-    n_in = route_rows if route_rows is not None else routed_df.count()
-    metrics["rows"] = n_in
-    metrics["rows_per_sec"] = round(n_in / metrics["wall_sec"], 1)
+    # the ledger's route count: this call's, or the resumed run's
+    metrics["rows"] = ck.state["stages"]["route"]["rows"]
+    metrics["rows_per_sec"] = round(metrics["rows"] / metrics["wall_sec"], 1)
     if collect_metrics:
-        (out / "metrics.json").write_text(json.dumps(metrics, indent=1))
+        _write_text(spark, f"{out}/metrics.json",
+                    json.dumps(metrics, indent=1))
     return metrics
 
 

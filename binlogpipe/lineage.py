@@ -1,13 +1,12 @@
-"""Per-partition lineage + per-stage metrics (BASELINE.json north_star:
-"per-partition lineage rows (partition_id, first/last doc_id,
-rows_in/rows_routed) and metrics emitted per stage").
+"""Per-partition lineage (BASELINE.json north_star: "per-partition
+lineage rows (partition_id, first/last doc_id, rows_in/rows_routed) and
+metrics emitted per stage"; the per-stage metrics are job.run_pipeline's).
 
 The DAG's lineage is ``lineage_from_routed``: one JVM aggregation over the
 routed table, keyed on the input partition and position the route stage
 stamps before its shuffle, so the input is never scanned twice.
 ``partition_lineage`` (a mapInPandas walk of the input partitions, one row
-per task) is the test reference it is checked against. Metrics use
-``df.observe`` accumulators collected driver-side after each action.
+per task) is the test reference it is checked against.
 """
 
 from __future__ import annotations
@@ -15,7 +14,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import layout
@@ -78,7 +77,3 @@ def lineage_from_routed(routed_df: DataFrame) -> DataFrame:
         .orderBy("partition_id")
     )
 
-
-def observe_counts(df: DataFrame, obs: Observation) -> DataFrame:
-    return df.observe(obs, F.count(F.lit(1)).alias("rows"),
-                      F.sum("n_tok").alias("tokens"))

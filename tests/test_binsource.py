@@ -6,7 +6,9 @@ per-sink counts), and malformed files must quarantine, not fail."""
 
 from pyspark.sql import functions as F
 
-from binlogpipe import binsource, parse
+from binlogpipe import binsource, layout, parse
+
+MAGIC = bytes(layout.MAGIC)
 
 
 def test_binlog_dir_matches_fixture_table(spark, fixture_parquet,
@@ -34,11 +36,11 @@ def test_binlog_malformed_files_quarantine(spark, tmp_path):
     import struct
     ev = (struct.pack("<IBIII", 1000, 0x03, 1, 23, 4)[:17]
           + struct.pack("<H", 0) + b"\x12\x34\x56\x78")
-    (tmp_path / "good.bin").write_bytes(binsource.MAGIC + ev)
+    (tmp_path / "good.bin").write_bytes(MAGIC + ev)
     (tmp_path / "nomagic.bin").write_bytes(b"not a binlog at all")
     # truncated: valid first event then a lying event_size
     (tmp_path / "trunc.bin").write_bytes(
-        binsource.MAGIC + ev
+        MAGIC + ev
         + struct.pack("<IBIII", 1000, 0x03, 1, 9999, 4)[:17]
         + struct.pack("<H", 0))
     rows = {r.doc_id: r for r in
@@ -92,7 +94,7 @@ def test_quarantine_preserves_full_evidence():
     assert events == [] and err == "missing binlog magic"
     # the module-level arithmetic the splitter row uses:
     data = b"XYZ"
-    consumed = (len(binsource.MAGIC) if data.startswith(binsource.MAGIC)
+    consumed = (len(MAGIC) if data.startswith(MAGIC)
                 else 0) + 0
     assert data[consumed:] == b"XYZ"
 
@@ -141,7 +143,7 @@ def test_uri_scheme_roots_and_collision_free_fallback(spark):
 
     ev = (struct.pack("<IBIII", 1000, 0x03, 1, 23, 4)[:17]
           + struct.pack("<H", 0) + b"\x12\x34\x56\x78")
-    blob = binsource.MAGIC + ev
+    blob = MAGIC + ev
     files = spark.createDataFrame(
         [("hdfs://nn:8020/logs/host1/log.bin", bytearray(blob)),
          ("hdfs://nn:8020/logs/host2/log.bin", bytearray(blob))],
@@ -180,7 +182,7 @@ def test_single_file_input_keeps_basename_identity(spark, tmp_path):
     ev = (struct.pack("<IBIII", 1000, 0x03, 1, 23, 4)[:17]
           + struct.pack("<H", 0) + b"\x12\x34\x56\x78")
     f = tmp_path / "binlog.000042.bin"
-    f.write_bytes(binsource.MAGIC + ev)
+    f.write_bytes(MAGIC + ev)
     rows = binsource.read_binlog_dir(spark, str(f), glob="*").collect()
     assert rows and rows[0].source == "binlog.000042"
     assert rows[0].doc_id == "binlog.000042/0"

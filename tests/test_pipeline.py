@@ -349,42 +349,73 @@ def test_lineage_first_last_are_positional(spark, fixture_parquet,
 
 
 def test_pipeline_empty_input_completes(spark, tmp_path):
-    """Zero input rows must complete with zero-row metrics, not die on
-    schema inference over an empty routed dir or a zero-width thread
-    pool."""
+    """Zero input rows take the normal path: every stage runs and is
+    marked, lineage and the sink counts are zero-row tables, no typed sink
+    is written, and a rerun skips every stage."""
     from binlogpipe import job
 
     empty = spark.createDataFrame(
         [], "doc_id string, tokens array<int>, n_tok int, source string")
     inp = tmp_path / "empty_in"
     empty.write.parquet(str(inp))
-    m = job.run_pipeline(spark, str(inp), str(tmp_path / "out"), run_id="e")
-    assert m["rows"] == 0 and m.get("empty_input") is True
-    # resume path: a second invocation is also graceful
-    m2 = job.run_pipeline(spark, str(inp), str(tmp_path / "out"), run_id="e")
-    assert m2["rows"] == 0
+    out = tmp_path / "out"
+    m = job.run_pipeline(spark, str(inp), str(out), run_id="e")
+    assert m["rows"] == 0
+    stages = ["route", "lineage", "aggregate", "enrich", "decode"]
+    assert set(m["stages"]) == set(stages)
+    assert m["stages"]["decode"]["sinks"] == 0
+    ledger = json.loads((out / "_checkpoint" / "state.json").read_text())
+    assert set(stages) <= set(ledger["stages"])
+    assert spark.read.parquet(str(out / "lineage")).count() == 0
+    assert spark.read.parquet(str(out / "agg" / "sink_counts")).count() == 0
+    assert not (out / "sinks").exists()
+    m2 = job.run_pipeline(spark, str(inp), str(out), run_id="e")
+    assert m2["rows"] == 0 and m2["stages"] == {}
+    assert m2["resumed"] == stages
 
 
 def test_metrics_failure_does_not_fake_empty_input(
         spark, fixture_parquet, tmp_path, monkeypatch):
-    """A transient Observation failure on NON-empty input must not take the
-    empty-input early return (which skips decode and persists rows=0 into
-    the checkpoint for every resumed run after) — the except path confirms
-    emptiness against the written routed output first."""
-    from binlogpipe import job, lineage
+    """A failing route Observation on non-empty input raises before the
+    route stage is marked, so no row count is guessed and persisted; a
+    clean rerun with the same run_id redoes the route and completes."""
+    from pyspark.sql import Observation
 
-    class _BoomObs:
-        @property
-        def get(self):
-            raise RuntimeError("transient metrics failure")
+    from binlogpipe import job
 
-    monkeypatch.setattr(job, "Observation", lambda name: _BoomObs())
-    monkeypatch.setattr(lineage, "observe_counts", lambda df, obs: df)
-    m = job.run_pipeline(spark, fixture_parquet, str(tmp_path / "out"),
+    def boom(self):
+        raise RuntimeError("transient metrics failure")
+
+    monkeypatch.setattr(Observation, "get", property(boom))
+    out = tmp_path / "out"
+    with pytest.raises(RuntimeError, match="transient metrics failure"):
+        job.run_pipeline(spark, fixture_parquet, str(out),
                          run_id="metrics-boom")
-    assert not m.get("empty_input")
-    assert "decode" in m["stages"]
-    assert m["rows"] == 166
+    ledger = out / "_checkpoint" / "state.json"
+    assert not ledger.exists() or \
+        "route" not in json.loads(ledger.read_text())["stages"]
+
+    monkeypatch.undo()
+    m = job.run_pipeline(spark, fixture_parquet, str(out),
+                         run_id="metrics-boom")
+    assert m["rows"] == 166 and m["stages"]["decode"]["sinks"] == 18
+    assert m["resumed"] == []
+
+
+def test_scheme_out_dir(spark, fixture_parquet, tmp_path):
+    """A file:// out dir runs the whole DAG: the ledger and metrics.json
+    go through the Hadoop FS like every stage output, and a rerun resumes
+    from that ledger."""
+    from binlogpipe import job
+
+    out = f"file://{tmp_path}/out"
+    m = job.run_pipeline(spark, fixture_parquet, out, run_id="scheme")
+    assert m["rows"] == 166 and m["stages"]["decode"]["sinks"] == 18
+    assert json.loads((tmp_path / "out" / "metrics.json").read_text()) == m
+    assert "route" in json.loads((tmp_path / "out" / "_checkpoint" /
+                                  "state.json").read_text())["stages"]
+    m2 = job.run_pipeline(spark, fixture_parquet, out, run_id="scheme")
+    assert m2["rows"] == 166 and m2["stages"] == {}
 
 
 def test_side_stages_complete_when_enrich_fails(spark, fixture_parquet,
