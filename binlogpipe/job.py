@@ -193,7 +193,7 @@ def _hadoop_fs(spark: SparkSession, path: str):
 
 
 def _small_file_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for one small driver-written file of the output
+    """(FileSystem, Path) for the ledger or metrics.json of the output
     tree: the session's cached FileSystem for ``path``, or the raw
     FileSystem inside it when it is a checksummed one (the local FS). A
     ``.crc`` sidecar written there would fail every read after the file
