@@ -1244,7 +1244,7 @@ GROUP BY doc_id ORDER BY doc_id
         band_rows.append(f"SELECT doc_id, {b} AS band, {key} AS band_key FROM sig")
     bands_sql = " UNION ALL ".join(band_rows)
     # shared LSH prefix with the per-bucket size cap (64, matching
-    # textops._lsh_banded) applied before the band self-join
+    # textops.minhash_lsh_pairs) applied before the band self-join
     _lsh_prefix = (
         f"WITH s AS (SELECT doc_id, {shingle} AS sh FROM documents), "
         f"sig AS (SELECT doc_id, {mh_cols} FROM s), "

@@ -12,6 +12,7 @@ Public surface:
   lineage.lineage_from_routed
   streaming.*             Structured Streaming variant
   textops / vecops / multimodal   training-data operators
+  textops.capped_bucket_pairs     the near-dup/ANN candidate generator
 """
 
 __version__ = "0.1.0"

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 MAGIC = (254, 98, 105, 110)
 
 HEADER_LEN = 19
-CHECKSUM_LEN = 4
 
 # event_type byte -> sink name, per the dispatch match (mod.rs:380-417).
 EVENT_TYPES: dict[int, str] = {
@@ -55,7 +54,6 @@ EVENT_TYPES: dict[int, str] = {
     0x22: "ANON_GTID",
     0x23: "PREV_GTIDS",
 }
-SINK_TO_TYPE = {v: k for k, v in EVENT_TYPES.items()}
 
 # v0/v1 rows events 0x14..0x19 are explicitly unsupported in the reference
 # (`unreachable!()`, mod.rs:405); we quarantine instead of panicking.

@@ -29,7 +29,6 @@ def local_python_daemon(b: SparkSession.Builder) -> SparkSession.Builder:
 
 
 def build_spark(app: str = "binlogpipe", cores: int | None = None,
-                shuffle_partitions: int | None = None,
                 extra_conf: dict[str, str] | None = None) -> SparkSession:
     """`extra_conf` entries are applied LAST (override the defaults) —
     the A/B harnesses use it to flip one conf (e.g.
@@ -40,10 +39,12 @@ def build_spark(app: str = "binlogpipe", cores: int | None = None,
     when spark-submit already provided a master (--master lands in the
     spark.master system property before the driver runs), respect it —
     forcing local[N] here would silently turn a cluster submission into
-    a single-host run. Only with neither do we default to local[env]."""
+    a single-host run. Only with neither do we default to
+    local[SPARK_GRAFT_CPUS], or, when that is unset, to the CPUs this
+    process may run on."""
     explicit_cores = cores is not None
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(2 * cores, 32)
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS",
+                                        len(os.sched_getaffinity(0))))
     b = SparkSession.builder
     from pyspark import SparkConf
 
@@ -66,7 +67,7 @@ def build_spark(app: str = "binlogpipe", cores: int | None = None,
     b = (
         b
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(2 * cores, 32)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 FP_MOD = 1_000_000_007
@@ -222,85 +222,72 @@ def minhash_signature(docs: DataFrame, ordered: bool = False) -> DataFrame:
     return out.orderBy("doc_id") if ordered else out
 
 
-def _lsh_banded(docs: DataFrame, max_bucket: int) -> DataFrame:
-    """Banded MinHash signature rows (doc_id, band, band_key), with band
-    buckets larger than `max_bucket` dropped. The cap bounds the band
-    self-join: an identical-doc cluster of k docs otherwise emits O(k²)
-    candidates in EVERY band — at 100 TB one boilerplate page melts the
-    stage. Dropped buckets trade recall only for mega-clusters (k > cap),
-    which exact dedup already catches."""
-    # isnotnull(doc_id) BEFORE the signature: the pair self-join pushes
-    # this exact filter into ITS copies of the banded subtree, so without
-    # it here the bucket-size aggregate's copy differs and Spark's
-    # exchange reuse never fires — measured (round 7): the executed
-    # doc_neardup_minhash plan held 6 parquet scans, 0 ReusedExchange,
-    # i.e. the shingle+signature subtree ran 4x. With the filter all
-    # copies are canonically identical and collapse into one exchange.
-    # Result-neutral: a null doc_id can never appear in a pair (the join
-    # condition is null-rejecting), and only the pair path calls this.
-    sig = minhash_signature(docs.where(F.col("doc_id").isNotNull()))
-    # one posexplode, NOT a 4-way union: each union branch re-evaluates the
-    # whole signature (and its shingle sets) — 4 branches x 2 join sides x
-    # the size subquery multiplied the shingle work ~12x in the plan
-    keys = F.array(*[
-        F.concat_ws("_", *[F.col(f"mh{b * MINHASH_ROWS + r}")
-                           for r in range(MINHASH_ROWS)])
-        for b in range(MINHASH_BANDS)
-    ])
-    banded = sig.select(
-        "doc_id", F.posexplode(keys).alias("band", "band_key"))
-    # EXPLICIT hash exchange on the join/groupBy keys: `banded` feeds
-    # three consumers (the bucket-size aggregate and both self-join
-    # sides), and without an exchange boundary each consumer re-evaluates
-    # the whole shingle+signature subtree — measured 10.9s -> 15.3s on the
-    # sf0.1 bench when round 4's sort-free refactor removed the orderBy
-    # exchange that round 3 incidentally reused. This one is purposeful:
-    # it materializes the signatures once AND pre-partitions on exactly
-    # the keys the aggregate and join shuffle on (no extra exchange
-    # downstream). Explicit width: AQE coalesces bare repartition(cols)
-    # to ~4 tasks (advisory 64MB) — keep the session's shuffle width.
-    width = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions",
-                                           "200"))
-    banded = banded.repartition(width, "band", "band_key")
-    # Bucket-size cap as a WINDOW over the exchange, not a groupBy+join:
-    # the aggregate's copy of the banded subtree is column-pruned (its
-    # Generate drops doc_id), so it can never be exchange-reused with the
-    # join side — the executed round-7 plan showed the whole
-    # scan→shingles→signature→posexplode subtree evaluated 4x with 0
-    # ReusedExchange. count(*) over (partition by band, band_key) runs on
-    # the exchange's own partitioning (no extra shuffle, no second
-    # subtree); identical bucket sizes, identical surviving rows, oracle
-    # unchanged.
-    from pyspark.sql import Window
+def capped_bucket_pairs(keyed: DataFrame, cap: int | DataFrame | None,
+                        undirected: bool = True) -> DataFrame:
+    """Distinct candidate pairs `(a, b)` of ids that share a key.
 
-    w = Window.partitionBy("band", "band_key")
-    return (banded.withColumn("_bsz", F.count("*").over(w))
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz"))
+    `keyed` holds `(id, key...)` rows; the ids with one key value form a
+    bucket. A bucket of more than `cap` rows yields no pairs (`cap=None`
+    keeps every bucket). A cap computed from the data comes as a one-row,
+    one-column DataFrame: it is broadcast into the plan after the bucket
+    count, so its job runs beside the keyed exchange, where a scalar
+    subquery would run alone before the count's stage. `undirected`
+    yields a < b, otherwise both orders (a != b). Ids that share several
+    keys pair once.
+
+    One explicit exchange on the keys, at the session's shuffle width
+    (AQE would coalesce a bare repartition to a few tasks), feeds the
+    bucket count and both sides of the key self-join: the count is a
+    window over that partitioning, so the keyed subtree is evaluated
+    once and no other shuffle follows. The cap bounds each bucket's join
+    fanout at cap² whatever the corpus size; dropped buckets cost recall
+    only inside clusters larger than the cap, which exact dedup catches.
+    The window's row buffer spills, so a bucket far over the cap never
+    has to fit in one task's memory, as a collect_list of its ids would."""
+    id_, *keys = keyed.columns
+    width = int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions",
+                                            "200"))
+    rows = keyed.repartition(width, *keys)
+    if cap is not None:
+        rows = rows.withColumn("_n", F.count("*").over(
+            Window.partitionBy(*keys)))
+        if isinstance(cap, DataFrame):
+            rows = rows.crossJoin(F.broadcast(cap.toDF("_cap")))
+            cap = F.col("_cap")
+        rows = rows.where(F.col("_n") <= cap)
+    a = rows.select(F.col(id_).alias("a"), *keys)
+    b = rows.select(F.col(id_).alias("b"), *keys)
+    pair = F.col("a") < F.col("b") if undirected else F.col("a") != F.col("b")
+    return a.join(b, keys).where(pair).select("a", "b").distinct()
 
 
-def minhash_lsh_pairs(docs: DataFrame, jaccard_threshold: float = 0.5,
-                      max_bucket: int = 64,
-                      ordered: bool = False) -> DataFrame:
-    """MinHash + LSH near-dup: band the 16-slot signature into 4 bands of 4,
-    bucket-join on (band, band signature), then verify candidates with exact
-    shingle Jaccard. The band join is the scale path — candidate generation
-    is an equi-join on band keys (capped at `max_bucket` per bucket), never
-    an all-pairs product."""
-    banded = _lsh_banded(docs, max_bucket)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(right, ["band", "band_key"])
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sh = shingle_sets(docs)
+def one_hop_reps(ids: DataFrame, pairs: DataFrame,
+                 ordered: bool = False) -> DataFrame:
+    """Near-dup output in O(n) instead of O(n + pairs): each id of the
+    one-column `ids` maps to its representative, the smallest `a` over
+    the verified pairs `(a, b, ...)` with b = id, or else itself. One-hop
+    min, not connected components: chains longer than one hop keep
+    distinct reps, the standard dedup-keep-one approximation. At 100 TB
+    this is the mode to run, because a duplicate cluster's pair list is
+    quadratic and this is not."""
+    id_ = ids.columns[0]
+    a, b = pairs.columns[:2]
+    best = pairs.groupBy(b).agg(F.min(a).alias("rep_min"))
+    out = (ids.join(best, F.col(id_) == F.col(b), "left")
+           .select(id_, F.coalesce("rep_min", id_).alias("rep_id"))
+           .withColumn("is_rep", (F.col("rep_id") == F.col(id_)).cast("int")))
+    return out.orderBy(id_) if ordered else out
+
+
+def _verified_jaccard(cand: DataFrame, sh: DataFrame, threshold: float,
+                      ordered: bool) -> DataFrame:
+    """Exact Jaccard over the full shingle sets of each `(doc_a, doc_b)`
+    candidate, kept at >= `threshold`: the caps upstream bound recall,
+    never precision."""
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    b_ = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     out = (
-        cand.join(a, "doc_a").join(b_, "doc_b")
+        cand.join(a, "doc_a").join(b, "doc_b")
         .withColumn(
             "jaccard",
             F.round(
@@ -308,30 +295,41 @@ def minhash_lsh_pairs(docs: DataFrame, jaccard_threshold: float = 0.5,
                 / F.size(F.array_union("sh_a", "sh_b")), 6,
             ),
         )
-        .where(F.col("jaccard") >= jaccard_threshold)
+        .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
     return out.orderBy("doc_a", "doc_b") if ordered else out
 
 
+def minhash_lsh_pairs(docs: DataFrame, jaccard_threshold: float = 0.5,
+                      max_bucket: int = 64,
+                      ordered: bool = False) -> DataFrame:
+    """MinHash + LSH near-dup: band the 16-slot signature into 4 bands of 4,
+    pair docs sharing a (band, band signature) bucket of at most
+    `max_bucket` docs, then verify candidates with exact shingle Jaccard.
+    Candidate generation is an equi-join on band keys, never an
+    all-pairs product."""
+    sig = minhash_signature(docs)
+    # one posexplode, not a union of bands: each union branch would
+    # evaluate the whole signature again
+    keys = F.array(*[
+        F.concat_ws("_", *[F.col(f"mh{b * MINHASH_ROWS + r}")
+                           for r in range(MINHASH_ROWS)])
+        for b in range(MINHASH_BANDS)
+    ])
+    banded = sig.select("doc_id", F.posexplode(keys).alias("band", "band_key"))
+    cand = capped_bucket_pairs(banded, max_bucket).toDF("doc_a", "doc_b")
+    return _verified_jaccard(cand, shingle_sets(docs), jaccard_threshold,
+                             ordered)
+
+
 def minhash_lsh_clusters(docs: DataFrame, jaccard_threshold: float = 0.5,
                          max_bucket: int = 64,
                          ordered: bool = False) -> DataFrame:
-    """Near-dup output in O(n) instead of O(n + pairs): every doc maps to a
-    cluster representative — the smallest doc_id among its verified LSH
-    neighbors (or itself). One-hop min, not a full connected-components
-    pass: chains longer than one hop keep distinct reps, which is the
-    standard dedup-keep-one approximation (each rep survives, every doc
-    pointing elsewhere is a candidate drop). At 100 TB this is the mode to
-    run — the pair list of a boilerplate cluster is quadratic, this isn't."""
+    """Each doc mapped to the smallest doc_id among its verified LSH
+    neighbors, or itself (`one_hop_reps`)."""
     pairs = minhash_lsh_pairs(docs, jaccard_threshold, max_bucket)
-    best = pairs.groupBy("doc_b").agg(F.min("doc_a").alias("rep_min"))
-    out = (docs.select("doc_id")
-           .join(best, docs["doc_id"] == best["doc_b"], "left")
-           .select("doc_id",
-                   F.coalesce(F.col("rep_min"), F.col("doc_id")).alias("rep_id"))
-           .withColumn("is_rep", (F.col("rep_id") == F.col("doc_id")).cast("int")))
-    return out.orderBy("doc_id") if ordered else out
+    return one_hop_reps(docs.select("doc_id"), pairs, ordered)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
@@ -346,59 +344,18 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6,
     bounds per-shingle join fanout to max_df_abs^2 regardless of corpus
     size (same reasoning as the LSH band-bucket cap). The cap is floored
     at 2: below 10 documents the fractional cap would floor to <2 and no
-    shingle could ever be shared by a pair — small corpora silently
-    returned zero near-dups. Jaccard on surviving candidates is then
-    EXACT over the *full* shingle sets (array_intersect/union), so the
-    caps only bound recall, never precision. The oracle applies the
-    identical caps."""
+    shingle could ever be shared by a pair. Jaccard on surviving
+    candidates is then EXACT over the *full* shingle sets, so the caps
+    only bound recall, never precision. The oracle applies the identical
+    caps."""
     sh = shingle_sets(docs)
     inv = sh.select("doc_id", F.explode("shingles").alias("sh"))
-    # the df cap must not trigger a driver-side count() (a full extra scan
-    # at 100 TB): broadcast the 1-row count aggregate into the plan instead
-    n_docs = F.broadcast(docs.agg(F.count("*").alias("_n_docs")))
-    # df cap as a WINDOW over one explicit exchange on `sh`, not a
-    # groupBy+join back: the aggregate's copy of the inverted-index
-    # subtree is column-pruned (drops doc_id) so it can never be
-    # exchange-reused with the join side — the shingle split+fold ran
-    # once per consumer (round-7 plan audit, same finding as
-    # _lsh_banded). The exchange is ALSO exactly the partitioning the
-    # a⋈b candidate self-join needs on `sh`, so both join sides read the
-    # one shuffle (ReusedExchange) instead of re-exploding. Identical
-    # df values, identical surviving rows; the oracle is unchanged. At
-    # scale this additionally replaces a broadcast of the (huge)
-    # rare-shingle set with the partitioned inverted index — the
-    # standard shape.
-    from pyspark.sql import Window
-
-    width = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions",
-                                           "200"))
-    inv_r = (inv.repartition(width, "sh")
-             .withColumn("df", F.count("*").over(Window.partitionBy("sh")))
-             .crossJoin(n_docs)
-             .where(F.col("df") <= F.least(
-                 F.greatest(F.floor(F.col("_n_docs") * F.lit(max_df)),
-                            F.lit(2)),
-                 F.lit(max_df_abs)))
-             .select("doc_id", "sh"))
-    a = inv_r.select(F.col("doc_id").alias("doc_a"), "sh")
-    b = inv_r.select(F.col("doc_id").alias("doc_b"), "sh")
-    cand = (a.join(b, "sh").where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").distinct())
-    fa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    fb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    out = (
-        cand.join(fa, "doc_a").join(fb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")), 6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return out.orderBy("doc_a", "doc_b") if ordered else out
+    # the cap aggregates in the plan: no driver-side count() of the corpus
+    cap = docs.agg(F.least(
+        F.greatest(F.floor(F.count("*") * F.lit(max_df)), F.lit(2)),
+        F.lit(max_df_abs)))
+    cand = capped_bucket_pairs(inv, cap).toDF("doc_a", "doc_b")
+    return _verified_jaccard(cand, sh, threshold, ordered)
 
 
 def simhash(docs: DataFrame, bits: int = 30,

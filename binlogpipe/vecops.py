@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .textops import capped_bucket_pairs, one_hop_reps
+
 DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
 NORM = ("sqrt(aggregate({a}, CAST(0.0 AS DOUBLE), "
@@ -40,8 +42,8 @@ def lsh_planes(bits: int, dim: int = EMB_DIM,
     no RNG-library dependence). Coordinates uniform in [-1, 1), rounded to
     6 dp so the inlined literals stay short and identical on both sides.
     Random hyperplanes make P(bit differs) = angle/pi per Goemans-
-    Williamson — coordinate-axis planes (the round-1 toy) only cut on the
-    first `bits` dimensions."""
+    Williamson; coordinate-axis planes would cut only on the first `bits`
+    dimensions."""
     state = seed
     planes: list[list[float]] = []
     for _ in range(bits):
@@ -88,53 +90,22 @@ def plane_bucket_sql(col: str, bits: int, band: int = 0, bands: int = 1) -> str:
     return "(" + " + ".join(parts) + ")"
 
 
-def _banded_buckets(emb: DataFrame, bits: int, bands: int,
-                    max_bucket: int | None) -> DataFrame:
-    """(vec_id, band, bucket) rows over `bands` independent sign-bit hash
-    families, with band buckets larger than `max_bucket` dropped.
-
-    This is the cosine twin of textops._lsh_banded and the 100 TB scale
-    contract: the ABSOLUTE cap bounds every per-bucket self-join at
-    max_bucket² candidates regardless of corpus size (a fixed 2^bits
-    bucket count alone leaves each bucket O(n/2^bits) — quadratic again at
-    scale), while extra bands recover the recall that finer buckets cost.
-    One posexplode evaluates all band keys in a single pass over the
-    vectors; dropped buckets trade recall only inside mega-clusters, which
-    exact dedup upstream already collapses."""
-    keys = F.array(*[
-        plane_bucket_expr("embedding", bits, band=b, bands=bands)
-        for b in range(bands)])
-    banded = emb.select(
-        "vec_id", F.posexplode(keys).alias("band", "bucket"))
-    # NO materializing exchange here, unlike textops._lsh_banded: the
-    # banded subtree feeds three consumers, but recomputing the sign-bit
-    # plane dots (18 fixed 64-dim products) is CHEAPER than shuffling the
-    # banded rows — A/B same-window at sf0.1: emb_neardup 3.5s without vs
-    # 3.8s with, emb_lsh_ann 3.2s vs 3.8s. The textops twin keeps the
-    # exchange because its shingle+minhash subtree is expensive to repeat.
-    if max_bucket is None:
-        return banded
-    ok = (banded.groupBy("band", "bucket")
-          .agg(F.count("*").alias("_bsz"))
-          .where(F.col("_bsz") <= max_bucket)
-          .drop("_bsz"))
-    return banded.join(ok, ["band", "bucket"])
-
-
 def _banded_candidates(emb: DataFrame, bits: int, bands: int,
                        max_bucket: int | None,
                        undirected: bool) -> DataFrame:
-    """Distinct candidate pairs colliding in ANY band. `undirected=True`
-    yields (vec_a < vec_b) pairs; False yields directed (a != b) pairs."""
-    banded = _banded_buckets(emb, bits, bands, max_bucket)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cond = (F.col("l.vec_id") < F.col("r.vec_id") if undirected
-            else F.col("l.vec_id") != F.col("r.vec_id"))
-    return (left.join(right, ["band", "bucket"]).where(cond)
-            .select(F.col("l.vec_id").alias("vec_a"),
-                    F.col("r.vec_id").alias("vec_b"))
-            .distinct())
+    """Distinct `(vec_a, vec_b)` pairs sharing a sign-bit bucket in ANY
+    of `bands` independent hash families, buckets over `max_bucket`
+    dropped (`capped_bucket_pairs`). The absolute cap bounds every
+    bucket's join at max_bucket² pairs whatever the corpus size, where a
+    fixed 2^bits bucket count alone leaves each bucket O(n/2^bits); extra
+    bands recover the recall that finer buckets cost. One posexplode
+    evaluates all band keys in a single pass over the vectors."""
+    keys = F.array(*[
+        plane_bucket_expr("embedding", bits, band=b, bands=bands)
+        for b in range(bands)])
+    banded = emb.select("vec_id", F.posexplode(keys).alias("band", "bucket"))
+    return (capped_bucket_pairs(banded, max_bucket, undirected)
+            .toDF("vec_a", "vec_b"))
 
 
 def _with_norm(df: DataFrame, vec: str, out: str) -> DataFrame:
@@ -147,6 +118,32 @@ def _with_norm(df: DataFrame, vec: str, out: str) -> DataFrame:
 
 def _pair_sim(qv: str, cv: str, nq: str, nc: str) -> str:
     return f"({DOT.format(a=qv, b=cv)}) / ({nq} * {nc})"
+
+
+def _pair_cosines(cand: DataFrame, emb: DataFrame) -> DataFrame:
+    """`(vec_a, vec_b, sim)`: the exact cosine of each candidate pair."""
+    v = _with_norm(emb.select("vec_id", "embedding"), "embedding", "nrm")
+    a = v.select(F.col("vec_id").alias("vec_a"),
+                 F.col("embedding").alias("va"), F.col("nrm").alias("na"))
+    b = v.select(F.col("vec_id").alias("vec_b"),
+                 F.col("embedding").alias("vb"), F.col("nrm").alias("nb"))
+    return (cand.join(a, "vec_a").join(b, "vec_b")
+            .select("vec_a", "vec_b",
+                    F.expr(_pair_sim("va", "vb", "na", "nb")).alias("sim")))
+
+
+def _top_k(scored: DataFrame, k: int, ordered: bool) -> DataFrame:
+    """The `k` best `(query_id, neighbor_id, sim)` rows per query, ranked
+    by sim descending, ties to the lower neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc())
+    out = (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id",
+                F.round("sim", 6).alias("sim"))
+    )
+    return out.orderBy("query_id", "rank") if ordered else out
 
 
 def cosine_topk(emb: DataFrame, k: int = 5, n_queries: int = 10,
@@ -165,15 +162,7 @@ def cosine_topk(emb: DataFrame, k: int = 5, n_queries: int = 10,
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .withColumn("sim", F.expr(_pair_sim("qv", "cv", "nq", "nc")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc())
-    out = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round("sim", 6).alias("sim"))
-    )
-    return out.orderBy("query_id", "rank") if ordered else out
+    return _top_k(scored, k, ordered)
 
 
 def signbit_lsh_ann(emb: DataFrame, bits: int = 6, k: int = 3,
@@ -198,24 +187,8 @@ def signbit_lsh_ann(emb: DataFrame, bits: int = 6, k: int = 3,
     gauged by `ivf_recall`."""
     cand = _banded_candidates(emb, bits, bands, max_bucket,
                               undirected=False)
-    v = _with_norm(emb.select("vec_id", "embedding"), "embedding", "nrm")
-    q = v.select(F.col("vec_id").alias("vec_a"),
-                 F.col("embedding").alias("qv"), F.col("nrm").alias("nq"))
-    c = v.select(F.col("vec_id").alias("vec_b"),
-                 F.col("embedding").alias("cv"), F.col("nrm").alias("nc"))
-    scored = (cand.join(q, "vec_a").join(c, "vec_b")
-              .select(F.col("vec_a").alias("query_id"),
-                      F.col("vec_b").alias("neighbor_id"),
-                      F.expr(_pair_sim("qv", "cv", "nq", "nc")).alias("sim")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc())
-    out = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round("sim", 6).alias("sim"))
-    )
-    return out.orderBy("query_id", "rank") if ordered else out
+    scored = _pair_cosines(cand, emb).toDF("query_id", "neighbor_id", "sim")
+    return _top_k(scored, k, ordered)
 
 
 IVF_SAMPLE = 256  # training-sample bound (vec_id < IVF_SAMPLE)
@@ -280,9 +253,8 @@ def ivf_ann(emb: DataFrame, n_centroids: int = 8, k: int = 3,
     assigned to its nearest centroid (inverted list) in one map-only pass
     over inlined centroid literals, queries probe their `nprobe` nearest
     lists. The argmax is a single transform + array_max over the centroid
-    struct array — each centroid's cosine evaluates once (the round-1
-    chained-when re-evaluated every prior centroid). The search is an
-    equi-join on centroid id — the big table never cross-joins."""
+    struct array, so each centroid's cosine evaluates once. The search
+    is an equi-join on centroid id — the big table never cross-joins."""
     cents = kmeans_centroids(emb, n_centroids)
     arr = _centroid_struct_array(cents)
     # array_max over struct(s, -cid) = max sim, ties -> lowest cid
@@ -303,20 +275,14 @@ def ivf_ann(emb: DataFrame, n_centroids: int = 8, k: int = 3,
     scored = (c.join(F.broadcast(q), "centroid")
               .where(F.col("query_id") != F.col("neighbor_id"))
               .withColumn("sim", F.expr(_pair_sim("qv", "cv", "nq", "nc"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc())
-    out = (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-           .where(F.col("rank") <= k)
-           .select("query_id", "rank", "neighbor_id",
-                   F.round("sim", 6).alias("sim")))
-    return out.orderBy("query_id", "rank") if ordered else out
+    return _top_k(scored, k, ordered)
 
 
 def ivf_recall(emb: DataFrame, n_centroids: int = 8, k: int = 3,
                n_queries: int = 20, nprobe: int = 2,
                ordered: bool = False) -> DataFrame:
     """recall@k of ivf_ann against the exact brute-force top-k: per query,
-    |approx ∩ exact| / k. The quality gauge the round-1 IVF lacked."""
+    |approx ∩ exact| / k, the quality gauge of the IVF probe lists."""
     exact = cosine_topk(emb, k, n_queries).select(
         "query_id", F.col("neighbor_id").alias("nid"))
     approx = ivf_ann(emb, n_centroids, k, n_queries, nprobe).select(
@@ -336,21 +302,10 @@ def cosine_neardup_clusters(emb: DataFrame, threshold: float = 0.9,
                             bits: int = 6, bands: int = 3,
                             max_bucket: int | None = 64,
                             ordered: bool = False) -> DataFrame:
-    """Embedding near-dup output in O(n) instead of O(n + pairs): every
-    vector maps to a representative — the smallest vec_id among its
-    verified near-dup neighbors (or itself). Same one-hop-min
-    dedup-keep-one approximation as textops.minhash_lsh_clusters; at
-    100 TB this is the mode to run, because the pair list of a duplicate
-    cluster is quadratic and this isn't."""
+    """Each vector mapped to the smallest vec_id among its verified
+    near-dup neighbors, or itself (`textops.one_hop_reps`)."""
     pairs = cosine_neardup_pairs(emb, threshold, bits, bands, max_bucket)
-    best = pairs.groupBy("vec_b").agg(F.min("vec_a").alias("rep_min"))
-    out = (emb.select("vec_id")
-           .join(best, emb["vec_id"] == best["vec_b"], "left")
-           .select("vec_id",
-                   F.coalesce(F.col("rep_min"), F.col("vec_id")).alias("rep_id"))
-           .withColumn("is_rep",
-                       (F.col("rep_id") == F.col("vec_id")).cast("int")))
-    return out.orderBy("vec_id") if ordered else out
+    return one_hop_reps(emb.select("vec_id"), pairs, ordered)
 
 
 def cosine_neardup_pairs(emb: DataFrame, threshold: float = 0.9,
@@ -359,25 +314,12 @@ def cosine_neardup_pairs(emb: DataFrame, threshold: float = 0.9,
                          ordered: bool = False) -> DataFrame:
     """Embedding-cosine near-dup pairs via banded sign-bit LSH: candidate
     pairs collide in any of `bands` hash families (bucket-capped, see
-    _banded_buckets), then the exact cosine filters at `threshold` —
+    _banded_candidates), then the exact cosine filters at `threshold` —
     precision is exact, the banding only bounds which pairs get scored.
-
-    BEHAVIOR CHANGE (round 4): the default threshold moved 0.35 -> 0.9 to
-    match cosine_neardup_clusters — default calls of the two ops now work
-    in the same similarity regime. Callers wanting the old looser cut
-    pass threshold=0.35 explicitly (the driver query does)."""
+    The default threshold is the one cosine_neardup_clusters uses."""
     cand = _banded_candidates(emb, bits, bands, max_bucket,
                               undirected=True)
-    v = _with_norm(emb.select("vec_id", "embedding"), "embedding", "nrm")
-    a = v.select(F.col("vec_id").alias("vec_a"),
-                 F.col("embedding").alias("va"), F.col("nrm").alias("na"))
-    b = v.select(F.col("vec_id").alias("vec_b"),
-                 F.col("embedding").alias("vb"), F.col("nrm").alias("nb"))
-    out = (
-        cand.join(a, "vec_a").join(b, "vec_b")
-        .withColumn("sim",
-                    F.round(F.expr(_pair_sim("va", "vb", "na", "nb")), 6))
-        .where(F.col("sim") >= threshold)
-        .select("vec_a", "vec_b", "sim")
-    )
+    out = (_pair_cosines(cand, emb)
+           .withColumn("sim", F.round("sim", 6))
+           .where(F.col("sim") >= threshold))
     return out.orderBy("vec_a", "vec_b") if ordered else out

@@ -16,6 +16,7 @@ importlib.invalidate_caches().
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 import zipfile
@@ -94,6 +95,33 @@ def test_session_defaults_pinned(probe):
     assert conf["master"] == "local[2]"  # explicit cores pins local[N]
     # build_spark picked the local master, so it picks the daemon too
     assert conf["daemon"] == "binlogpipe.pydaemon"
+
+
+DEFAULT_CORES = r"""
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from binlogpipe.session import build_spark
+s = build_spark(app="default-cores")
+print(json.dumps({"master": s.sparkContext.master,
+                  "shuffle": s.conf.get("spark.sql.shuffle.partitions"),
+                  "cpus": len(os.sched_getaffinity(0))}))
+s.stop()
+"""
+
+
+def test_default_cores_follow_cpu_affinity():
+    """With no `cores` argument, no SPARK_GRAFT_CPUS and no submitted
+    master, the local master runs one task slot per CPU this process may
+    use, not a fixed count that oversubscribes a small host."""
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("SPARK_GRAFT_CPUS", "PYSPARK_GATEWAY_PORT")}
+    p = subprocess.run([sys.executable, "-c", DEFAULT_CORES, str(REPO)],
+                       capture_output=True, text=True, timeout=300,
+                       cwd=REPO, env=env)
+    assert p.returncode == 0, p.stderr[-2000:]
+    got = json.loads(p.stdout.strip().splitlines()[-1])
+    assert got["master"] == f"local[{got['cpus']}]"
+    assert got["shuffle"] == str(max(2 * got["cpus"], 32))
 
 
 def test_worker_imports_installed_pyspark(probe):

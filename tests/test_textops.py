@@ -2,6 +2,9 @@
 sf-table oracle parity lives in test_oracle_parity; these prove the ops
 actually find what they claim to find)."""
 
+import itertools
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,6 +54,34 @@ def test_ngram_jaccard_small_corpus_df_floor(crafted_docs):
     pairs = {(r["doc_a"], r["doc_b"])
              for r in textops.ngram_jaccard_pairs(crafted_docs, 0.6).collect()}
     assert (0, 1) in pairs
+
+
+def test_capped_bucket_pairs(spark):
+    """The one candidate generator behind every near-dup and ANN op, on a
+    hand-built `(id, band, key)` table with cap 4: a bucket of exactly
+    cap ids pairs completely, a bucket of cap + 1 ids not at all, two ids
+    sharing three keys pair once, directed mode yields both orders, and
+    no cap keeps the big bucket."""
+    cap = 4
+    rows = ([(i, 0, "over") for i in range(cap + 1)]
+            + [(10 + i, 0, "full") for i in range(cap)]
+            + [(20 + i, band, "twin") for i in range(2) for band in range(3)])
+    keyed = spark.createDataFrame(rows, "id long, band int, key string")
+
+    def pairs(c, undirected=True):
+        return sorted((r.a, r.b) for r in textops.capped_bucket_pairs(
+            keyed, c, undirected).collect())
+
+    full = list(itertools.combinations(range(10, 10 + cap), 2))
+    assert len(full) == math.comb(cap, 2)
+    assert pairs(cap) == sorted(full + [(20, 21)])
+    # the same cap as a one-row frame, the form a data-derived cap takes
+    assert pairs(spark.range(1).select(F.lit(cap))) == pairs(cap)
+    assert pairs(cap, undirected=False) == sorted(
+        full + [(b, a) for a, b in full] + [(20, 21), (21, 20)])
+    # no cap: the over-cap bucket pairs too
+    over = list(itertools.combinations(range(cap + 1), 2))
+    assert pairs(None) == sorted(over + full + [(20, 21)])
 
 
 def test_simhash_near_for_near_dups(crafted_docs):

@@ -1,9 +1,10 @@
 """Fixture generator: reference binlog files -> pipeline input table.
 
-Test-side only (stdlib + pyarrow, no Spark). The committed
-`data/fixture_events.parquet` is the source of truth every test and
-benchmark reads (`load_fixture_events`); `write_fixture_bins` rebuilds the
-per-case `<case>/log.bin` files from it for the raw-binlog source tests.
+Test-side only (stdlib, pyarrow and `binlogpipe.layout`; no Spark
+session). The committed `data/fixture_events.parquet` is the source of
+truth every test and benchmark reads (`load_fixture_events`);
+`write_fixture_bins` rebuilds the per-case `<case>/log.bin` files from
+it for the raw-binlog source tests.
 
 Provenance: the table was generated from the boxercrab checkout's
 `tests/events/<fixture>/log.bin` files (`load_reference_events`, only
@@ -36,11 +37,11 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from binlogpipe import layout
+
 REPO = Path(__file__).resolve().parent.parent
 FIXTURE_PARQUET = REPO / "data" / "fixture_events.parquet"
 REF_EVENTS = Path("/root/reference/tests/events")
-MAGIC = b"\xfebin"
-HEADER_LEN = 19
 
 
 def split_binlog(path: Path) -> list[bytes]:
@@ -81,7 +82,7 @@ def write_fixture_bins(dest: Path) -> None:
     for case, events in by_case.items():
         path = Path(dest) / case / "log.bin"
         path.parent.mkdir(parents=True, exist_ok=True)
-        path.write_bytes(MAGIC + b"".join(events))
+        path.write_bytes(bytes(layout.MAGIC) + b"".join(events))
 
 
 def load_reference_events() -> list[tuple[str, str, bytes]]:
@@ -116,7 +117,7 @@ def make_event(event_type: int, payload: bytes, *, timestamp: int = 1000,
                server_id: int = 1, log_pos: int = 4, flags: int = 0) -> bytes:
     """Hand-assemble one event per the 19-byte header layout
     (mod.rs:52-81) + 4-byte checksum tail."""
-    size = HEADER_LEN + len(payload) + 4
+    size = layout.HEADER_LEN + len(payload) + 4
     hdr = (struct.pack("<IBIII", timestamp, event_type, server_id, size,
                        log_pos)[:17] + struct.pack("<H", flags))
     return hdr + payload + b"\x12\x34\x56\x78"

@@ -8,13 +8,15 @@ attribute a slowdown to code — only an interleaved same-window pair can
 bench delta table flags any query whose anchor-normalized delta exceeds
 bench.FLAG_RATIO; this tool is the follow-up:
 
-    python tools/query_ab.py doc_minhash_sig --rev 4f54d3e --rounds 3
+    python tools/query_ab.py doc_minhash_sig --rev <rev> --rounds 3
 
-checks out `rev` into a git worktree, then runs the named query
-interleaved (current, rev, current, rev, ...) x rounds — each cell in a
-FRESH SUBPROCESS with PYTHONPATH pinned to its tree (two versions of
-binlogpipe must never share one Python process) — and prints one JSON
-line with per-round walls, best-of walls, and the cur/prev ratio.
+extracts `rev` with `git archive` into a temporary directory (under
+$TMPDIR), then runs the named query interleaved x rounds, the first side
+alternating between rounds (current, rev, rev, current, ...). Each cell
+runs in a FRESH SUBPROCESS with PYTHONPATH pinned to its tree (two
+versions of binlogpipe must never share one Python process). The tool
+prints one JSON line with per-round walls, best-of walls, and the
+cur/prev ratio.
 
 Each cell: own Spark session, JVM+UDF warm-up, 2 timed noop-forced runs,
 best-of (bench.py methodology).
@@ -23,9 +25,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
 import subprocess
 import sys
+import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -63,27 +67,31 @@ def run_cell(tree: str, query: str, sf_dir: str, cores: int) -> float:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("query")
-    ap.add_argument("--rev", default="4f54d3e",
-                    help="git rev for the B side (default: round-3 tip)")
+    ap.add_argument("--rev", required=True,
+                    help="git rev for the B side")
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--cores", type=int, default=32)
+    ap.add_argument("--cores", type=int,
+                    default=len(os.sched_getaffinity(0)))
     args = ap.parse_args()
 
-    wt = Path(f"/tmp/qab_wt_{args.rev}")
-    if not wt.exists():
-        subprocess.run(["git", "worktree", "add", "--detach", str(wt),
-                        args.rev], cwd=REPO, check=True,
-                       capture_output=True)
+    with tempfile.TemporaryDirectory(prefix="qab_") as wt:
+        archive = subprocess.run(["git", "archive", args.rev], cwd=REPO,
+                                 check=True, capture_output=True).stdout
+        subprocess.run(["tar", "-x", "-C", wt], input=archive, check=True)
+        ab(args, wt)
 
-    cur_walls, prev_walls = [], []
+
+def ab(args: argparse.Namespace, wt: str) -> None:
+    walls = {str(REPO): [], wt: []}
     for i in range(args.rounds):
-        cur_walls.append(run_cell(str(REPO), args.query, args.sf_dir,
-                                  args.cores))
-        prev_walls.append(run_cell(str(wt), args.query, args.sf_dir,
-                                   args.cores))
-        print(f"# round {i}: cur={cur_walls[-1]}s rev={prev_walls[-1]}s",
-              file=sys.stderr)
+        # alternate which side runs first, so a position bias cancels
+        for tree in list(walls)[::1 if i % 2 == 0 else -1]:
+            walls[tree].append(run_cell(tree, args.query, args.sf_dir,
+                                        args.cores))
+        print(f"# round {i}: cur={walls[str(REPO)][-1]}s "
+              f"rev={walls[wt][-1]}s", file=sys.stderr)
+    cur_walls, prev_walls = walls[str(REPO)], walls[wt]
 
     cur, prev = min(cur_walls), min(prev_walls)
     print(json.dumps({
