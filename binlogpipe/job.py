@@ -21,19 +21,22 @@ Empty input takes the same path: lineage and the aggregates are zero-row
 tables, no typed sink is written, and every stage is marked.
 
 Resumability: each stage is idempotent (overwrite of its own output dir)
-and recorded in ``_checkpoint/state.json`` keyed by run_id + stage name,
-together with the run's input fingerprint; re-running the same input
-skips completed stages, so a killed job resumes where it stopped
+and, once committed, marked by its own file ``_checkpoint/<stage>.json``
+(``decode=<sink>.json`` per decoded sink) carrying the run_id and the
+run's input fingerprint. Re-running the same input with the same run_id
+skips the marked stages, so a killed job resumes where it stopped
 (BASELINE.json "resumable from snapshot + checkpoint"), and resuming with
-a different input or output settings raises. The ledger and
-metrics.json go through the Hadoop FileSystem like every stage output, so
-the out dir may be any scheme Spark writes to (file://, hdfs://, s3a://).
+a different input or output settings raises. A call that does not resume
+(resume=False, or marks of another run_id present) deletes the ledger
+before its first stage, so no later call can resume onto outputs it
+overwrote. Marks and metrics.json are each written by one create
+through the Hadoop FileSystem like every stage output, so the out dir
+may be any scheme Spark writes to (file://, hdfs://, s3a://).
 """
 
 from __future__ import annotations
 
 import json
-import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
@@ -138,45 +141,51 @@ def decode_sinks(spark: SparkSession, routed: DataFrame,
 
 
 class Checkpoint:
-    """Tiny JSON stage ledger; the parquet/Iceberg snapshot is the data
-    checkpoint, this records which stages of a run committed, and the
-    ``input_fingerprint`` of the run that committed them. Resuming a
-    ledger whose fingerprint differs raises instead of skipping stages:
-    the skipped outputs would belong to another input."""
+    """The stage ledger (layout and rules in the module docstring), read
+    once at construction. A mark holds ``{"stage", "run_id",
+    "fingerprint", "ts", **info}``; a file that does not parse or has no
+    ``stage`` is not a mark. Decode pool threads mark distinct files, so
+    marking needs no lock."""
 
     def __init__(self, spark: SparkSession, out_dir: str, run_id: str,
                  fingerprint: str, resume: bool):
-        self._spark = spark
-        self.path = f"{out_dir}/_checkpoint/state.json"
-        self._lock = threading.Lock()
-        self.state: dict = {"run_id": run_id, "fingerprint": fingerprint,
-                            "stages": {}}
-        prev: dict = {}
-        fs, hpath = _small_file_fs(spark, self.path)
-        if resume and fs.exists(hpath):
-            stream = fs.open(hpath)
-            try:
-                prev = json.loads(bytes(stream.readAllBytes()))
-            finally:
-                stream.close()
-        if prev.get("run_id") == run_id and prev.get("stages"):
-            if prev.get("fingerprint") != fingerprint:
-                raise ValueError(
-                    f"{out_dir} holds stages of run_id {run_id!r} "
-                    f"committed for a different input or output "
-                    f"settings; resuming would reuse them. Rerun with "
-                    f"--no-resume (resume=False) to overwrite, or use "
-                    f"another --run-id or out dir.")
-            self.state = prev
+        self._fs, self._dir = _small_file_fs(spark, f"{out_dir}/_checkpoint")
+        self._HPath = spark._jvm.org.apache.hadoop.fs.Path
+        self._head = {"run_id": run_id, "fingerprint": fingerprint}
+        marks = {}
+        if self._fs.exists(self._dir):
+            for st in self._fs.listStatus(self._dir):
+                if not st.isFile():
+                    continue
+                stream = self._fs.open(st.getPath())
+                try:
+                    mark = json.loads(bytes(stream.readAllBytes()))
+                    marks[mark["stage"]] = mark
+                except (ValueError, TypeError, KeyError):
+                    pass  # not a mark: the stage is not done
+                finally:
+                    stream.close()
+        if not resume or any(m.get("run_id") != run_id
+                             for m in marks.values()):
+            self._fs.delete(self._dir, True)
+            marks = {}
+        if any(m.get("fingerprint") != fingerprint for m in marks.values()):
+            raise ValueError(
+                f"{out_dir} holds stages of run_id {run_id!r} "
+                f"committed for a different input or output "
+                f"settings; resuming would reuse them. Rerun with "
+                f"--no-resume (resume=False) to overwrite, or use "
+                f"another --run-id or out dir.")
+        self.stages: dict[str, dict] = marks
 
     def done(self, stage: str) -> bool:
-        return stage in self.state["stages"]
+        return stage in self.stages
 
     def mark(self, stage: str, **info) -> None:
-        with self._lock:  # decode marks arrive from the job thread pool
-            self.state["stages"][stage] = {"ts": time.time(), **info}
-            _write_text(self._spark, self.path,
-                        json.dumps(self.state, indent=1))
+        mark = {"stage": stage, **self._head, "ts": time.time(), **info}
+        _create_file(self._fs, self._HPath(
+            self._dir, stage.replace(":", "=") + ".json"), json.dumps(mark))
+        self.stages[stage] = mark
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -205,26 +214,13 @@ def _small_file_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Atomically replace a scheme-aware ``path`` with ``text``: write a
-    sibling ``.tmp`` file, then rename it over the target."""
-    fs, hpath = _small_file_fs(spark, path)
-    tmp = hpath.suffix(".tmp")
-    stream = fs.create(tmp, True)
+def _create_file(fs, hpath, text: str) -> None:
+    """Write ``text`` to ``hpath`` with one overwriting ``create``."""
+    stream = fs.create(hpath, True)
     try:
         stream.write(text.encode())
     finally:
         stream.close()
-    if not fs.rename(tmp, hpath):
-        # HDFS's rename refuses an existing target (the raw local FS's
-        # replaces it); FileContext's OVERWRITE rename replaces it there
-        jvm = spark._jvm
-        over = spark.sparkContext._gateway.new_array(
-            jvm.org.apache.hadoop.fs.Options.Rename, 1)
-        over[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            hpath.toUri(), spark._jsc.hadoopConfiguration()).rename(
-                tmp, hpath, over)
 
 
 def list_partition_dirs(spark: SparkSession, path: str,
@@ -353,9 +349,12 @@ def run_pipeline(
     still run to completion (and are checkpointed) before the error
     propagates, so a rerun with the same ``run_id`` skips them.
 
-    ``resume=True`` against a ledger of the same ``run_id`` whose input
+    The ledger is ``<out_dir>/_checkpoint/``, one ``<stage>.json`` mark
+    per committed stage and ``decode=<sink>.json`` per decoded sink.
+    ``resume=True`` against marks of the same ``run_id`` whose input
     fingerprint (input listing, ``sink_format``, ``input_format``)
-    differs raises ValueError; ``resume=False`` overwrites.
+    differs raises ValueError. ``resume=False``, or marks of another
+    ``run_id``, delete the ledger before the first stage runs.
     ``metrics["resumed"]`` names the stages this call skipped because the
     ledger already held them."""
     out = str(out_dir).rstrip("/")
@@ -486,11 +485,11 @@ def run_pipeline(
 
     metrics["wall_sec"] = round(time.time() - t_start, 3)
     # the ledger's route count: this call's, or the resumed run's
-    metrics["rows"] = ck.state["stages"]["route"]["rows"]
+    metrics["rows"] = ck.stages["route"]["rows"]
     metrics["rows_per_sec"] = round(metrics["rows"] / metrics["wall_sec"], 1)
     if collect_metrics:
-        _write_text(spark, f"{out}/metrics.json",
-                    json.dumps(metrics, indent=1))
+        _create_file(*_small_file_fs(spark, f"{out}/metrics.json"),
+                     json.dumps(metrics, indent=1))
     return metrics
 
 

@@ -19,6 +19,21 @@ GOLDEN_COUNTS = {
 }
 
 
+def ledger(out) -> dict[str, dict]:
+    """Stage -> mark of the resume ledger under the out dir ``out``, read
+    from its mark files (empty when there is no ledger)."""
+    marks = (json.loads(p.read_text())
+             for p in (Path(out) / "_checkpoint").glob("*.json"))
+    return {m["stage"]: m for m in marks}
+
+
+def unmark(out, *stages: str) -> None:
+    """Delete the mark files of ``stages`` from the ledger under ``out``."""
+    for p in (Path(out) / "_checkpoint").glob("*.json"):
+        if json.loads(p.read_text())["stage"] in stages:
+            p.unlink()
+
+
 def test_per_sink_counts_exact(spark, pipeline_out):
     got = {
         r["sink"]: r["n"]
@@ -165,8 +180,7 @@ def test_checkpoint_resume(spark, fixture_parquet, tmp_path):
 
     out = tmp_path / "resume_out"
     m1 = run_pipeline(spark, fixture_parquet, str(out), run_id="r1")
-    state = json.loads((out / "_checkpoint" / "state.json").read_text())
-    assert set(state["stages"]) >= {"route", "enrich", "decode", "aggregate"}
+    assert set(ledger(out)) >= {"route", "enrich", "decode", "aggregate"}
     m2 = run_pipeline(spark, fixture_parquet, str(out), run_id="r1")
     # resumed run does no stage work
     assert m2["stages"] == {}
@@ -216,6 +230,99 @@ def test_resume_refuses_another_inputs_output(spark, fixture_parquet,
     assert spark.read.parquet(f"{out}/routed").count() == 34
     # the ledger now records the rare input: resuming it skips every stage
     assert run_pipeline(spark, rare, out, run_id="cli")["stages"] == {}
+
+
+@pytest.mark.parametrize("run_id,resume", [("r", False), ("other", True)],
+                         ids=["no-resume", "other-run-id"])
+def test_non_resuming_call_clears_the_ledger(spark, fixture_parquet,
+                                             tmp_path, monkeypatch,
+                                             run_id, resume):
+    """A call that does not resume the ledger deletes it before its first
+    stage. Otherwise, when that call dies after its route write, the
+    earlier run's marks outlive it, and rerunning the earlier run_id
+    skips every stage over the other input's routed table."""
+    from pyspark.sql import Observation
+
+    from binlogpipe.job import run_pipeline
+
+    rare = str(Path(fixture_parquet).with_name("rare_events.parquet"))
+    out = str(tmp_path / "out")
+    run_pipeline(spark, fixture_parquet, out, run_id="r")
+
+    def boom(self):
+        raise RuntimeError("transient metrics failure")
+
+    monkeypatch.setattr(Observation, "get", property(boom))
+    with pytest.raises(RuntimeError, match="transient metrics failure"):
+        run_pipeline(spark, rare, out, run_id=run_id, resume=resume)
+    monkeypatch.undo()
+
+    m = run_pipeline(spark, fixture_parquet, out, run_id="r")
+    assert m["resumed"] == [] and m["rows"] == 166
+    assert spark.read.parquet(f"{out}/routed").count() == 166
+    assert sum(r["n"] for r in spark.read.parquet(
+        f"{out}/agg/sink_counts").collect()) == 166
+
+
+def test_ledger_never_renames(spark, fixture_parquet, tmp_path,
+                              monkeypatch):
+    """Marks and metrics.json are written in place, never renamed (HDFS
+    refuses a rename over an existing file; on object stores a rename is
+    a copy): a run and its resume succeed on a FileSystem whose rename
+    raises, and no .crc sidecar lands next to them on a file:// out
+    dir."""
+    from binlogpipe import job
+
+    class NoRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, *args):
+            raise AssertionError("the ledger renamed a file")
+
+    real = job._small_file_fs
+
+    def no_rename_fs(spark, path):
+        fs, hpath = real(spark, path)
+        return NoRename(fs), hpath
+
+    monkeypatch.setattr(job, "_small_file_fs", no_rename_fs)
+    out = f"file://{tmp_path}/out"
+    m = job.run_pipeline(spark, fixture_parquet, out, run_id="nr")
+    assert m["rows"] == 166 and m["stages"]["decode"]["sinks"] == 18
+    m2 = job.run_pipeline(spark, fixture_parquet, out, run_id="nr")
+    assert m2["rows"] == 166 and m2["stages"] == {}
+    root = tmp_path / "out"
+    assert len(ledger(root)) == 5 + 18
+    assert not list(root.glob("*.crc")) + list(root.glob("_checkpoint/*.crc"))
+
+
+def test_concurrent_marks_all_land(spark, tmp_path):
+    """Threads mark without a lock, each into its own file: under a short
+    switch interval and more threads than cores, every mark lands and a
+    new ledger over the same out dir reads all of them back."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from binlogpipe.job import Checkpoint
+
+    out = str(tmp_path / "out")
+    ck = Checkpoint(spark, out, "c", "fp", resume=True)
+    stages = [f"decode:S{i}" for i in range(64)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            list(pool.map(lambda s: ck.mark(s, n=1), stages, timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert set(ck.stages) == set(stages)
+    again = Checkpoint(spark, out, "c", "fp", resume=True)
+    assert set(again.stages) == set(stages)
+    assert all(again.stages[s]["n"] == 1 for s in stages)
 
 
 def test_compact_sink(spark, fixture_parquet, tmp_path):
@@ -364,8 +471,7 @@ def test_pipeline_empty_input_completes(spark, tmp_path):
     stages = ["route", "lineage", "aggregate", "enrich", "decode"]
     assert set(m["stages"]) == set(stages)
     assert m["stages"]["decode"]["sinks"] == 0
-    ledger = json.loads((out / "_checkpoint" / "state.json").read_text())
-    assert set(stages) <= set(ledger["stages"])
+    assert set(stages) <= set(ledger(out))
     assert spark.read.parquet(str(out / "lineage")).count() == 0
     assert spark.read.parquet(str(out / "agg" / "sink_counts")).count() == 0
     assert not (out / "sinks").exists()
@@ -391,9 +497,7 @@ def test_metrics_failure_does_not_fake_empty_input(
     with pytest.raises(RuntimeError, match="transient metrics failure"):
         job.run_pipeline(spark, fixture_parquet, str(out),
                          run_id="metrics-boom")
-    ledger = out / "_checkpoint" / "state.json"
-    assert not ledger.exists() or \
-        "route" not in json.loads(ledger.read_text())["stages"]
+    assert "route" not in ledger(out)
 
     monkeypatch.undo()
     m = job.run_pipeline(spark, fixture_parquet, str(out),
@@ -412,8 +516,7 @@ def test_scheme_out_dir(spark, fixture_parquet, tmp_path):
     m = job.run_pipeline(spark, fixture_parquet, out, run_id="scheme")
     assert m["rows"] == 166 and m["stages"]["decode"]["sinks"] == 18
     assert json.loads((tmp_path / "out" / "metrics.json").read_text()) == m
-    assert "route" in json.loads((tmp_path / "out" / "_checkpoint" /
-                                  "state.json").read_text())["stages"]
+    assert "route" in ledger(tmp_path / "out")
     m2 = job.run_pipeline(spark, fixture_parquet, out, run_id="scheme")
     assert m2["rows"] == 166 and m2["stages"] == {}
 
@@ -435,8 +538,7 @@ def test_side_stages_complete_when_enrich_fails(spark, fixture_parquet,
     out = tmp_path / "out"
     with pytest.raises(RuntimeError, match="injected enrich failure"):
         job.run_pipeline(spark, fixture_parquet, str(out), run_id="side")
-    stages = json.loads(
-        (out / "_checkpoint" / "state.json").read_text())["stages"]
+    stages = ledger(out)
     assert {"route", "lineage", "aggregate"} <= set(stages)
     assert "enrich" not in stages and "decode" not in stages
     assert (out / "lineage" / "_SUCCESS").exists()
@@ -477,11 +579,7 @@ def test_decode_resume_redoes_only_unmarked_sinks(spark, fixture_parquet,
         return {p.name: p.stat().st_mtime_ns for p in d.iterdir()}
 
     gtid = files(out / "sinks" / "GTID")
-    ck_path = out / "_checkpoint" / "state.json"
-    state = json.loads(ck_path.read_text())
-    for stage in ("decode", "decode:ANON_GTID"):
-        state["stages"].pop(stage)
-    ck_path.write_text(json.dumps(state))
+    unmark(out, "decode", "decode:ANON_GTID")
     shutil.rmtree(anon)
 
     m = job.run_pipeline(spark, fixture_parquet, str(out), run_id="r1")
@@ -506,10 +604,7 @@ def test_empty_routed_sink_writes_empty_typed_sink(spark, fixture_parquet,
 
     # HEARTBEAT is header-only like STOP, so it decodes to STOP's columns
     (out / "routed" / "sink=HEARTBEAT").mkdir()
-    ck_path = out / "_checkpoint" / "state.json"
-    state = json.loads(ck_path.read_text())
-    state["stages"].pop("decode")
-    ck_path.write_text(json.dumps(state))
+    unmark(out, "decode")
 
     job.run_pipeline(spark, fixture_parquet, str(out), run_id="e1")
 
@@ -519,5 +614,4 @@ def test_empty_routed_sink_writes_empty_typed_sink(spark, fixture_parquet,
     assert hb_df.count() == 0
     stop_df = spark.read.parquet(str(out / "sinks" / "STOP"))
     assert hb_df.columns == stop_df.columns
-    state = json.loads(ck_path.read_text())
-    assert "decode:HEARTBEAT" in state["stages"]
+    assert "decode:HEARTBEAT" in ledger(out)
