@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import json
 import time
+import weakref
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
@@ -150,7 +151,7 @@ class Checkpoint:
     def __init__(self, spark: SparkSession, out_dir: str, run_id: str,
                  fingerprint: str, resume: bool):
         self._fs, self._dir = _small_file_fs(spark, f"{out_dir}/_checkpoint")
-        self._HPath = spark._jvm.org.apache.hadoop.fs.Path
+        self._HPath = _fs_classes(spark)[0]
         self._head = {"run_id": run_id, "fingerprint": fingerprint}
         marks = {}
         if self._fs.exists(self._dir):
@@ -188,6 +189,25 @@ class Checkpoint:
         self.stages[stage] = mark
 
 
+# py4j resolves a dotted JVM name with one gateway round trip per
+# segment, so the FS helpers resolve their two classes once per gateway
+# (idle, a `_small_file_fs` call took 2-4 ms with the lookups and 0.3 ms
+# without; under perfbench load the lookups were ~14 ms).
+_FS_CLASSES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _fs_classes(spark: SparkSession):
+    """(Path class, ChecksumFileSystem's java.lang.Class) of the session's
+    JVM gateway."""
+    jvm = spark._jvm
+    got = _FS_CLASSES.get(jvm)
+    if got is None:
+        pkg = jvm.org.apache.hadoop.fs
+        got = _FS_CLASSES[jvm] = (pkg.Path,
+                                  pkg.ChecksumFileSystem._java_lang_class)
+    return got
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path, Path-class) for `path` via the JVM gateway —
     scheme-aware (file://, hdfs://, s3a://). Every filesystem-metadata
@@ -195,8 +215,7 @@ def _hadoop_fs(spark: SparkSession, path: str):
     a driver whose out dir is not POSIX-mounted behaves identically to a
     local run instead of silently no-opping (driver-local glob/rmtree
     return empty/do nothing on a scheme'd path)."""
-    jvm = spark._jvm
-    cls = jvm.org.apache.hadoop.fs.Path
+    cls = _fs_classes(spark)[0]
     hpath = cls(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, cls
 
@@ -208,8 +227,7 @@ def _small_file_fs(spark: SparkSession, path: str):
     ``.crc`` sidecar written there would fail every read after the file
     is edited by hand."""
     fs, hpath, _ = _hadoop_fs(spark, path)
-    if spark._jvm.org.apache.hadoop.fs.ChecksumFileSystem \
-            ._java_lang_class.isInstance(fs):
+    if _fs_classes(spark)[1].isInstance(fs):
         fs = fs.getRawFileSystem()
     return fs, hpath
 
@@ -223,31 +241,37 @@ def _create_file(fs, hpath, text: str) -> None:
         stream.close()
 
 
+def _child_dirs(fs, hpath, prefix: str) -> list:
+    """(name with `prefix` stripped, Path) of each child directory of
+    `hpath` whose name starts with `prefix`: one listing."""
+    if not fs.exists(hpath):
+        return []
+    out = []
+    for st in fs.listStatus(hpath):
+        child = st.getPath()
+        name = child.getName()
+        if st.isDirectory() and name.startswith(prefix):
+            out.append((name[len(prefix):], child))
+    return out
+
+
 def list_partition_dirs(spark: SparkSession, path: str,
                         prefix: str) -> list[str]:
     """Child directory names under `path` starting with `prefix`, prefix
     stripped (prefix '' lists every child directory). Filesystem METADATA
     only — one directory listing, never a table scan."""
     fs, hpath, _ = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(prefix):
-            out.append(name[len(prefix):])
-    return out
+    return [name for name, _ in _child_dirs(fs, hpath, prefix)]
 
 
 def sink_partition_bytes(spark: SparkSession, path: str) -> dict[str, int]:
     """Each `sink=` partition directory under a routed table, mapped to
     the bytes of its files: the distinct sink set and every sink's size
-    without scanning the table (one listing plus one content summary per
-    sink — filesystem metadata only)."""
-    fs, _, HPath = _hadoop_fs(spark, path)
-    return {s: int(fs.getContentSummary(
-                HPath(f"{path.rstrip('/')}/sink={s}")).getLength())
-            for s in list_partition_dirs(spark, path, "sink=")}
+    without scanning the table (one FileSystem lookup, one listing plus
+    one content summary per sink — filesystem metadata only)."""
+    fs, hpath, _ = _hadoop_fs(spark, path)
+    return {s: int(fs.getContentSummary(child).getLength())
+            for s, child in _child_dirs(fs, hpath, "sink=")}
 
 
 def delete_path(spark: SparkSession, path: str) -> bool:
@@ -328,6 +352,13 @@ def write_output(df: DataFrame, fmt: str, path: str,
         raise ValueError(f"unknown sink_format {fmt!r}")
 
 
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (Spark's
+    CodegenMetrics; a cache hit compiles nothing)."""
+    return int(spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME().getCount())
+
+
 def run_pipeline(
     spark: SparkSession,
     input_path: str,
@@ -356,7 +387,14 @@ def run_pipeline(
     differs raises ValueError. ``resume=False``, or marks of another
     ``run_id``, delete the ledger before the first stage runs.
     ``metrics["resumed"]`` names the stages this call skipped because the
-    ledger already held them."""
+    ledger already held them.
+
+    ``metrics["codegen_compiles"]`` counts the generated classes Spark
+    compiled during the call. The count and the class cache behind it
+    are JVM-wide: concurrent work in the same JVM adds to it, and a
+    later run of the same plans in the same session reads 0 when the
+    cache holds them (session.CODEGEN_CACHE_ENTRIES)."""
+    compiles0 = _codegen_compiles(spark)
     out = str(out_dir).rstrip("/")
     ck = Checkpoint(spark, out, run_id, input_fingerprint(
         spark, input_path, sink_format=sink_format,
@@ -487,6 +525,7 @@ def run_pipeline(
     # the ledger's route count: this call's, or the resumed run's
     metrics["rows"] = ck.stages["route"]["rows"]
     metrics["rows_per_sec"] = round(metrics["rows"] / metrics["wall_sec"], 1)
+    metrics["codegen_compiles"] = _codegen_compiles(spark) - compiles0
     if collect_metrics:
         _create_file(*_small_file_fs(spark, f"{out}/metrics.json"),
                      json.dumps(metrics, indent=1))
@@ -506,7 +545,7 @@ def compact_sink(spark: SparkSession, out_dir: str, sink: str,
     no-op there (empty glob = guard bypassed, 0-byte size estimate)."""
     src = f"{str(out_dir).rstrip('/')}/sinks/{sink}"
     fs, sp, HPath = _hadoop_fs(spark, src)
-    if list_partition_dirs(spark, src, "batch="):
+    if _child_dirs(fs, sp, "batch="):
         # streaming sinks are partitioned by micro-batch id; flattening
         # them to root-level files would leave a mixed layout the next
         # stream batch (or replay) corrupts — refuse loudly instead

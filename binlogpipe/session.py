@@ -13,6 +13,19 @@ from importlib.machinery import PathFinder
 
 from pyspark.sql import SparkSession
 
+# Entries of Spark's JVM-wide generated-class cache (the static
+# spark.sql.codegen.cache.maxEntries; Spark's default is 100, which Guava
+# splits over the cache's segments). Counted distinct generated sources:
+# one pipeline run makes 129 on perfbench trans_hot and 94 on
+# trans_rows, and each run replays them in the same cyclic order, the
+# worst case for an LRU: at 100 every later trans_hot run in the session
+# recompiled 115-125 classes (1.0-1.9 s of Janino, 230-260 newly loaded
+# classes for the JIT) and trans_rows 23-26; at 1000 they compile 0.
+# The 50-query suite makes 632-634 at sf0.001; at 100 a second pass over
+# it compiles 723, at 1000 0-10 (as at 5000: AQE replans a few queries
+# differently).
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def local_python_daemon(b: SparkSession.Builder) -> SparkSession.Builder:
     """Start a local master's Python workers from `binlogpipe.pydaemon`,
@@ -80,6 +93,8 @@ def build_spark(app: str = "binlogpipe", cores: int | None = None,
         .config("spark.sql.execution.python.udf.maxRecordsPerBatch", "20000")
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.files.openCostInBytes", "1m")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         # parquet codec: lz4_raw over snappy (round 7). The pipeline writes
         # and re-reads its own parquet (routed table + 18 typed sinks), so
         # codec CPU is paid on every stage; pinned 1-core write probe:

@@ -33,12 +33,15 @@ def data_dir_is_read_only():
 def spark():
     from pyspark.sql import SparkSession
 
-    from binlogpipe.session import local_python_daemon
+    from binlogpipe.session import CODEGEN_CACHE_ENTRIES, local_python_daemon
 
     s = (
         local_python_daemon(SparkSession.builder.master("local[4]"))
         .appName("binlogpipe-tests")
         .config("spark.sql.shuffle.partitions", "8")
+        # the suite's many pipeline runs and oracle queries share this JVM
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

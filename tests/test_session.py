@@ -11,7 +11,9 @@ would hand back the fixture's session with the factory's confs ignored.
 The same probe pins what the local-master Python daemon
 (binlogpipe.pydaemon) buys inside a real pandas-UDF task: pyspark imported
 from the installed package, no zipimporter left to re-read on the per-task
-importlib.invalidate_caches().
+importlib.invalidate_caches(); and what the generated-class cache size
+buys: the fixture pipeline run twice in the session compiles nothing the
+second time.
 """
 from __future__ import annotations
 
@@ -48,6 +50,7 @@ print(json.dumps({
     "master": c.get("spark.master", None),
     "override": s.conf.get("spark.sql.shuffle.partitions"),
     "daemon": c.get("spark.python.daemon.module", None),
+    "codegen_cache": c.get("spark.sql.codegen.cache.maxEntries", None),
 }))
 
 import pandas as pd
@@ -69,23 +72,31 @@ def worker(x: pd.Series) -> pd.Series:
 
 w = s.range(1, numPartitions=1).select(worker("id")).first()[0]
 print(json.dumps(dict(json.loads(w), spark_version=s.version)))
+
+from binlogpipe.job import run_pipeline
+print(json.dumps([
+    run_pipeline(s, sys.argv[2], f"{sys.argv[3]}/run{i}").get(
+        "codegen_compiles") for i in (1, 2)]))
 s.stop()
 """
 
 
 @pytest.fixture(scope="module")
-def probe() -> tuple[dict, dict]:
-    """(session conf, worker report) from one build_spark(cores=2) run."""
-    p = subprocess.run([sys.executable, "-c", PROBE, str(REPO)],
-                       capture_output=True, text=True, timeout=300,
+def probe(fixture_parquet, tmp_path_factory) -> tuple[dict, dict, list]:
+    """(session conf, worker report, codegen compiles of two fixture
+    pipeline runs into fresh out dirs) from one build_spark(cores=2)
+    session."""
+    out = tmp_path_factory.mktemp("probe")
+    p = subprocess.run([sys.executable, "-c", PROBE, str(REPO),
+                        fixture_parquet, str(out)],
+                       capture_output=True, text=True, timeout=600,
                        cwd=REPO)
     assert p.returncode == 0, p.stderr[-2000:]
-    conf, worker = map(json.loads, p.stdout.strip().splitlines()[-2:])
-    return conf, worker
+    return tuple(map(json.loads, p.stdout.strip().splitlines()[-3:]))
 
 
 def test_session_defaults_pinned(probe):
-    conf, _ = probe
+    conf, _, _ = probe
     assert conf["codec"] == "zstd"
     assert conf["committer"] == "2"
     assert conf["speculation"] == "true"
@@ -95,6 +106,7 @@ def test_session_defaults_pinned(probe):
     assert conf["master"] == "local[2]"  # explicit cores pins local[N]
     # build_spark picked the local master, so it picks the daemon too
     assert conf["daemon"] == "binlogpipe.pydaemon"
+    assert conf["codegen_cache"] == "1000"  # Spark's default is 100
 
 
 DEFAULT_CORES = r"""
@@ -129,12 +141,23 @@ def test_worker_imports_installed_pyspark(probe):
     (it was 170-210 ms CPU with Spark's archives on the path), no
     zipimporter is cached, and pyspark comes from a directory at the
     JVM's version."""
-    _, w = probe
+    _, w, _ = probe
     assert w["invalidate_ms"] < 5
     assert w["zipimporters"] == 0
     assert not any(part.endswith((".zip", ".jar"))
                    for part in Path(w["pyspark_file"]).parts)
     assert w["pyspark_version"] == w["spark_version"]
+
+
+def test_second_run_compiles_no_class(probe):
+    """The generated-class cache holds every class one pipeline run
+    makes: the first run in the JVM compiles them, a second run of the
+    same plans into a fresh out dir compiles none (at Spark's default
+    of 100 entries the run's sources evict each other and every run
+    recompiles)."""
+    _, _, (first, second) = probe
+    assert first > 0
+    assert second == 0
 
 
 def _zip(path: Path, files: dict[str, str]) -> str:
