@@ -44,8 +44,8 @@ RFX = f"read_parquet('{RARE}')"
 def _u(off0: int, nbytes: int) -> str:
     """u{8*nbytes}le at 0-based byte offset as BIGINT (DuckDB).
 
-    8-byte reads wrap two's-complement like the Spark side (np_codec.u64 /
-    _FlatBatch.u): the naive unsigned sum would overflow DuckDB's BIGINT
+    8-byte reads wrap two's-complement like the Spark side
+    (np_codec.u64): the naive unsigned sum would overflow DuckDB's BIGINT
     (hard error) for any value with the top bit set, so the top byte is
     read signed ((b+128)%256-128 maps 128..255 to -128..-1)."""
     top = nbytes - 1

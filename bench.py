@@ -162,8 +162,7 @@ def run_pipeline_at(cores: int, input_path: str, tag: str,
             from binlogpipe.job import run_pipeline
 
             run_pipeline(spark, warmup_path, out + "_warm",
-                         run_id="warm", resume=False, collect_metrics=False,
-                         **pipeline_kwargs)
+                         run_id="warm", resume=False, **pipeline_kwargs)
         best = None
         for _ in range(n_timed):
             wall, m = timed_pipeline(spark, input_path, out, f"bench_{tag}",

@@ -365,7 +365,6 @@ def run_pipeline(
     out_dir: str,
     run_id: str = "run0",
     resume: bool = True,
-    collect_metrics: bool = True,
     sink_format: str = "parquet",
     iceberg_prefix: str = "local.binlog",
     input_format: str = "parquet",
@@ -526,9 +525,8 @@ def run_pipeline(
     metrics["rows"] = ck.stages["route"]["rows"]
     metrics["rows_per_sec"] = round(metrics["rows"] / metrics["wall_sec"], 1)
     metrics["codegen_compiles"] = _codegen_compiles(spark) - compiles0
-    if collect_metrics:
-        _create_file(*_small_file_fs(spark, f"{out}/metrics.json"),
-                     json.dumps(metrics, indent=1))
+    _create_file(*_small_file_fs(spark, f"{out}/metrics.json"),
+                 json.dumps(metrics, indent=1))
     return metrics
 
 

@@ -8,8 +8,7 @@ Spark types; they are decoder details (SURVEY §1.2).
 
 All functions take `(buf: bytes, off: int)` and return `(value, new_off)`
 unless noted. `int.from_bytes` is a C-level call, so per-event decode stays
-cheap; fully fixed-layout events are decoded with numpy matrix arithmetic
-instead (see parse.py).
+cheap.
 """
 
 from __future__ import annotations
@@ -49,10 +48,8 @@ def u48(buf: bytes, off: int) -> tuple[int, int]:
 
 def u64(buf: bytes, off: int) -> tuple[int, int]:
     """64-bit little-endian read, wrapped two's-complement to i64: the sink
-    columns are Spark LongType, and the vectorized path (_FlatBatch.u,
-    uint64 acc .view(int64)) wraps the same way — an unsigned
-    Python int >= 2^63 here would fail the pandas->Arrow conversion and
-    quarantine the row only on the scalar path, diverging from vectorized."""
+    columns are Spark LongType, and an unsigned Python int >= 2^63 would
+    fail the pandas->Arrow conversion of the whole decoded batch."""
     return int.from_bytes(_take(buf, off, 8), "little", signed=True), off + 8
 
 
@@ -137,9 +134,12 @@ def tokens_to_bytes(arr) -> bytes:
     return np.asarray(arr, dtype=np.int64).astype(np.uint8).tobytes()
 
 
+_BYTE_DECIMAL = tuple(str(x) for x in range(256))
+
+
 def byte_decimal_concat(b: bytes) -> str:
     """Per-byte *decimal* concatenation used by the reference's GTID
     source_id/transaction_id rendering (mod.rs:1067-1097) — NOT hex uuid.
     E.g. bytes [1, 44] -> "144".
     """
-    return "".join(str(x) for x in b)
+    return "".join([_BYTE_DECIMAL[x] for x in b])

@@ -1,14 +1,14 @@
 """Parse stage: header decode (pure JVM expressions) + per-event-type
 payload decoders (Arrow-batched UDFs).
 
-Each decoder re-implements the semantics of the matching reference parser in
-`/root/reference/crates/old/src/events/mod.rs` (file:line cited per
-function). Every payload decoder, the rows decoder included, is a Spark
-arrow_udf built by ``_rowwise`` over one input form: the tokens batch
-(packed binary, or the contract array<int32>) becomes a ``_FlatBatch`` over
-packed-binary buffers, a whole-batch numpy fast path decodes it where one
-exists, and ``_decode_frame``'s per-row loop decodes the rest. No
-row-at-a-time Spark UDFs; strings use lossy UTF-8 exactly like the
+Each payload decoder is one ``bytes -> dict`` function that re-implements
+the semantics of the matching reference parser (the old crate's
+``src/events/mod.rs``; file:line cited per function). It is the only
+decoder of its event type: ``_rowwise`` wraps it, the rows decoder
+included, as a Spark arrow_udf that packs the tokens batch (packed binary,
+or the contract array<int32>) once, splits it into per-row ``bytes`` and
+runs ``_decode_frame``'s per-row loop. The loop runs per Arrow batch: no
+row-at-a-time Spark UDFs. Strings use lossy UTF-8 exactly like the
 reference (utils.rs:66,75,87,94).
 
 Decode errors never panic an executor (the reference `unreachable!()`s,
@@ -40,14 +40,14 @@ from .coltypes import decode_row, parse_defs
 # ---------------------------------------------------------------------------
 
 
-def with_header(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
+def with_header(df: DataFrame) -> DataFrame:
     """Add header fields, sink, checksum and validation flags.
 
     Pure column expressions (layout.py) — the route/aggregate hot path never
     leaves the JVM. Mirrors parse_header (mod.rs:52-81) + dispatch
     (mod.rs:380-417) + checksum tail (H3).
     """
-    tokens = F.col(tokens_col)
+    tokens = F.col("tokens")
     cols = layout.header_columns(tokens)
     df = df.select("*", *[v.alias(k) for k, v in cols.items()])
     df = df.withColumn("checksum", layout.checksum_expr(tokens))
@@ -101,23 +101,12 @@ def _struct_with_error(fields: list[T.StructField]) -> T.StructType:
     return T.StructType(fields + [T.StructField("parse_error", T.StringType())])
 
 
-def _decode_frame(tokens: _FlatBatch, names: list[str],
-                  fn: Callable[..., dict], vectorized: Callable | None,
-                  *extra) -> pd.DataFrame:
-    """One Arrow batch -> decoded DataFrame: the whole-batch numpy fast
-    path when available (returns None to refuse a batch), else the scalar
-    per-row loop whose try/except turns a bad row into a parse_error row.
-    Each row calls ``fn(row_bytes, *row_extra)``, with one value per
-    `extra` column (the rows decoder's ``columns_type``)."""
-    if vectorized is not None:
-        try:
-            out = vectorized(tokens)
-        except Exception:  # noqa: BLE001 — a whole-batch fast-path
-            # failure must degrade to the per-row loop (where errors
-            # become parse_error rows), never fail the Spark task
-            out = None
-        if out is not None:
-            return out
+def _decode_frame(tokens: list[bytes], names: list[str],
+                  fn: Callable[..., dict], *extra) -> pd.DataFrame:
+    """One Arrow batch -> decoded DataFrame: the per-row loop, whose
+    try/except turns a bad row into a parse_error row. Each row calls
+    ``fn(row_bytes, *row_extra)``, with one value per `extra` column (the
+    rows decoder's ``columns_type``)."""
     cols: dict[str, list] = {n: [] for n in names}
     for args in zip(tokens, *extra):
         try:
@@ -136,26 +125,26 @@ def _decode_frame(tokens: _FlatBatch, names: list[str],
         columns=names)
 
 
-def _arrow_tokens(arr) -> _FlatBatch:
-    """One arrow_udf input batch of the tokens column -> the one form
-    every decoder consumes: a _FlatBatch over packed-binary buffers.
-    Any input goes through _pack_arrow_array first (the route stage's
-    pack: list<int32> is one whole-batch cast, a null cell becomes b""),
-    so the fast paths and the per-row loop see a single type."""
+def _arrow_tokens(arr) -> list[bytes]:
+    """One arrow_udf input batch of the tokens column -> each row's bytes,
+    the one form every decoder consumes. Any input goes through
+    _pack_arrow_array first (the route stage's pack: list<int32> is one
+    whole-batch cast, a null cell becomes b"", which its decoder turns into
+    a parse_error row), then the packed batch is copied out once and sliced
+    per row at its Arrow offsets."""
     import numpy as np
 
     n = len(arr)
     if n == 0:  # an empty IPC batch may carry no offsets buffer at all
-        empty = np.empty(0, dtype=np.int64)
-        return _FlatBatch(np.empty(0, dtype=np.uint8), empty, empty)
+        return []
     arr = _pack_arrow_array(arr)
     _, offs_buf, data_buf = arr.buffers()
     offs = np.frombuffer(offs_buf, dtype=np.int32)[
-        arr.offset:arr.offset + n + 1].astype(np.int64)
-    base = offs[0]
-    offs -= base
-    flat = np.frombuffer(data_buf, dtype=np.uint8)[base:base + int(offs[-1])]
-    return _FlatBatch(flat, offs[:-1], np.diff(offs))
+        arr.offset:arr.offset + n + 1]
+    base = int(offs[0])
+    buf = data_buf[base:int(offs[-1])].to_pybytes()
+    offs = (offs - base).tolist()
+    return [buf[a:b] for a, b in zip(offs, offs[1:])]
 
 
 def _frame_to_struct(frame: pd.DataFrame, schema: T.StructType):
@@ -172,18 +161,16 @@ def _frame_to_struct(frame: pd.DataFrame, schema: T.StructType):
                                       names=[f.name for f in schema.fields])
 
 
-def _rowwise(schema: T.StructType, fn: Callable[..., dict],
-             vectorized: Callable | None = None):
+def _rowwise(schema: T.StructType, fn: Callable[..., dict]):
     """Wrap a per-event ``bytes -> dict`` decoder as a Spark 4.1 arrow_udf
-    returning ``schema`` (+ parse_error). Every decoder is built here: the
-    tokens batch becomes one _FlatBatch (_arrow_tokens; no pandas
-    round-trip on input or output) and _decode_frame runs the one per-row
-    loop. The Python loop is per Arrow batch, never per Spark row; records
-    accumulate columnar (dict-of-lists — pd.DataFrame from columns is
-    several times faster than from row dicts).
+    returning ``schema`` (+ parse_error). Every decoder is built here and
+    is the only decoder of its event type: the tokens batch becomes
+    per-row bytes (_arrow_tokens; no pandas round-trip on input or output)
+    and _decode_frame runs the one per-row loop. The Python loop is per
+    Arrow batch, never per Spark row; records accumulate columnar
+    (dict-of-lists — pd.DataFrame from columns is several times faster
+    than from row dicts).
 
-    `vectorized`, when given, is a whole-batch numpy fast path; it returns a
-    DataFrame or None to fall back to the loop (e.g. mixed event sizes).
     Columns after the tokens column (the rows decoder's ``columns_type``)
     reach ``fn`` as extra per-row values, converted by Arrow's C++
     ``to_numpy`` (``to_pylist`` boxes every nested scalar: ~3x slower on a
@@ -195,7 +182,7 @@ def _rowwise(schema: T.StructType, fn: Callable[..., dict],
     @arrow_udf(schema)
     def audf(tokens: pa.Array, *extra: pa.Array) -> pa.Array:
         return _frame_to_struct(
-            _decode_frame(_arrow_tokens(tokens), names, fn, vectorized,
+            _decode_frame(_arrow_tokens(tokens), names, fn,
                           *(e.to_numpy(zero_copy_only=False) for e in extra)),
             schema)
 
@@ -258,369 +245,14 @@ def unpack_tokens_udf():
 
 
 # ---------------------------------------------------------------------------
-# whole-batch numpy fast paths for hot fixed-layout events
-# ---------------------------------------------------------------------------
-
-def _gtid_vectorized(tokens: _FlatBatch):
-    """GTID/AnonymousGtid events are a fixed 65-byte layout
-    (19 hdr + 1 + 16 + 8 + 1 + 8 + 8 + 4 crc) — column gathers.
-
-    The decimal-rendered source_id/transaction_id strings are built per
-    *unique* (source_id ‖ txn_id) byte pattern and gathered back (dictionary
-    encoding): real binlogs have a handful of server uuids, so string
-    construction drops out of the per-row cost entirely."""
-    import numpy as np
-
-    fl = _flat_batch(tokens, 65)
-    if fl is None or bool((fl.lens != 65).any()):
-        return None
-    ids = fl.flat[fl.offs[:, None] + np.arange(H + 1, H + 25)]
-    uniq, inv = np.unique(ids, axis=0, return_inverse=True)
-    src_u = np.empty(len(uniq), dtype=object)
-    txn_u = np.empty(len(uniq), dtype=object)
-    for i, row in enumerate(uniq):
-        b = row.tobytes()
-        src_u[i] = "-".join(
-            c.byte_decimal_concat(b[a:e])
-            for a, e in ((0, 4), (4, 6), (6, 8), (8, 10), (10, 16)))
-        txn_u[i] = c.byte_decimal_concat(b[16:24])
-    return pd.DataFrame({
-        "rbr_only": fl.flat[fl.offs + H] == 0,
-        "source_id": src_u[inv],
-        "transaction_id": txn_u[inv],
-        "ts_type": fl.u(H + 25, 1).astype(np.int32),
-        "last_committed": fl.u(H + 26, 8),
-        "sequence_number": fl.u(H + 34, 8),
-        "parse_error": None,
-    })
-
-
-def _xid_vectorized(tokens: _FlatBatch):
-    fl = _flat_batch(tokens, H + 8 + 4)
-    if fl is None or bool((fl.lens != H + 8 + 4).any()):
-        return None
-    return pd.DataFrame({"xid": fl.u(H, 8), "parse_error": None})
-
-
-def _intvar_vectorized(tokens: _FlatBatch):
-    """IntVar event, whole-batch (mod.rs:537-554): type byte + u64. A
-    batch containing any unknown type byte bails to the scalar path,
-    which owns the per-row error semantics."""
-    import numpy as np
-
-    fl = _flat_batch(tokens, H + 9)
-    if fl is None:
-        return None
-    t = fl.flat[fl.offs + H]
-    if not bool(np.isin(t, (0, 1, 2)).all()):
-        return None
-    kinds = np.array(["InvalidIntEvent", "LastInsertIdEvent",
-                      "InsertIdEvent"], dtype=object)
-    return pd.DataFrame({"e_type": kinds[t], "value": fl.u(H + 1, 8),
-                         "parse_error": None})
-
-
-def _rand_vectorized(tokens: _FlatBatch):
-    """Rand event, whole-batch (mod.rs:773-784): two u64 seeds."""
-    fl = _flat_batch(tokens, H + 16)
-    if fl is None:
-        return None
-    return pd.DataFrame({"seed1": fl.u(H, 8), "seed2": fl.u(H + 8, 8),
-                         "parse_error": None})
-
-
-def _file_id16_vectorized(tokens: _FlatBatch):
-    """ExecLoad/DeleteFile body, whole-batch (mod.rs:698-718): one u16."""
-    fl = _flat_batch(tokens, H + 2)
-    if fl is None:
-        return None
-    return pd.DataFrame({"file_id": fl.u(H, 2).astype("int32"),
-                         "parse_error": None})
-
-
-# ---------------------------------------------------------------------------
-# flat-batch framework for VARIABLE-length events: one concatenation of the
-# packed-binary batch + an offsets vector (the same layout Arrow uses for
-# binary columns). Fixed-offset header/prefix fields decode as vectorized
-# numpy gathers; only the variable string tails touch per-row Python, and
-# those are bare bytes-slice + decode calls (no per-row dict/struct churn).
-# ---------------------------------------------------------------------------
-
-class _FlatBatch:
-    __slots__ = ("flat", "_buf", "offs", "lens", "n")
-
-    def __init__(self, flat, offs, lens):
-        self.flat = flat      # np.uint8 view of the whole batch
-        self._buf = None      # the same bytes (for cheap per-row slicing),
-                              # materialized on first use — fixed-layout
-                              # decoders never pay the batch copy at all
-        self.offs = offs      # int64 start offset of each row
-        self.lens = lens      # int64 length of each row
-        self.n = len(offs)
-
-    @property
-    def buf(self) -> bytes:
-        if self._buf is None:
-            self._buf = self.flat.tobytes()
-        return self._buf
-
-    def __iter__(self):
-        # scalar-fallback iteration: per-row bytes
-        buf = self.buf
-        for o, ln in zip(self.offs.tolist(), self.lens.tolist()):
-            yield buf[o:o + ln]
-
-    def u(self, rel, width, base=None):
-        """Little-endian unsigned int of `width` bytes at row-relative
-        offset `rel` (or at absolute per-row positions `base + rel`).
-        Returns int64 (width 8 wraps two's-complement like the reference's
-        i64 reads)."""
-        import numpy as np
-
-        pos = (self.offs if base is None else base) + rel
-        acc = np.zeros(self.n, dtype=np.uint64)
-        for k in range(width):
-            acc |= self.flat[pos + k].astype(np.uint64) << np.uint64(8 * k)
-        return acc.view(np.int64) if width == 8 else acc.astype(np.int64)
-
-
-def _flat_batch(fb: _FlatBatch, min_len: int):
-    """`fb`, or None when the batch is empty or contains any row shorter
-    than `min_len` (those batches take the scalar fallback, which carries
-    per-row try/except quarantine semantics)."""
-    if fb.n == 0 or int(fb.lens.min()) < min_len:
-        return None
-    return fb
-
-
-def _mask_errors(cols: dict, err: list):
-    """Scalar-path parity: a row that failed decode nulls ALL its fields,
-    not just the one that threw. Rare, so the object-cast is off the hot
-    path entirely when err is all-None."""
-    import numpy as np
-
-    if not any(e is not None for e in err):
-        cols["parse_error"] = None
-        return pd.DataFrame(cols)
-    bad = np.array([e is not None for e in err])
-    for k, v in cols.items():
-        o = np.asarray(v, dtype=object)
-        o[bad] = None
-        cols[k] = o
-    cols["parse_error"] = pd.Series(err, dtype=object)
-    return pd.DataFrame(cols)
-
-
-def _query_vectorized(tokens: _FlatBatch):
-    """Query event, whole-batch (mod.rs:469-514): the 13-byte fixed prefix
-    decodes as five numpy gathers; the status-vars block stays memoized per
-    distinct byte pattern; schema/query are per-row slices of the flat
-    buffer. QUERY is ~23% of all events — the hottest payload decoder."""
-    fl = _flat_batch(tokens, H + 13 + 4)
-    if fl is None:
-        return None
-    spid = fl.u(H, 4)
-    exec_t = fl.u(H + 4, 4)
-    slen = fl.u(H + 8, 1)
-    ecode = fl.u(H + 9, 2)
-    svl = fl.u(H + 11, 2)
-    qlen = fl.lens - (H + 13) - svl - slen - 1 - 4
-    buf = fl.buf
-    n = fl.n
-    status = [None] * n
-    schema = [None] * n
-    query = [None] * n
-    err = [None] * n
-    # .tolist() once: bytes slicing with Python ints is several times
-    # faster than with np.int64 scalars (each np index pays __index__).
-    # Variable-length fields slice from the ROW's own bytes, never the flat
-    # batch buffer: an interior length field (svl/schema_length) that
-    # overruns its row must truncate at the row end exactly like the scalar
-    # path — a flat-buffer slice would silently read the NEXT row's bytes,
-    # making output depend on batch co-location.
-    for i, (o, rl, sv, sl, ql) in enumerate(zip(
-            fl.offs.tolist(), fl.lens.tolist(), svl.tolist(), slen.tolist(),
-            qlen.tolist())):
-        try:
-            row = buf[o:o + rl]
-            p = H + 13
-            s = p + sv
-            status[i] = _status_vars_json(row[p:s])
-            e = s + sl
-            schema[i] = row[s:e].decode("utf-8")
-            q0 = e + 1
-            query[i] = c.extract_string(row[q0:q0 + ql])
-        except Exception as ex:  # noqa: BLE001 — quarantine, don't panic
-            err[i] = f"{type(ex).__name__}: {ex}"
-    return _mask_errors({
-        "slave_proxy_id": spid, "execution_time": exec_t,
-        "schema_length": slen.astype("int32"), "error_code": ecode.astype("int32"),
-        "status_vars_length": svl.astype("int32"), "status_vars": status,
-        "schema": schema, "query": query,
-    }, err)
-
-
-def _rotate_vectorized(tokens: _FlatBatch):
-    """Rotate event, whole-batch (mod.rs:521-535)."""
-    fl = _flat_batch(tokens, H + 8 + 4)
-    if fl is None:
-        return None
-    pos = fl.u(H, 8)
-    str_len = fl.lens - H - 8 - 4
-    s0 = fl.offs + H + 8
-    buf = fl.buf
-    names = [
-        buf[o:o + ln].decode("utf-8", errors="replace")
-        for o, ln in zip(s0.tolist(), str_len.tolist())
-    ]
-    return pd.DataFrame({"position": pos, "next_binlog": names,
-                         "parse_error": None})
-
-
-def _rows_query_vectorized(tokens: _FlatBatch):
-    """RowsQuery event, whole-batch (mod.rs:1048-1061)."""
-    fl = _flat_batch(tokens, H + 1)
-    if fl is None:
-        return None
-    ln = fl.u(H, 1)
-    buf = fl.buf
-    # row-relative slice (not flat-buffer): a length byte larger than the
-    # row's remainder must truncate at the row end like the scalar path
-    texts = [
-        buf[o + H + 1:o + min(H + 1 + k, rl)].decode("utf-8", errors="replace")
-        for o, rl, k in zip(fl.offs.tolist(), fl.lens.tolist(), ln.tolist())
-    ]
-    return pd.DataFrame({"length": ln.astype("int32"), "query_text": texts,
-                         "parse_error": None})
-
-
-def _user_var_vectorized(tokens: _FlatBatch):
-    """UserVar event, whole-batch (mod.rs:797-858): name_length is the one
-    fixed u32 gather; after the per-row name, the is_null byte splits the
-    batch into the two fixed layouts — NULL (nothing follows) and value
-    (type byte + charset + value_length + bytes, INT adding a trailing
-    flags byte, mod.rs:833-840) — decoded via per-row-base gathers on the
-    not-null subset. A row whose declared lengths leave a required field
-    outside the row returns None for the batch: the scalar fallback owns
-    per-row quarantine semantics and corrupt rows are rare."""
-    import numpy as np
-
-    fl = _flat_batch(tokens, H + 4 + 1)
-    if fl is None:
-        return None
-    nl = fl.u(H, 4)
-    npos = fl.offs + H + 4
-    ipos = npos + nl
-    row_end = fl.offs + fl.lens
-    if not (ipos < row_end).all():
-        return None
-    inull = fl.flat[ipos]
-    notnull = np.nonzero(inull != 1)[0]
-    dpos = ipos[notnull] + 1
-    # fixed not-null prefix: type(1) + charset(4) + value_length(4)
-    if not (dpos + 9 <= row_end[notnull]).all():
-        return None
-
-    def _gu(base, width):
-        acc = np.zeros(len(base), dtype=np.uint64)
-        for k in range(width):
-            acc |= fl.flat[base + k].astype(np.uint64) << np.uint64(8 * k)
-        return acc.astype(np.int64)
-
-    dbyte = fl.flat[dpos]
-    charset_s = _gu(dpos + 1, 4)
-    vl_s = _gu(dpos + 5, 4)
-    vstart = dpos + 9
-    end_s = row_end[notnull]
-    is_int = dbyte == 2
-    # INT's flags byte sits AFTER the (possibly row-truncated) value; the
-    # scalar path raises when it's missing — bail for identical handling
-    if bool((is_int & (vstart + vl_s >= end_s)).any()):
-        return None
-    buf = fl.buf
-    names = [c.string_var(buf[o:e], k)
-             for o, e, k in zip(npos.tolist(), ipos.tolist(), nl.tolist())]
-    n = fl.n
-    d_type = np.full(n, None, dtype=object)
-    charset = np.full(n, None, dtype=object)
-    value_length = np.full(n, None, dtype=object)
-    value = np.full(n, None, dtype=object)
-    value_flags = np.full(n, None, dtype=object)
-    i32 = fl.flat.astype(np.int32)
-    for j, tb, cs, vl, s, e, ii in zip(
-            notnull.tolist(), dbyte.tolist(), charset_s.tolist(),
-            vl_s.tolist(), vstart.tolist(), end_s.tolist(),
-            is_int.tolist()):
-        d_type[j] = _USER_VAR_TYPES.get(tb, "Unknown")
-        charset[j] = cs
-        value_length[j] = vl
-        # value truncates at the row end exactly like the scalar slice
-        value[j] = i32[s:min(s + vl, e)]
-        if ii:
-            value_flags[j] = np.int32(fl.flat[s + vl])
-    return pd.DataFrame({
-        "name_length": nl, "name": names, "is_null": inull == 1,
-        "d_type": d_type, "charset": charset,
-        "value_length": value_length, "value": value,
-        "value_flags": value_flags, "parse_error": None})
-
-
-def _format_desc_vectorized(tokens: _FlatBatch):
-    """FormatDescription event, whole-batch (mod.rs:860-882).
-    supported_types returns int32 numpy slices (Arrow accepts ndarray cells
-    for array<int> columns — no per-row Python list build)."""
-    import numpy as np
-
-    fl = _flat_batch(tokens, H + 57 + 1 + 4)
-    if fl is None:
-        return None
-    ver = fl.u(H, 2)
-    cts = fl.u(H + 52, 4)
-    ehl = fl.u(H + 56, 1)
-    num = fl.lens - H - 57 - 1 - 4
-    st0 = fl.offs + H + 57
-    alg = fl.u(0, 1, base=st0 + num)
-    buf = fl.buf
-    i32 = fl.flat.astype(np.int32)
-    sv0 = fl.offs + H + 2
-    versions = [c.extract_string(buf[o:o + 50]) for o in sv0.tolist()]
-    supported = [i32[o:o + k] for o, k in zip(st0.tolist(), num.tolist())]
-    return pd.DataFrame({
-        "binlog_version": ver.astype("int32"),
-        "mysql_server_version": versions,
-        "create_timestamp": cts,
-        "event_header_length": ehl.astype("int32"),
-        "supported_types": supported,
-        "checksum_alg": alg.astype("int32"),
-        "parse_error": None,
-    })
-
-
-def _prev_gtids_vectorized(tokens: _FlatBatch):
-    """PreviousGtids event, whole-batch (mod.rs:1164-1177)."""
-    import numpy as np
-
-    fl = _flat_batch(tokens, H + 4 + 4)
-    if fl is None:
-        return None
-    n_bytes = fl.lens - H - 4 - 4
-    g0 = fl.offs + H
-    buf_size = fl.u(0, 4, base=g0 + n_bytes)
-    i32 = fl.flat.astype(np.int32)
-    sets = [i32[o:o + k] for o, k in zip(g0.tolist(), n_bytes.tolist())]
-    return pd.DataFrame({"gtid_sets": sets, "buf_size": buf_size,
-                         "parse_error": None})
-
-
-# ---------------------------------------------------------------------------
 # shared sub-decoders
 # ---------------------------------------------------------------------------
 
 def _sv_bytes(buf: bytes, off: int, n: int) -> tuple[bytes, int]:
-    """Bounds-checked slice for status-var string fields: a declared
-    length that overruns the block must FAIL the row (the reference's
-    take(len) fails -> assert_eq!(remain, 0) panics), never silently
-    truncate into a clean-looking row."""
+    """Bounds-checked slice for the status-var block and its string
+    fields: a declared length that overruns the event or the block must
+    FAIL the row (the reference's take(len) fails -> assert_eq!(remain, 0)
+    panics), never silently truncate into a clean-looking row."""
     end = off + n
     if end > len(buf):
         raise ValueError(f"status-var field needs {n} bytes at {off}, "
@@ -790,9 +422,8 @@ def decode_query_py(buf: bytes) -> dict:
     call; status vars memoized (hot path: QUERY is 23% of all events)."""
     slave_proxy_id, execution_time, schema_length, error_code, svl = (
         _struct.unpack_from("<IIBHH", buf, H))
-    off = H + 13
-    status_vars = _status_vars_json(buf[off:off + svl])
-    off += svl
+    raw, off = _sv_bytes(buf, H + 13, svl)
+    status_vars = _status_vars_json(raw)
     schema = buf[off:off + schema_length].decode("utf-8")
     off += schema_length + 1  # +1 skip byte (mod.rs:481)
     qlen = len(buf) - H - 4 - 4 - 1 - 2 - 2 - svl - schema_length - 1 - 4
@@ -1035,8 +666,8 @@ def decode_execute_load_query_py(buf: bytes) -> dict:
     if dup is None:
         raise ValueError(f"bad dup_handling {buf[off]}")
     off += 1
-    status_vars = _status_vars_json(buf[off:off + svl])
-    off += svl
+    raw, off = _sv_bytes(buf, off, svl)
+    status_vars = _status_vars_json(raw)
     schema = buf[off:off + schema_length].decode("utf-8")
     off += schema_length + 1
     qlen = len(buf) - H - 26 - svl - schema_length - 1 - 4
@@ -1072,8 +703,8 @@ def decode_table_map_py(buf: bytes) -> dict:
     enrich broadcast join (replaces the reference's global registry,
     mod.rs:23-26, 999-1001).
 
-    ``DECODERS["TABLE_MAP"]`` runs it once per row, with no whole-batch
-    fast path and no memo: a memo keyed on the event never hits, since
+    ``DECODERS["TABLE_MAP"]`` runs it once per row, with no memo: a memo
+    keyed on the event never hits, since
     every event carries its own header (timestamp, log_pos) and CRC even
     when two bodies are byte-identical."""
     off = H
@@ -1450,40 +1081,33 @@ def make_rows_udf(n_images: int):
 # decoder registry: sink name -> (schema, arrow_udf factory)
 # ---------------------------------------------------------------------------
 
-def _decoder(schema: T.StructType, fn: Callable[[bytes], dict],
-             vectorized: Callable | None = None):
+def _decoder(schema: T.StructType, fn: Callable[[bytes], dict]):
     """(schema, factory): the factory builds the sink's arrow_udf, and its
-    ``.args`` are ``(schema, fn, vectorized)``."""
-    return schema, _functools.partial(_rowwise, schema, fn, vectorized)
+    ``.args`` are ``(schema, fn)``."""
+    return schema, _functools.partial(_rowwise, schema, fn)
 
 
 DECODERS: dict[str, tuple[T.StructType, Callable]] = {
-    "QUERY": _decoder(QUERY_SCHEMA, decode_query_py, _query_vectorized),
-    "ROTATE": _decoder(ROTATE_SCHEMA, decode_rotate_py, _rotate_vectorized),
-    "INTVAR": _decoder(INTVAR_SCHEMA, decode_intvar_py, _intvar_vectorized),
-    "RAND": _decoder(RAND_SCHEMA, decode_rand_py, _rand_vectorized),
-    "USER_VAR": _decoder(USER_VAR_SCHEMA, decode_user_var_py,
-                         _user_var_vectorized),
-    "FORMAT_DESC": _decoder(FORMAT_DESC_SCHEMA, decode_format_desc_py,
-                            _format_desc_vectorized),
-    "XID": _decoder(XID_SCHEMA, decode_xid_py, _xid_vectorized),
+    "QUERY": _decoder(QUERY_SCHEMA, decode_query_py),
+    "ROTATE": _decoder(ROTATE_SCHEMA, decode_rotate_py),
+    "INTVAR": _decoder(INTVAR_SCHEMA, decode_intvar_py),
+    "RAND": _decoder(RAND_SCHEMA, decode_rand_py),
+    "USER_VAR": _decoder(USER_VAR_SCHEMA, decode_user_var_py),
+    "FORMAT_DESC": _decoder(FORMAT_DESC_SCHEMA, decode_format_desc_py),
+    "XID": _decoder(XID_SCHEMA, decode_xid_py),
     "BEGIN_LOAD_QUERY": _decoder(FILE_DATA_SCHEMA, decode_file_data_py),
     "CREATE_FILE": _decoder(FILE_DATA_SCHEMA, decode_file_data_py),
     "APPEND_BLOCK": _decoder(FILE_DATA_SCHEMA, decode_file_data_py),
-    "EXEC_LOAD": _decoder(FILE_ID16_SCHEMA, decode_file_id16_py,
-                          _file_id16_vectorized),
-    "DELETE_FILE": _decoder(FILE_ID16_SCHEMA, decode_file_id16_py,
-                            _file_id16_vectorized),
+    "EXEC_LOAD": _decoder(FILE_ID16_SCHEMA, decode_file_id16_py),
+    "DELETE_FILE": _decoder(FILE_ID16_SCHEMA, decode_file_id16_py),
     "EXEC_LOAD_QUERY": _decoder(EXEC_LOAD_QUERY_SCHEMA,
                                 decode_execute_load_query_py),
     "TABLE_MAP": _decoder(TABLE_MAP_SCHEMA, decode_table_map_py),
     "INCIDENT": _decoder(INCIDENT_SCHEMA, decode_incident_py),
-    "ROWS_QUERY": _decoder(ROWS_QUERY_SCHEMA, decode_rows_query_py,
-                           _rows_query_vectorized),
-    "GTID": _decoder(GTID_SCHEMA, _gtid_fields, _gtid_vectorized),
-    "ANON_GTID": _decoder(GTID_SCHEMA, _gtid_fields, _gtid_vectorized),
-    "PREV_GTIDS": _decoder(PREV_GTIDS_SCHEMA, decode_previous_gtids_py,
-                           _prev_gtids_vectorized),
+    "ROWS_QUERY": _decoder(ROWS_QUERY_SCHEMA, decode_rows_query_py),
+    "GTID": _decoder(GTID_SCHEMA, _gtid_fields),
+    "ANON_GTID": _decoder(GTID_SCHEMA, _gtid_fields),
+    "PREV_GTIDS": _decoder(PREV_GTIDS_SCHEMA, decode_previous_gtids_py),
     "LOAD": _decoder(LOAD_SCHEMA, decode_load_py),
     "NEW_LOAD": _decoder(NEW_LOAD_SCHEMA, decode_new_load_py),
 }

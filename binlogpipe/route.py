@@ -26,17 +26,15 @@ ROUTED_COLS = [
 ROWS_SINKS = ("WRITE_ROWS_V2", "UPDATE_ROWS_V2", "DELETE_ROWS_V2")
 
 
-def salt_expr(sink_col=None, doc_id_col=None):
+def salt_expr():
     """Per-type salt factor: salt = pmod(xxhash64(doc_id), k_sink)."""
-    sink_col = sink_col if sink_col is not None else F.col("sink")
-    doc_id_col = doc_id_col if doc_id_col is not None else F.col("doc_id")
     c = None
     for name, k in layout.SALT_FACTORS.items():
-        cond = sink_col == name
+        cond = F.col("sink") == name
         c = F.when(cond, k) if c is None else c.when(cond, k)
     factor = (c.otherwise(layout.DEFAULT_SALT_FACTOR) if c is not None
               else F.lit(layout.DEFAULT_SALT_FACTOR))
-    return F.pmod(F.xxhash64(doc_id_col), factor)
+    return F.pmod(F.xxhash64(F.col("doc_id")), factor)
 
 
 def routed_rows(df: DataFrame) -> DataFrame:

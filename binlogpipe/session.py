@@ -43,9 +43,9 @@ def local_python_daemon(b: SparkSession.Builder) -> SparkSession.Builder:
 
 def build_spark(app: str = "binlogpipe", cores: int | None = None,
                 extra_conf: dict[str, str] | None = None) -> SparkSession:
-    """`extra_conf` entries are applied LAST (override the defaults) —
-    the A/B harnesses use it to flip one conf (e.g.
-    spark.io.compression.codec) between otherwise-identical sessions.
+    """`extra_conf` entries are applied LAST (override the defaults):
+    perfbench sets its warehouse dir, driver JVM options and event log
+    through it, and bench.py passes a cell's `spark_conf`.
 
     Master resolution: an EXPLICIT `cores` argument always pins
     local[cores] (the bench/test harnesses depend on that); otherwise,

@@ -127,8 +127,7 @@ def probe_lcluster(n_exec: int) -> float:
         for _ in range(2):
             shutil.rmtree(out, ignore_errors=True)
             t0 = time.time()
-            run_pipeline(spark, INPUT_24M, out, run_id="p", resume=False,
-                         collect_metrics=False)
+            run_pipeline(spark, INPUT_24M, out, run_id="p", resume=False)
             w = time.time() - t0
             best = w if best is None or w < best else best
         return best
