@@ -102,103 +102,75 @@ def parse_defs(type_ids: list[int], meta_buf: bytes) -> list[tuple[int, list[int
     return out
 
 
+# fixed-width cells: raw little-endian bytes of this many bytes
+# (mysql.rs:148-267); Int24 reads 4 bytes like the reference
+# (mysql.rs:172-174), and the v2 temporals a fixed 4 (mysql.rs:207-215; an
+# acknowledged approximation in the reference)
+_FIXED_WIDTH = {
+    T_DECIMAL: 4, T_TINY: 1, T_SHORT: 2, T_LONG: 4, T_LONGLONG: 8,
+    T_INT24: 4, T_YEAR: 2, T_TIMESTAMP2: 4, T_DATETIME2: 4, T_TIME2: 4,
+}
+
+
 def decode_cell(buf: bytes, off: int, type_id: int, meta: list[int]):
     """Decode one row-image cell (mysql.rs:148-267).
 
     Returns ``((kind, bytes_list, num_val), new_off)`` where bytes_list is
     the raw little-endian byte values (list of int) or None, and num_val is
-    the converted Float/Double value or None.
+    the converted Float/Double value or None. Every width goes through
+    ``np_codec.take``, so a cell that overruns the row image fails the row.
     """
     t = type_id
-
-    def need(at: int, n: int) -> None:
-        # the reference's nom take(n) FAILS the row when a declared length
-        # overruns the buffer; Python slicing would silently truncate and
-        # emit a clean-looking row with wrong bytes and a null parse_error
-        if at + n > len(buf):
-            raise ValueError(
-                f"cell type {t} overruns row image: need {n} bytes at "
-                f"{at}, have {len(buf)}")
-
-    def raw(n: int, kind: str):
-        need(off, n)
-        return (kind, list(buf[off:off + n]), None), off + n
-
-    if t == T_DECIMAL:
-        return raw(4, "Decimal")
-    if t == T_TINY:
-        return raw(1, "Tiny")
-    if t == T_SHORT:
-        return raw(2, "Short")
-    if t == T_LONG:
-        return raw(4, "Long")
+    n = _FIXED_WIDTH.get(t)
+    if n is not None:
+        b, end = c.take(buf, off, n, KIND_NAMES[t])
+        return (KIND_NAMES[t], list(b), None), end
     if t == T_FLOAT:
         v, n = c.f32(buf, off)
         return ("Float", None, v), n
     if t == T_DOUBLE:
         v, n = c.f64(buf, off)
         return ("Double", None, v), n
-    if t == T_NULL:
-        return ("Null", None, None), off
-    if t == T_LONGLONG:
-        return raw(8, "LongLong")
-    if t == T_INT24:
-        # reference reads 4 bytes for Int24 (mysql.rs:172-174)
-        return raw(4, "Int24")
     if t in (T_TIMESTAMP, T_DATE, T_TIME, T_DATETIME):
         # packed temporal: 1-byte length + payload, length byte kept in the
         # value (parse_packed, mysql.rs:270-276)
-        n = buf[off]
-        need(off, 1 + n)
-        return (KIND_NAMES[t], list(buf[off:off + 1 + n]), None), off + 1 + n
-    if t == T_YEAR:
-        return raw(2, "Year")
-    if t == T_NEWDATE:
-        return ("NewDate", None, None), off
+        b, end = c.take(buf, off, 1 + buf[off], KIND_NAMES[t])
+        return (KIND_NAMES[t], list(b), None), end
     if t == T_VARCHAR:
         max_len = meta[0] if meta else 0
         # 2-byte length prefix iff declared max_len > 255 (mysql.rs:190-202)
         if max_len > 255:
-            need(off, 2)
             ln, o = c.u16(buf, off)
         else:
             ln, o = buf[off], off + 1
-        need(o, ln)
-        return ("VarChar", list(buf[o:o + ln]), None), o + ln
+        b, end = c.take(buf, o, ln, "VarChar")
+        return ("VarChar", list(b), None), end
     if t == T_BIT:
         b1, b2 = (meta + [0, 0])[:2]
-        n = (b1 + 7) // 8 + (b2 + 7) // 8
-        return raw(n, "Bit")
-    if t in (T_TIMESTAMP2, T_DATETIME2, T_TIME2):
-        # v2 temporals: fixed 4 bytes (mysql.rs:207-215; acknowledged
-        # approximation in the reference)
-        return raw(4, KIND_NAMES[t])
+        b, end = c.take(buf, off, (b1 + 7) // 8 + (b2 + 7) // 8, "Bit")
+        return ("Bit", list(b), None), end
     if t == T_NEWDECIMAL:
         p, s = (meta + [10, 0])[:2]
-        return raw(new_decimal_len(p, s), "NewDecimal")
-    if t in (T_ENUM, T_SET, T_TINYBLOB, T_MEDIUMBLOB, T_LONGBLOB):
+        b, end = c.take(buf, off, new_decimal_len(p, s), "NewDecimal")
+        return ("NewDecimal", list(b), None), end
+    if t in (T_NULL, T_NEWDATE, T_ENUM, T_SET, T_TINYBLOB, T_MEDIUMBLOB,
+             T_LONGBLOB):
         return (KIND_NAMES[t], None, None), off
     if t == T_BLOB:
-        len_bytes = meta[0] if meta else 1
-        need(off, len_bytes)
-        ln = int.from_bytes(buf[off:off + len_bytes], "little")
-        o = off + len_bytes
-        need(o, ln)
-        return ("Blob", list(buf[o:o + ln]), None), o + ln
-    if t == T_VARSTRING:
-        # quirk: consumed length omits the 1-byte prefix (module docstring)
-        ln, o = buf[off], off + 1
-        need(o, ln)
-        return ("VarString", list(buf[o:o + ln]), None), off + ln
-    if t == T_STRING:
-        # quirks: String cells are emitted as VarChar (mysql.rs:255-261);
-        # consumed length omits the 1-byte prefix (module docstring)
-        ln, o = buf[off], off + 1
-        need(o, ln)
-        return ("VarChar", list(buf[o:o + ln]), None), off + ln
+        lb, o = c.take(buf, off, meta[0] if meta else 1, "Blob length")
+        b, end = c.take(buf, o, int.from_bytes(lb, "little"), "Blob")
+        return ("Blob", list(b), None), end
+    if t in (T_VARSTRING, T_STRING):
+        # quirks: the consumed length omits the 1-byte prefix (module
+        # docstring), and String cells are emitted as VarChar
+        # (mysql.rs:255-261)
+        ln = buf[off]
+        b, _ = c.take(buf, off + 1, ln, KIND_NAMES[t])
+        return ("VarString" if t == T_VARSTRING else "VarChar", list(b),
+                None), off + ln
     if t == T_GEOMETRY:
-        n = meta[0] if meta else 1
-        return raw(n, "Geometry")
+        b, end = c.take(buf, off, meta[0] if meta else 1, "Geometry")
+        return ("Geometry", list(b), None), end
     raise ValueError(f"unknown column type id {t}")
 
 

@@ -3,12 +3,19 @@
 Re-implements the decoding semantics of the reference's scalar helpers
 (`/root/reference/crates/old/src/utils.rs:13-109`,
 `/root/reference/crates/core/src/codec.rs:99-223`) as plain Python/numpy
-functions used *inside* Arrow-batched pandas UDFs. These never surface as
+functions used *inside* Arrow-batched UDFs. These never surface as
 Spark types; they are decoder details (SURVEY §1.2).
 
 All functions take `(buf: bytes, off: int)` and return `(value, new_off)`
 unless noted. `int.from_bytes` is a C-level call, so per-event decode stays
 cheap.
+
+Decoder contract: a decoder's `buf` is one event's header + payload, without
+the 4-byte checksum (`parse._arrow_tokens` cuts it), so "to the end of the
+event" is `len(buf)`. Every length-derived read goes through `take`, the
+reference's nom `take(n)`: a declared length that runs past the buffer
+fails the row instead of truncating into a clean-looking value. The
+fixed-width readers below are `take`s too.
 """
 
 from __future__ import annotations
@@ -16,14 +23,16 @@ from __future__ import annotations
 import numpy as np
 
 
-def _take(buf: bytes, off: int, n: int) -> bytes:
-    """Bounds-checked slice: the reference's nom take(n) FAILS on short
-    input; int.from_bytes over a silently-truncated Python slice would
-    emit a confident partial value with no parse_error instead."""
+def take(buf: bytes, off: int, n: int, what: str = "field") -> tuple[bytes, int]:
+    """The `n` bytes at `off` and the offset after them. Raises ValueError
+    when `n < 0` or the bytes run past `buf`: the reference's nom take(n)
+    fails there, where a Python slice would truncate silently. `what`
+    names the field in the error."""
     end = off + n
-    if end > len(buf):
-        raise ValueError(f"need {n} bytes at {off}, have {len(buf)}")
-    return buf[off:end]
+    if n < 0 or end > len(buf):
+        raise ValueError(f"{what} overruns: {n} bytes at {off}, "
+                         f"buffer of {len(buf)}")
+    return buf[off:end], end
 
 
 def u8(buf: bytes, off: int) -> tuple[int, int]:
@@ -31,30 +40,26 @@ def u8(buf: bytes, off: int) -> tuple[int, int]:
 
 
 def u16(buf: bytes, off: int) -> tuple[int, int]:
-    return int.from_bytes(_take(buf, off, 2), "little"), off + 2
-
-
-def u24(buf: bytes, off: int) -> tuple[int, int]:
-    return int.from_bytes(_take(buf, off, 3), "little"), off + 3
+    b, end = take(buf, off, 2)
+    return int.from_bytes(b, "little"), end
 
 
 def u32(buf: bytes, off: int) -> tuple[int, int]:
-    return int.from_bytes(_take(buf, off, 4), "little"), off + 4
+    b, end = take(buf, off, 4)
+    return int.from_bytes(b, "little"), end
 
 
 def u48(buf: bytes, off: int) -> tuple[int, int]:
-    return int.from_bytes(_take(buf, off, 6), "little"), off + 6
+    b, end = take(buf, off, 6)
+    return int.from_bytes(b, "little"), end
 
 
 def u64(buf: bytes, off: int) -> tuple[int, int]:
     """64-bit little-endian read, wrapped two's-complement to i64: the sink
     columns are Spark LongType, and an unsigned Python int >= 2^63 would
-    fail the pandas->Arrow conversion of the whole decoded batch."""
-    return int.from_bytes(_take(buf, off, 8), "little", signed=True), off + 8
-
-
-def i64(buf: bytes, off: int) -> tuple[int, int]:
-    return int.from_bytes(_take(buf, off, 8), "little", signed=True), off + 8
+    fail the Arrow conversion of the whole decoded batch."""
+    b, end = take(buf, off, 8)
+    return int.from_bytes(b, "little", signed=True), end
 
 
 def f32(buf: bytes, off: int) -> tuple[float, int]:
@@ -63,6 +68,9 @@ def f32(buf: bytes, off: int) -> tuple[float, int]:
 
 def f64(buf: bytes, off: int) -> tuple[float, int]:
     return float(np.frombuffer(buf, dtype="<f8", count=1, offset=off)[0]), off + 8
+
+
+_LENENC_WIDTH = {0xFB: 2, 0xFC: 2, 0xFD: 3, 0xFE: 8}
 
 
 def int_lenenc(buf: bytes, off: int) -> tuple[int, int]:
@@ -79,13 +87,11 @@ def int_lenenc(buf: bytes, off: int) -> tuple[int, int]:
     # payload reads are bounds-checked like the fixed-width readers: a
     # prefix at the buffer end must FAIL the row (nom take parity), not
     # silently decode a short slice into a confident wrong value
-    if first in (0xFB, 0xFC):
-        return int.from_bytes(_take(buf, off + 1, 2), "little"), off + 3
-    if first == 0xFD:
-        return int.from_bytes(_take(buf, off + 1, 3), "little"), off + 4
-    if first == 0xFE:
-        return int.from_bytes(_take(buf, off + 1, 8), "little"), off + 9
-    raise ValueError("lenenc prefix 0xff is invalid")
+    n = _LENENC_WIDTH.get(first)
+    if n is None:
+        raise ValueError("lenenc prefix 0xff is invalid")
+    b, end = take(buf, off + 1, n, "lenenc integer")
+    return int.from_bytes(b, "little"), end
 
 
 def utf8_lossy(b: bytes) -> str:
@@ -101,11 +107,6 @@ def extract_string(b: bytes) -> str:
     return utf8_lossy(b[:null_end])
 
 
-def string_var(b: bytes, length: int) -> str:
-    """Decode up to `length` bytes, lossy (utils.rs:93-99)."""
-    return utf8_lossy(b if len(b) <= length else b[:length])
-
-
 def string_nul(buf: bytes, off: int) -> tuple[str, int]:
     """NUL-terminated string; consumes the terminator (utils.rs:73-79)."""
     end = buf.find(b"\x00", off)
@@ -117,7 +118,8 @@ def string_nul(buf: bytes, off: int) -> tuple[str, int]:
 def string_fixed(buf: bytes, off: int) -> tuple[int, str, int]:
     """1-byte length + that many bytes, lossy (utils.rs:104-109)."""
     n = buf[off]
-    return n, utf8_lossy(buf[off + 1:off + 1 + n]), off + 1 + n
+    b, end = take(buf, off + 1, n, "length-prefixed string")
+    return n, utf8_lossy(b), end
 
 
 def tokens_to_bytes(arr) -> bytes:

@@ -11,6 +11,12 @@ runs ``_decode_frame``'s per-row loop. The loop runs per Arrow batch: no
 row-at-a-time Spark UDFs. Strings use lossy UTF-8 exactly like the
 reference (utils.rs:66,75,87,94).
 
+Each decoder gets the event's header + payload: ``_arrow_tokens`` cuts the
+4-byte checksum, so "to the end of the event" is ``len(buf)`` and a
+fixed-width read that runs into the checksum fails. Every length-derived
+read goes through ``np_codec.take``, which fails the row when the length
+runs past the event (the reference's nom ``take``).
+
 Decode errors never panic an executor (the reference `unreachable!()`s,
 mod.rs:405-415): every decode struct carries a ``parse_error`` field, and the
 router sends rows with a non-null error to the quarantine sink.
@@ -102,9 +108,9 @@ def _struct_with_error(fields: list[T.StructField]) -> T.StructType:
 
 
 def _decode_frame(tokens: list[bytes], names: list[str],
-                  fn: Callable[..., dict], *extra) -> pd.DataFrame:
-    """One Arrow batch -> decoded DataFrame: the per-row loop, whose
-    try/except turns a bad row into a parse_error row. Each row calls
+                  fn: Callable[..., dict], *extra) -> dict[str, list]:
+    """One Arrow batch -> one list per decoded column: the per-row loop,
+    whose try/except turns a bad row into a parse_error row. Each row calls
     ``fn(row_bytes, *row_extra)``, with one value per `extra` column (the
     rows decoder's ``columns_type``)."""
     cols: dict[str, list] = {n: [] for n in names}
@@ -117,21 +123,16 @@ def _decode_frame(tokens: list[bytes], names: list[str],
             r["parse_error"] = f"{type(e).__name__}: {e}"
         for n in names:
             cols[n].append(r[n])
-    # object dtype per column: pandas otherwise coerces an int column
-    # containing any None (an errored row in the batch) to float64, which
-    # silently rounds i64 values beyond 2**53 before Arrow casts them back
-    return pd.DataFrame(
-        {n: pd.Series(cols[n], dtype=object) for n in names},
-        columns=names)
+    return cols
 
 
 def _arrow_tokens(arr) -> list[bytes]:
-    """One arrow_udf input batch of the tokens column -> each row's bytes,
-    the one form every decoder consumes. Any input goes through
-    _pack_arrow_array first (the route stage's pack: list<int32> is one
-    whole-batch cast, a null cell becomes b"", which its decoder turns into
-    a parse_error row), then the packed batch is copied out once and sliced
-    per row at its Arrow offsets."""
+    """One arrow_udf input batch of the tokens column -> each row's header
+    + payload bytes, the one form every decoder consumes. Any input goes
+    through _pack_arrow_array first (the route stage's pack: list<int32> is
+    one whole-batch cast, a null cell becomes b"", which its decoder turns
+    into a parse_error row), then the packed batch is copied out once and
+    sliced per row at its Arrow offsets, less the 4-byte checksum."""
     import numpy as np
 
     n = len(arr)
@@ -142,23 +143,22 @@ def _arrow_tokens(arr) -> list[bytes]:
     offs = np.frombuffer(offs_buf, dtype=np.int32)[
         arr.offset:arr.offset + n + 1]
     base = int(offs[0])
-    buf = data_buf[base:int(offs[-1])].to_pybytes()
+    packed = data_buf[base:int(offs[-1])].to_pybytes()
     offs = (offs - base).tolist()
-    return [buf[a:b] for a, b in zip(offs, offs[1:])]
+    # max(): a row shorter than the checksum (a null cell is b"") becomes
+    # b"", not a negative bound that reads on into its neighbours
+    return [packed[a:max(a, b - 4)] for a, b in zip(offs, offs[1:])]
 
 
-def _frame_to_struct(frame: pd.DataFrame, schema: T.StructType):
-    """Decoded DataFrame -> pa.StructArray with the schema's exact arrow
+def _frame_to_struct(cols: dict[str, list], schema: T.StructType):
+    """Decoded column lists -> pa.StructArray with the schema's exact arrow
     field types (the declared Spark types drive every conversion)."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    arrays = []
-    for f in schema.fields:
-        at = to_arrow_type(f.dataType)
-        col = frame[f.name]
-        arrays.append(pa.array(col, type=at, from_pandas=True))
-    return pa.StructArray.from_arrays(arrays,
-                                      names=[f.name for f in schema.fields])
+    return pa.StructArray.from_arrays(
+        [pa.array(cols[f.name], type=to_arrow_type(f.dataType),
+                  from_pandas=True) for f in schema.fields],
+        names=[f.name for f in schema.fields])
 
 
 def _rowwise(schema: T.StructType, fn: Callable[..., dict]):
@@ -168,8 +168,7 @@ def _rowwise(schema: T.StructType, fn: Callable[..., dict]):
     per-row bytes (_arrow_tokens; no pandas round-trip on input or output)
     and _decode_frame runs the one per-row loop. The Python loop is per
     Arrow batch, never per Spark row; records accumulate columnar
-    (dict-of-lists — pd.DataFrame from columns is several times faster
-    than from row dicts).
+    (dict-of-lists), and each list becomes its Arrow column directly.
 
     Columns after the tokens column (the rows decoder's ``columns_type``)
     reach ``fn`` as extra per-row values, converted by Arrow's C++
@@ -248,18 +247,6 @@ def unpack_tokens_udf():
 # shared sub-decoders
 # ---------------------------------------------------------------------------
 
-def _sv_bytes(buf: bytes, off: int, n: int) -> tuple[bytes, int]:
-    """Bounds-checked slice for the status-var block and its string
-    fields: a declared length that overruns the event or the block must
-    FAIL the row (the reference's take(len) fails -> assert_eq!(remain, 0)
-    panics), never silently truncate into a clean-looking row."""
-    end = off + n
-    if end > len(buf):
-        raise ValueError(f"status-var field needs {n} bytes at {off}, "
-                         f"have {len(buf)}")
-    return buf[off:end], end
-
-
 def _sv_string_nul(buf: bytes, off: int) -> tuple[str, int]:
     """NUL-terminated string that REQUIRES the terminator (the lenient
     np_codec.string_nul reads to end-of-buffer, which here would silently
@@ -267,14 +254,15 @@ def _sv_string_nul(buf: bytes, off: int) -> tuple[str, int]:
     end = buf.find(b"\x00", off)
     if end == -1:
         raise ValueError(f"status-var string at {off} missing NUL")
-    return c.utf8_lossy(buf[off:end]), end + 1
+    raw, end = c.take(buf, off, end - off)
+    return c.utf8_lossy(raw), end + 1
 
 
 def parse_status_vars(buf: bytes) -> list[dict]:
     """Query status-var block (query.rs:75-177), bounded sub-slice with the
     same exhaustion check (`assert_eq!(remain, 0)`, mod.rs:475-477): every
-    read is bounds-checked, so a truncated block raises (-> parse_error
-    row) instead of exiting the loop early with a partial result."""
+    read is a take, so a truncated block raises (-> parse_error row)
+    instead of exiting the loop early with a partial result."""
     out: list[dict] = []
     off = 0
     while off < len(buf):
@@ -308,13 +296,12 @@ def parse_status_vars(buf: bytes) -> list[dict]:
             d.update({n: (code >> i) % 2 == 1 for i, n in enumerate(names)})
             out.append(d)
         elif key == 0x02:  # Q_CATALOG: len + str + NUL (query.rs:132-138)
-            ln = buf[off]
-            val = c.string_var(buf[off + 1:off + 1 + ln], ln)
-            term = buf[off + 1 + ln]
-            if term != 0:
+            raw, off = c.take(buf, off + 1, buf[off], "Q_CATALOG")
+            if buf[off] != 0:
                 raise ValueError("Q_CATALOG missing NUL terminator")
-            off += 1 + ln + 1
-            out.append({"key": key, "name": "Q_CATALOG", "value": val})
+            off += 1
+            out.append({"key": key, "name": "Q_CATALOG",
+                        "value": c.utf8_lossy(raw)})
         elif key == 0x03:
             incr, off = c.u16(buf, off)
             offset, off = c.u16(buf, off)
@@ -327,17 +314,13 @@ def parse_status_vars(buf: bytes) -> list[dict]:
             out.append({"key": key, "name": "Q_CHARSET_CODE",
                         "client": cl, "conn": co, "server": sv})
         elif key == 0x05:
-            ln = buf[off]
-            raw, end = _sv_bytes(buf, off + 1, ln)
+            raw, off = c.take(buf, off + 1, buf[off], "Q_TIME_ZONE_CODE")
             out.append({"key": key, "name": "Q_TIME_ZONE_CODE",
                         "value": c.extract_string(raw)})
-            off = end
         elif key == 0x06:
-            ln = buf[off]
-            raw, end = _sv_bytes(buf, off + 1, ln)
+            raw, off = c.take(buf, off + 1, buf[off], "Q_CATALOG_NZ_CODE")
             out.append({"key": key, "name": "Q_CATALOG_NZ_CODE",
                         "value": c.extract_string(raw)})
-            off = end
         elif key == 0x07:
             v, off = c.u16(buf, off)
             out.append({"key": key, "name": "Q_LC_TIME_NAMES_CODE", "value": v})
@@ -351,11 +334,9 @@ def parse_status_vars(buf: bytes) -> list[dict]:
             v, off = c.u32(buf, off)
             out.append({"key": key, "name": "Q_MASTER_DATA_WRITTEN_CODE", "value": v})
         elif key == 0x0B:
-            ln = buf[off]
-            raw, off = _sv_bytes(buf, off + 1, ln)
+            raw, off = c.take(buf, off + 1, buf[off], "Q_INVOKERS user")
             user = c.utf8_lossy(raw)
-            ln = buf[off]
-            raw, off = _sv_bytes(buf, off + 1, ln)
+            raw, off = c.take(buf, off + 1, buf[off], "Q_INVOKERS host")
             host = c.utf8_lossy(raw)
             out.append({"key": key, "name": "Q_INVOKERS", "user": user, "host": host})
         elif key == 0x0C:
@@ -383,35 +364,31 @@ def _status_vars_json(buf: bytes) -> str:
     return json.dumps(parse_status_vars(buf), separators=(",", ":"))
 
 
+# flag, source id, transaction id, ts_type, last_committed, sequence_number
+_GTID = _struct.Struct("<B16s8sBqq")
+
+
 def _gtid_fields(buf: bytes) -> dict:
     """Shared GTID/AnonymousGtid body (parse_events_gtid, mod.rs:1063-1114).
     source_id renders as per-byte decimal concat in 4-2-2-2-6 groups — NOT a
     hex uuid (mod.rs:1067-1091)."""
-    off = layout.HEADER_LEN
-    rbr_only = buf[off] == 0
-    off += 1
-    s = buf[off:off + 16]
+    flag, s, tid, ts_type, last_committed, sequence_number = (
+        _GTID.unpack_from(buf, layout.HEADER_LEN))
     source_id = "-".join(
         c.byte_decimal_concat(s[a:b])
         for a, b in ((0, 4), (4, 6), (6, 8), (8, 10), (10, 16))
     )
-    off += 16
-    transaction_id = c.byte_decimal_concat(buf[off:off + 8])
-    off += 8
-    ts_type = buf[off]
-    off += 1
-    last_committed, off = c.i64(buf, off)
-    sequence_number, off = c.i64(buf, off)
     return {
-        "rbr_only": rbr_only, "source_id": source_id,
-        "transaction_id": transaction_id, "ts_type": ts_type,
+        "rbr_only": flag == 0, "source_id": source_id,
+        "transaction_id": c.byte_decimal_concat(tid), "ts_type": ts_type,
         "last_committed": last_committed, "sequence_number": sequence_number,
     }
 
 
 # ---------------------------------------------------------------------------
-# per-type decoders: bytes -> dict. Offsets start at 19 (end of header).
-# event_size == len(buf) is validated upstream.
+# per-type decoders: bytes -> dict. Offsets start at 19 (end of header);
+# `buf` ends where the checksum begins (event_size == len(buf) + 4 is
+# validated upstream).
 # ---------------------------------------------------------------------------
 
 H = layout.HEADER_LEN
@@ -422,17 +399,16 @@ def decode_query_py(buf: bytes) -> dict:
     call; status vars memoized (hot path: QUERY is 23% of all events)."""
     slave_proxy_id, execution_time, schema_length, error_code, svl = (
         _struct.unpack_from("<IIBHH", buf, H))
-    raw, off = _sv_bytes(buf, H + 13, svl)
+    raw, off = c.take(buf, H + 13, svl, "status vars")
     status_vars = _status_vars_json(raw)
-    schema = buf[off:off + schema_length].decode("utf-8")
-    off += schema_length + 1  # +1 skip byte (mod.rs:481)
-    qlen = len(buf) - H - 4 - 4 - 1 - 2 - 2 - svl - schema_length - 1 - 4
-    query = c.extract_string(buf[off:off + qlen])
+    # the schema and the byte after it (mod.rs:481)
+    schema, off = c.take(buf, off, schema_length + 1, "schema")
     return {
         "slave_proxy_id": slave_proxy_id, "execution_time": execution_time,
         "schema_length": schema_length, "error_code": error_code,
         "status_vars_length": svl, "status_vars": status_vars,
-        "schema": schema, "query": query,
+        "schema": schema[:-1].decode("utf-8"),
+        "query": c.extract_string(buf[off:]),
     }
 
 
@@ -470,8 +446,8 @@ def decode_status_typed_py(buf: bytes) -> dict:
     the inverted-FLAGS2 booleans, three SQL_MODE bits, the charset triple,
     catalog, and updated-db names as flat oracle-checkable columns. Reuses
     the golden-tested `parse_status_vars` sub-parser."""
-    svl = int.from_bytes(buf[H + 11:H + 13], "little")
-    entries = parse_status_vars(buf[H + 13:H + 13 + svl])
+    svl, off = c.u16(buf, H + 11)
+    entries = parse_status_vars(c.take(buf, off, svl, "status vars")[0])
     by_key = {e["key"]: e for e in entries}
     b = lambda e, k: None if e is None else int(e[k])  # noqa: E731
     e0, e1, e4 = by_key.get(0), by_key.get(1), by_key.get(4)
@@ -496,9 +472,7 @@ def decode_status_typed_py(buf: bytes) -> dict:
 def decode_rotate_py(buf: bytes) -> dict:
     """Rotate event (mod.rs:521-535)."""
     position, off = c.u64(buf, H)
-    str_len = len(buf) - H - 8 - 4
-    next_binlog = c.string_var(buf[off:off + str_len], str_len)
-    return {"position": position, "next_binlog": next_binlog}
+    return {"position": position, "next_binlog": c.utf8_lossy(buf[off:])}
 
 
 ROTATE_SCHEMA = _struct_with_error([
@@ -545,8 +519,8 @@ def decode_user_var_py(buf: bytes) -> dict:
     byte (mod.rs:833-840)."""
     off = H
     name_length, off = c.u32(buf, off)
-    name = c.string_var(buf[off:off + name_length], name_length)
-    off += name_length
+    name, off = c.take(buf, off, name_length, "user var name")
+    name = c.utf8_lossy(name)
     is_null = buf[off] == 1
     off += 1
     d = {"name_length": name_length, "name": name, "is_null": is_null,
@@ -559,8 +533,8 @@ def decode_user_var_py(buf: bytes) -> dict:
     d["charset"], off = c.u32(buf, off)
     vl, off = c.u32(buf, off)
     d["value_length"] = vl
-    d["value"] = list(buf[off:off + vl])
-    off += vl
+    value, off = c.take(buf, off, vl, "user var value")
+    d["value"] = list(value)
     if d["d_type"] == "INT":
         d["value_flags"] = buf[off]
     return d
@@ -580,29 +554,19 @@ USER_VAR_SCHEMA = _struct_with_error([
 
 def decode_format_desc_py(buf: bytes) -> dict:
     """FormatDescription event (mod.rs:860-882)."""
-    off = H
-    binlog_version, off = c.u16(buf, off)
-    server_version = c.extract_string(buf[off:off + 50])
-    off += 50
+    binlog_version, off = c.u16(buf, H)
+    server_version, off = c.take(buf, off, 50, "server version")
     create_timestamp, off = c.u32(buf, off)
-    event_header_length = buf[off]; off += 1
-    num = len(buf) - H - (2 + 50 + 4 + 1) - 1 - 4
-    if num < 0:
-        # a self-consistent short event would otherwise step the offset
-        # BACKWARDS and read checksum_alg out of the server-version bytes
-        # with a null parse_error (the reference's length arithmetic
-        # underflows u32 and take() fails the row)
-        raise ValueError(f"format_desc event too short ({len(buf)} bytes)")
-    supported_types = list(buf[off:off + num])
-    off += num
-    checksum_alg = buf[off]
+    # the rest: event_header_length, supported_types, checksum_alg
+    supported_types, end = c.take(buf, off + 1, len(buf) - off - 2,
+                                  "supported types")
     return {
         "binlog_version": binlog_version,
-        "mysql_server_version": server_version,
+        "mysql_server_version": c.extract_string(server_version),
         "create_timestamp": create_timestamp,
-        "event_header_length": event_header_length,
-        "supported_types": supported_types,
-        "checksum_alg": checksum_alg,
+        "event_header_length": buf[off],
+        "supported_types": list(supported_types),
+        "checksum_alg": buf[end],
     }
 
 
@@ -629,8 +593,7 @@ def decode_file_data_py(buf: bytes) -> dict:
     """Shared CreateFile/AppendBlock/BeginLoadQuery body
     (parse_file_data, mod.rs:663-670)."""
     file_id, off = c.u32(buf, H)
-    block = c.extract_string(buf[off:len(buf) - 4])
-    return {"file_id": file_id, "block_data": block}
+    return {"file_id": file_id, "block_data": c.extract_string(buf[off:])}
 
 
 FILE_DATA_SCHEMA = _struct_with_error([
@@ -651,34 +614,29 @@ FILE_ID16_SCHEMA = _struct_with_error([T.StructField("file_id", T.IntegerType())
 _DUP_HANDLING = {0: "Error", 1: "Ignore", 2: "Replace"}
 
 
+# thread_id, execution_time, schema_length, error_code, status_vars_length,
+# file_id, start_pos, end_pos, dup_handling
+_EXEC_LOAD_QUERY = _struct.Struct("<IIBHHIIIB")
+
+
 def decode_execute_load_query_py(buf: bytes) -> dict:
     """ExecuteLoadQuery event (mod.rs:909-964)."""
-    off = H
-    thread_id, off = c.u32(buf, off)
-    execution_time, off = c.u32(buf, off)
-    schema_length = buf[off]; off += 1
-    error_code, off = c.u16(buf, off)
-    svl, off = c.u16(buf, off)
-    file_id, off = c.u32(buf, off)
-    start_pos, off = c.u32(buf, off)
-    end_pos, off = c.u32(buf, off)
-    dup = _DUP_HANDLING.get(buf[off])
+    (thread_id, execution_time, schema_length, error_code, svl, file_id,
+     start_pos, end_pos, dup_byte) = _EXEC_LOAD_QUERY.unpack_from(buf, H)
+    dup = _DUP_HANDLING.get(dup_byte)
     if dup is None:
-        raise ValueError(f"bad dup_handling {buf[off]}")
-    off += 1
-    raw, off = _sv_bytes(buf, off, svl)
+        raise ValueError(f"bad dup_handling {dup_byte}")
+    raw, off = c.take(buf, H + _EXEC_LOAD_QUERY.size, svl, "status vars")
     status_vars = _status_vars_json(raw)
-    schema = buf[off:off + schema_length].decode("utf-8")
-    off += schema_length + 1
-    qlen = len(buf) - H - 26 - svl - schema_length - 1 - 4
-    query = c.extract_string(buf[off:off + qlen])
+    schema, off = c.take(buf, off, schema_length + 1, "schema")
     return {
         "thread_id": thread_id, "execution_time": execution_time,
         "schema_length": schema_length, "error_code": error_code,
         "status_vars_length": svl, "file_id": file_id,
         "start_pos": start_pos, "end_pos": end_pos,
         "dup_handling_flags": dup, "status_vars": status_vars,
-        "schema": schema, "query": query,
+        "schema": schema[:-1].decode("utf-8"),
+        "query": c.extract_string(buf[off:]),
     }
 
 
@@ -719,19 +677,17 @@ def decode_table_map_py(buf: bytes) -> dict:
         raise ValueError("missing NUL after table name")
     off += 1
     column_count, off = c.int_lenenc(buf, off)
-    type_ids = list(buf[off:off + column_count])
-    off += column_count
+    type_ids, off = c.take(buf, off, column_count, "column types")
     meta_count, off = c.int_lenenc(buf, off)
-    defs = parse_defs(type_ids, buf[off:off + meta_count])
-    off += meta_count
-    mask_len = (column_count + 7) // 8
-    null_bits = list(buf[off:off + mask_len])
+    meta, off = c.take(buf, off, meta_count, "column metadata")
+    defs = parse_defs(list(type_ids), meta)
+    null_bits, _ = c.take(buf, off, (column_count + 7) // 8, "null bitmap")
     return {
         "table_id": table_id, "tm_flags": tm_flags,
         "schema_name": schema_name, "table_name": table_name,
         "column_count": column_count,
         "columns_type": [{"type_id": t, "meta": m} for t, m in defs],
-        "null_bits": null_bits,
+        "null_bits": list(null_bits),
     }
 
 
@@ -757,9 +713,10 @@ def decode_incident_py(buf: bytes) -> dict:
     kinds = {0: "None", 1: "LostEvents"}
     if d_type not in kinds:
         raise ValueError(f"bad incident type {d_type}")
-    ln = buf[off]; off += 1
-    message = c.string_var(buf[off:off + ln], ln)
-    return {"d_type": kinds[d_type], "message_length": ln, "message": message}
+    ln = buf[off]
+    message, _ = c.take(buf, off + 1, ln, "message")
+    return {"d_type": kinds[d_type], "message_length": ln,
+            "message": c.utf8_lossy(message)}
 
 
 INCIDENT_SCHEMA = _struct_with_error([
@@ -772,8 +729,8 @@ INCIDENT_SCHEMA = _struct_with_error([
 def decode_rows_query_py(buf: bytes) -> dict:
     """RowsQuery event (mod.rs:1048-1061)."""
     ln = buf[H]
-    query_text = c.string_var(buf[H + 1:H + 1 + ln], ln)
-    return {"length": ln, "query_text": query_text}
+    query_text, _ = c.take(buf, H + 1, ln, "query text")
+    return {"length": ln, "query_text": c.utf8_lossy(query_text)}
 
 
 ROWS_QUERY_SCHEMA = _struct_with_error([
@@ -794,10 +751,10 @@ GTID_SCHEMA = _struct_with_error([
 
 def decode_previous_gtids_py(buf: bytes) -> dict:
     """PreviousGtids event (mod.rs:1164-1177); gtid_sets stays raw bytes."""
-    n = len(buf) - H - 4 - 4
-    gtid_sets = list(buf[H:H + n])
-    buf_size, _ = c.u32(buf, H + n)
-    return {"gtid_sets": gtid_sets, "buf_size": buf_size}
+    # gtid_sets runs up to the trailing u32 buf_size
+    gtid_sets, off = c.take(buf, H, len(buf) - H - 4, "gtid sets")
+    buf_size, _ = c.u32(buf, off)
+    return {"gtid_sets": list(gtid_sets), "buf_size": buf_size}
 
 
 PREV_GTIDS_SCHEMA = _struct_with_error([
@@ -815,38 +772,39 @@ def _load_flags(flags: int) -> dict:
     }
 
 
+# thread_id, execution_time, skip_lines, table_name_length, schema_length,
+# num_fields: the prefix Load and NewLoad share
+_LOAD_PREFIX = _struct.Struct("<IIIBBI")
+
+
 def _extract_many_fields(buf: bytes, off: int, num_fields: int,
                          table_name_length: int, schema_length: int):
-    """Shared Load/NewLoad tail (extract_many_fields, mod.rs:556-594)."""
-    field_name_lengths = list(buf[off:off + num_fields])
-    off += num_fields
-    total_len = sum(field_name_lengths) + num_fields
-    raw = buf[off:off + total_len]
-    off += total_len
+    """Shared Load/NewLoad tail (extract_many_fields, mod.rs:556-594): the
+    field names, table and schema names, and the file name. The file name
+    is the rest of the event but its last byte: the reference's Load
+    file-length arithmetic (mod.rs:570-581) subtracts 3 for the two NUL
+    terminators it consumed, one more than it read."""
+    field_name_lengths, off = c.take(buf, off, num_fields, "field name lengths")
+    raw, off = c.take(buf, off, sum(field_name_lengths) + num_fields,
+                      "field names")
     field_names, p = [], 0
     for _ in range(num_fields):
         s, p = c.string_nul(raw, p)
         field_names.append(s)
-    table_name = c.extract_string(buf[off:off + table_name_length + 1])
-    off += table_name_length + 1
-    schema_name = c.extract_string(buf[off:off + schema_length + 1])
-    off += schema_length + 1
-    return field_name_lengths, field_names, table_name, schema_name, off
+    table_name, off = c.take(buf, off, table_name_length + 1, "table name")
+    schema_name, off = c.take(buf, off, schema_length + 1, "schema name")
+    file_name, _ = c.take(buf, off, len(buf) - off - 1, "file name")
+    return (field_names, c.extract_string(table_name),
+            c.extract_string(schema_name), c.extract_string(file_name))
 
 
 def decode_load_py(buf: bytes) -> dict:
     """Load event (mod.rs:596-656)."""
-    off = H
-    thread_id, off = c.u32(buf, off)
-    execution_time, off = c.u32(buf, off)
-    skip_lines, off = c.u32(buf, off)
-    table_name_length = buf[off]; off += 1
-    schema_length = buf[off]; off += 1
-    num_fields, off = c.u32(buf, off)
-    field_term, enclosed_by, line_term, line_start, escaped_by = buf[off:off + 5]
-    off += 5
-    opt = _load_flags(buf[off]); off += 1
-    ef = buf[off]; off += 1
+    (thread_id, execution_time, skip_lines, table_name_length, schema_length,
+     num_fields) = _LOAD_PREFIX.unpack_from(buf, H)
+    seps, off = c.take(buf, H + _LOAD_PREFIX.size, 7, "separators")
+    field_term, enclosed_by, line_term, line_start, escaped_by, opt, ef = seps
+    opt = _load_flags(opt)
     empty_flags = {
         "field_term_empty": ef % 2 == 1,
         "enclosed_empty": (ef >> 1) % 2 == 1,
@@ -854,11 +812,8 @@ def decode_load_py(buf: bytes) -> dict:
         "line_start_empty": (ef >> 3) % 2 == 1,
         "escape_empty": (ef >> 4) % 2 == 1,
     }
-    fnl, fns, table_name, schema_name, off = _extract_many_fields(
+    fns, table_name, schema_name, file_name = _extract_many_fields(
         buf, off, num_fields, table_name_length, schema_length)
-    file_len = (len(buf) - H - 25 - num_fields - (sum(fnl) + num_fields)
-                - table_name_length - schema_length - 3 - 4)
-    file_name = c.extract_string(buf[off:off + file_len])
     return {
         "thread_id": thread_id, "execution_time": execution_time,
         "skip_lines": skip_lines, "num_fields": num_fields,
@@ -893,24 +848,16 @@ LOAD_SCHEMA = _struct_with_error([
 
 def decode_new_load_py(buf: bytes) -> dict:
     """NewLoad event (mod.rs:725-771): length-prefixed separator strings."""
-    off = H
-    thread_id, off = c.u32(buf, off)
-    execution_time, off = c.u32(buf, off)
-    skip_lines, off = c.u32(buf, off)
-    table_name_length = buf[off]; off += 1
-    schema_length = buf[off]; off += 1
-    num_fields, off = c.u32(buf, off)
+    (thread_id, execution_time, skip_lines, table_name_length, schema_length,
+     num_fields) = _LOAD_PREFIX.unpack_from(buf, H)
+    off = H + _LOAD_PREFIX.size
     seps = {}
     for nm in ("field_term", "enclosed_by", "line_term", "line_start", "escaped_by"):
-        ln = buf[off]
-        seps[nm] = c.string_var(buf[off + 1:off + 1 + ln], ln)
-        off += 1 + ln
+        sep, off = c.take(buf, off + 1, buf[off], nm)
+        seps[nm] = c.utf8_lossy(sep)
     opt = _load_flags(buf[off]); off += 1
-    fnl, fns, table_name, schema_name, off = _extract_many_fields(
+    fns, table_name, schema_name, file_name = _extract_many_fields(
         buf, off, num_fields, table_name_length, schema_length)
-    file_len = (len(buf) - H - 25 - num_fields - (sum(fnl) + num_fields)
-                - table_name_length - schema_length - 3 - 4)
-    file_name = c.extract_string(buf[off:off + file_len])
     return {
         "thread_id": thread_id, "execution_time": execution_time,
         "skip_lines": skip_lines, "num_fields": num_fields,
@@ -984,55 +931,40 @@ def decode_rows_py(buf: bytes, col_defs: list[tuple[int, list[int]]],
     extra_data_len, off = c.u16(buf, off)
     if extra_data_len < 2:
         raise ValueError("extra_data_len < 2")
-    extra = []
-    if extra_data_len > 2:
-        # many1(parse_extra_data) (rows.rs:48-79); fixtures always hit the
-        # ==2 empty case (mod.rs:1194-1198)
-        end = off + extra_data_len - 2
-        while off < end:
-            if buf[off] != 0x00:
-                raise ValueError(f"unknown extra data type {buf[off]}")
-            length = buf[off + 1]
-            fmt = _EXTRA_FORMATS.get(buf[off + 2])
-            if fmt is None:
-                raise ValueError(f"unknown extra data format {buf[off + 2]}")
-            payload = c.extract_string(buf[off + 3:off + 3 + length])
-            extra.append({"length": length, "format": fmt, "payload": payload})
-            off += 3 + length
-    cc_off = off
+    # many1(parse_extra_data) (rows.rs:48-79) over the block; fixtures
+    # always hit the ==2 empty case (mod.rs:1194-1198)
+    block, off = c.take(buf, off, extra_data_len - 2, "extra data")
+    extra, p = [], 0
+    while p < len(block):
+        if block[p] != 0x00:
+            raise ValueError(f"unknown extra data type {block[p]}")
+        length = block[p + 1]
+        fmt = _EXTRA_FORMATS.get(block[p + 2])
+        if fmt is None:
+            raise ValueError(f"unknown extra data format {block[p + 2]}")
+        payload, p = c.take(block, p + 3, length, "extra data payload")
+        extra.append({"length": length, "format": fmt,
+                      "payload": c.extract_string(payload)})
     column_count, off = c.int_lenenc(buf, off)
-    encode_len = off - cc_off
     bit_len = (column_count + 7) // 8
-    # nom-take parity: the reference's take(bit_len) fails the event when
-    # the bitmaps overrun, and its u32 col_data length arithmetic
-    # underflows to a huge failing take — a corrupt declared column_count
-    # must not silently truncate the bitmaps into the checksum region
-    if off + bit_len * n_images > len(buf):
-        raise ValueError("image bitmaps overrun event")
-    bits1 = list(buf[off:off + bit_len])
-    off += bit_len
+    bits1, off = c.take(buf, off, bit_len, "image bitmaps")
     bits2 = None
     if n_images == 2:
-        bits2 = list(buf[off:off + bit_len])
-        off += bit_len
-    # col_data length arithmetic (mod.rs:1234-1243 / 1316-1325)
-    col_len = (len(buf) - H - 6 - 2 - extra_data_len - encode_len
-               - bit_len * n_images - 4)
-    if col_len < 0:
-        raise ValueError("negative col_data length")
-    col_data = buf[off:off + col_len]
+        bits2, off = c.take(buf, off, bit_len, "image bitmaps")
+        bits2 = list(bits2)
+    # col_data runs to the end of the event (mod.rs:1234-1243 / 1316-1325).
     # many1(parse_row) parity (mod.rs:1244-1250): the remainder after the
     # last COMPLETE row is discarded (`let (_, rows) = many1(...)`), so a
     # failing tail after >=1 parsed row keeps the prefix and the event
     # SUCCEEDS; zero parsed rows — including empty col_data — fails the
     # whole event (many1 requires at least one).
-    rows, p = [], 0
-    while p < len(col_data):
+    rows, p = [], off
+    while p < len(buf):
         try:
-            # absolute offsets into col_data: re-slicing col_data[p:] per
-            # row copies the shrinking tail — O(rows^2) bytes on a bulk
-            # insert event with thousands of rows
-            cells, end = decode_row(col_data, p + bit_len, col_defs)
+            # absolute offsets into buf: re-slicing per row copies the
+            # shrinking tail — O(rows^2) bytes on a bulk insert event with
+            # thousands of rows
+            cells, end = decode_row(buf, p + bit_len, col_defs)
         except Exception:  # noqa: BLE001 — nom many1 prefix semantics
             if rows:
                 break
@@ -1054,7 +986,7 @@ def decode_rows_py(buf: bytes, col_defs: list[tuple[int, list[int]]],
         # function's profile on empty-extra batches)
         "extra_data": ("[]" if not extra
                        else json.dumps(extra, separators=(",", ":"))),
-        "column_count": column_count, "image_bits1": bits1,
+        "column_count": column_count, "image_bits1": list(bits1),
         "image_bits2": bits2, "rows": rows,
     }
 

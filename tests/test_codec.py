@@ -10,14 +10,14 @@ def test_fixed_ints():
     buf = bytes([1, 2, 3, 4, 5, 6, 7, 8])
     assert c.u8(buf, 0) == (1, 1)
     assert c.u16(buf, 0) == (0x0201, 2)
-    assert c.u24(buf, 0) == (0x030201, 3)
     assert c.u32(buf, 0) == (0x04030201, 4)
     assert c.u48(buf, 0) == (0x060504030201, 6)
     assert c.u64(buf, 0) == (0x0807060504030201, 8)
 
 
 def test_i64_negative():
-    assert c.i64(b"\xff" * 8, 0) == (-1, 8)
+    # u64 wraps two's-complement into the i64 LongType range
+    assert c.u64(b"\xff" * 8, 0) == (-1, 8)
 
 
 def test_lenenc_old_crate_boundaries():
@@ -35,12 +35,22 @@ def test_lenenc_old_crate_boundaries():
 def test_strings():
     assert c.extract_string(b"abc\x00def") == "abc"
     assert c.extract_string(b"abc") == "abc"
-    assert c.string_var(b"abcdef", 3) == "abc"
-    assert c.string_var(b"ab", 3) == "ab"
     assert c.string_nul(b"xx\x00yy", 0) == ("xx", 3)
     assert c.string_fixed(b"\x03abcdef", 0) == (3, "abc", 4)
     # lossy utf-8 like String::from_utf8_lossy
     assert c.extract_string(b"\xff\xfe") == "��"
+
+
+def test_take_bounds():
+    """take is the reference's nom take(n): the exact bytes and the offset
+    after them, or a ValueError when n < 0 or the bytes run past buf."""
+    buf = b"abcdef"
+    assert c.take(buf, 2, 4) == (b"cdef", 6)        # exact fit
+    assert c.take(buf, 6, 0) == (b"", 6)            # n == 0 at the end
+    with pytest.raises(ValueError, match="schema overruns"):
+        c.take(buf, 2, 5, "schema")                 # one byte over
+    with pytest.raises(ValueError, match="overruns"):
+        c.take(buf, 0, -1)                          # negative length
 
 
 def test_byte_decimal_concat():

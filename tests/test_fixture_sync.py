@@ -50,3 +50,11 @@ def test_synth_is_deterministic(tmp_path):
     ta, tc = pq.read_table(a), pq.read_table(c)
     assert not ta.equals(tc)
     assert ta.column("doc_id").equals(tc.column("doc_id"))
+
+
+def test_committed_rare_table_matches_generator():
+    """data/rare_events.parquet is what `rare_events()` builds with the
+    shared `make_event`, so a change to either shows up here."""
+    committed = pq.read_table(FIXTURE_PARQUET.with_name("rare_events.parquet"))
+    assert fixture_gen.rows_to_table(fixture_gen.rare_events()).equals(
+        committed)

@@ -2,39 +2,35 @@
 fixtures never exercise (SURVEY §2.3/§2.4 completeness): the file-ops
 family, Load/NewLoad, Incident, NULL user vars, the rare Query status
 vars, and the full ColTypes width matrix. Events are hand-assembled per
-the reference layouts (mod.rs / mysql.rs file:line in each test)."""
+the reference layouts (mod.rs / mysql.rs file:line in each test).
+
+Decoders take an event without its 4-byte checksum (the decode UDF cuts
+it), so each direct call passes ``make_event(...)[:-4]``."""
 
 import struct
 
 from binlogpipe import parse
 from binlogpipe.coltypes import decode_cell, decode_row, parse_defs
-
-
-def make_event(event_type: int, payload: bytes, *, timestamp=1000,
-               server_id=1, log_pos=4, flags=0) -> bytes:
-    size = 19 + len(payload) + 4
-    hdr = struct.pack("<IBIII", timestamp, event_type, server_id, size,
-                      log_pos)[:17] + struct.pack("<H", flags)
-    return hdr + payload + b"\x12\x34\x56\x78"  # checksum tail
+from tools.fixture_gen import make_event
 
 
 def test_create_file_append_block(tmp_path):
     # parse_file_data (mod.rs:663-670): u32 file_id + block to checksum
     ev = make_event(0x08, struct.pack("<I", 9) + b"hello block")
-    d = parse.decode_file_data_py(ev)
+    d = parse.decode_file_data_py(ev[:-4])
     assert d == {"file_id": 9, "block_data": "hello block"}
 
 
 def test_exec_load_delete_file():
     # u16 file_id (mod.rs:698-718)
     ev = make_event(0x0A, struct.pack("<H", 77))
-    assert parse.decode_file_id16_py(ev) == {"file_id": 77}
+    assert parse.decode_file_id16_py(ev[:-4]) == {"file_id": 77}
 
 
 def test_incident():
     # u16 type + u8 len + message (mod.rs:1020-1041)
     ev = make_event(0x1A, struct.pack("<H", 1) + bytes([4]) + b"oops")
-    d = parse.decode_incident_py(ev)
+    d = parse.decode_incident_py(ev[:-4])
     assert d == {"d_type": "LostEvents", "message_length": 4,
                  "message": "oops"}
 
@@ -43,7 +39,7 @@ def test_user_var_null():
     # is_null short-circuits the tail (mod.rs:802-819)
     name = b"v"
     ev = make_event(0x0E, struct.pack("<I", 1) + name + bytes([1]))
-    d = parse.decode_user_var_py(ev)
+    d = parse.decode_user_var_py(ev[:-4])
     assert d["name"] == "v" and d["is_null"] is True
     assert d["d_type"] is None and d["value"] is None
 
@@ -64,7 +60,7 @@ def test_load_event():
     # a trailing NUL pad makes the layout line up
     payload += b"t\x00" + b"s\x00" + b"/tmp/f\x00"
     ev = make_event(0x06, payload)
-    d = parse.decode_load_py(ev)
+    d = parse.decode_load_py(ev[:-4])
     assert d["thread_id"] == 7 and d["skip_lines"] == 2
     assert d["num_fields"] == 2 and d["field_names"] == ["a", "bb"]
     assert d["table_name"] == "t" and d["schema_name"] == "s"
@@ -84,7 +80,7 @@ def test_new_load_event_parses():
     payload += bytes([1]) + b"x\x00"                 # field lens + names
     payload += b"t\x00" + b"s\x00" + b"/tmp/f....."
     ev = make_event(0x0C, payload)
-    d = parse.decode_new_load_py(ev)
+    d = parse.decode_new_load_py(ev[:-4])
     assert d["field_names"] == ["x"] and d["table_name"] == "t"
     assert d["field_term"] == "," and d["line_start"] == ""
 
@@ -218,7 +214,7 @@ def test_rows_extra_data_formats():
         p += struct.pack("<H", 1)
         p += struct.pack("<H", 2 + len(extra)) + extra
         p += bytes([1, 0x01, 0x00]) + struct.pack("<i", value)
-        return make_event(0x1E, p)
+        return make_event(0x1E, p)[:-4]
 
     cases = {
         "NDB": [(0x00, b"ndbinfo")],
@@ -265,7 +261,7 @@ def test_decode_cell_overrun_raises():
     p += struct.pack("<H", 2) + bytes([1, 0x01, 0x00]) + b"\x01\x02\x03"
     ev = make_event(0x1E, p)
     with pytest.raises(ValueError):
-        parse.decode_rows_py(ev, [(3, [])], 1)
+        parse.decode_rows_py(ev[:-4], [(3, [])], 1)
 
 
 def test_truncated_status_vars_and_short_format_desc_quarantine():
@@ -298,7 +294,7 @@ def test_truncated_status_vars_and_short_format_desc_quarantine():
              + b"\x00" * (79 - 19))
     assert len(short) == 79
     with pytest.raises(ValueError):
-        parse.decode_format_desc_py(short)
+        parse.decode_format_desc_py(short[:-4])
 
 
 def test_inconsistent_n_tok_quarantines(spark):
@@ -342,7 +338,7 @@ def test_rows_many1_prefix_and_failure_semantics():
         p += bytes([cc])                        # column_count lenenc
         p += bytes([0x01])                      # image bits1
         p += col_data
-        return make_event(0x1E, p)
+        return make_event(0x1E, p)[:-4]
 
     one_row = bytes([0x00]) + struct.pack("<i", 42)
     # complete row + 2-byte garbage tail: prefix kept, event clean

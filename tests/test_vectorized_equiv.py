@@ -22,8 +22,8 @@ def _udf_body(sink: str, tokens) -> list[dict]:
     schema, factory = parse.DECODERS[sink]
     _, fn = factory.args
     names = [f.name for f in schema.fields]
-    frame = parse._decode_frame(parse._arrow_tokens(tokens), names, fn)
-    return parse._frame_to_struct(frame, schema).to_pylist()
+    cols = parse._decode_frame(parse._arrow_tokens(tokens), names, fn)
+    return parse._frame_to_struct(cols, schema).to_pylist()
 
 
 def test_rotate_high_bit_position_wraps_identically():
@@ -31,8 +31,8 @@ def test_rotate_high_bit_position_wraps_identically():
     unsigned int >= 2^63 would fail the LongType Arrow conversion)."""
     pos = (0xFEDCBA9876543210).to_bytes(8, "little")
     body = pos + b"binlog.000042"
-    payload = _hdr(0x04, H + len(body) + 4) + body + b"\x00" * 4
-    scalar = parse.decode_rotate_py(payload)
+    event = _hdr(0x04, H + len(body) + 4) + body
+    scalar = parse.decode_rotate_py(event)
     assert scalar["position"] == 0xFEDCBA9876543210 - (1 << 64)
     assert scalar["next_binlog"] == "binlog.000042"
 
@@ -134,3 +134,17 @@ def test_null_tokens_cell_is_a_parse_error_row(spark):
                 .orderBy("i").select("d.*").collect())
         assert rows[0]["xid"] == 7 and rows[0]["parse_error"] is None, ddl
         assert rows[1]["xid"] is None and rows[1]["parse_error"], ddl
+
+
+def test_rows_shorter_than_the_checksum_read_no_neighbour():
+    """The checksum cut never reaches into the next row: a null cell (packed
+    to b"") or a 2-byte row is a parse_error row wherever it sits in the
+    batch, first included, and the XID beside it decodes alone."""
+    xid = _hdr(0x10, 31) + (7).to_bytes(8, "little") + b"\x00" * 4
+    for short in (None, b"ab"):
+        for batch in ([short, xid], [xid, short]):
+            rows = _udf_body("XID", pa.array(batch, pa.binary()))
+            assert [r["xid"] for r in rows] == [
+                None if b is short else 7 for b in batch], batch
+            assert [r["parse_error"] is None for r in rows] == [
+                b is not short for b in batch], batch

@@ -225,13 +225,6 @@ def rare_events() -> list[tuple[str, str, bytes]]:
     return rows
 
 
-def write_rare_events_parquet(path: Path) -> int:
-    """Commit-able deterministic rare-events table (contract schema)."""
-    t = rows_to_table(rare_events())
-    pq.write_table(t, path)
-    return t.num_rows
-
-
 def write_synth_parquet(path: Path, factor: int, seed: int = 42,
                         row_group_size: int = 25_000,
                         chunk_factor: int = 36_145) -> int:
